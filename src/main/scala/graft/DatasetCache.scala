@@ -100,7 +100,9 @@ object DatasetCache {
     * each paid 4 small metadata jobs the same way). The DATA path is
     * untouched — every query still scans the parquet files; only the
     * plan-time metadata is reused, the [[readTable]] discipline
-    * extended to artifact paths. At 100 TB this is what a table format
+    * extended to artifact paths. The frame's file index also skips whole
+    * files from their footer min/max ([[FooterStatsFileIndex]]), whose
+    * footers are read once per frame. At 100 TB this is what a table format
     * with manifest metadata does for you (guide §6: avoid re-listing).
     * Callers that MUTATE a directory in place (lake tables, lifecycle
     * segments with fold/compact) must keep their own readers. */
@@ -111,7 +113,21 @@ object DatasetCache {
     artifactFrames
       .computeIfAbsent(spark, _ =>
         new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]())
-      .computeIfAbsent(path, _ => spark.read.parquet(path))
+      .computeIfAbsent(path, _ => skippingFiles(spark.read.parquet(path)))
+  }
+
+  /** `df`'s plan with its Parquet relation rebound over a
+    * [[FooterStatsFileIndex]], so filtered reads skip whole files whose
+    * footer min/max cannot match, not only row groups inside opened files. */
+  private def skippingFiles(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    org.apache.spark.sql.graftbridge.GraftSqlBridge.ofRows(df.sparkSession,
+      df.queryExecution.analyzed.transform {
+        case r @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+          r.copy(relation = fs.copy(location = new FooterStatsFileIndex(fs.location, conf))(
+            fs.sparkSession))
+      })
   }
 
   /** Spread a CPU-heavy map stage when the input has fewer splits than

@@ -627,13 +627,20 @@ object LakeStatsPruning {
   /** Can a file with `stats` contain a row satisfying ALL bounds?
     * A column with no usable stats never prunes. */
   def mayMatch(bounds: Seq[Bound], stats: String): Boolean =
+    mayMatchRanges(bounds, LakeTable.statsRange(stats, _), LakeTable.statsRangeStr(stats, _))
+
+  /** [[mayMatch]] over any per-column (min, max) lookup — the lake log's
+    * stats string or a Parquet footer ([[graft.FooterStatsFileIndex]]). */
+  def mayMatchRanges(bounds: Seq[Bound],
+      numRange: String => Option[(BigDecimal, BigDecimal)],
+      strRange: String => Option[(Array[Byte], Array[Byte])]): Boolean =
     bounds.forall {
       case NumBound(column, lo, hi) =>
-        LakeTable.statsRange(stats, column).forall { case (mn, mx) =>
+        numRange(column).forall { case (mn, mx) =>
           hi.forall(mn <= _) && lo.forall(_ <= mx)
         }
       case StrBound(column, lo, hi) =>
-        LakeTable.statsRangeStr(stats, column).forall { case (mn, mx) =>
+        strRange(column).forall { case (mn, mx) =>
           hi.forall(h => LakeTable.unsignedCompare(mn, h) <= 0) &&
             lo.forall(l => LakeTable.unsignedCompare(l, mx) <= 0)
         }

@@ -144,7 +144,8 @@ object Sketches {
     * `(h>>2i)&1 + ((h>>(2i+1))&1)<<32` replace 60 compare-branch-sum
     * updates) while staying map-side combinable on a single shuffle.
     * Lane overflow is impossible: each lane counts ≤ one document's
-    * tokens, and a single text value cannot hold 2^32 tokens. The
+    * tokens, and a single text value cannot hold 2^31 tokens (the high
+    * lane's headroom below the signed Long's sign bit). The
     * majority vote is recovered exactly — the old `sum(±1) >= 0` is
     * `2·ones_b >= n` with n the doc's token count — so the assembled
     * sketch is bit-identical (oracle-pinned).

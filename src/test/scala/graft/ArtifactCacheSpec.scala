@@ -3,12 +3,14 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 
+import graft.pc.Layout
 import graft.text.TextOps
 
 /** r13 optimization-round internals: the artifact-frame cache
-  * ([[DatasetCache.readArtifact]]) and the posting build's range-write
-  * sizing guard. */
+  * ([[DatasetCache.readArtifact]]), its footer reads for file skipping,
+  * and the posting build's range-write sizing guard. */
 class ArtifactCacheSpec extends SparkSpec {
 
   test("readArtifact returns the cached resolved frame per (session, path)") {
@@ -30,6 +32,39 @@ class ArtifactCacheSpec extends SparkSpec {
     val other = DatasetCache.readArtifact(spark, s"$dir/u.parquet")
     assert(!(other eq a), "different path must resolve its own frame")
     assert(other.collect().map(_.getLong(0)).toSeq == Seq(3L))
+  }
+
+  /** A fresh three-file artifact: ids 0-9, 100-109 and 200-209. */
+  private def threeFiles(name: String): String = {
+    val s: SparkSession = spark
+    import s.implicits._
+    val path = Files.createTempDirectory(name).toString + "/t.parquet"
+    Seq(0L, 100L, 200L).foreach { lo =>
+      (lo until lo + 10L).toDF("id").coalesce(1).write.mode("append").parquet(path)
+    }
+    path
+  }
+
+  test("an unfiltered scan of an artifact reads no footers") {
+    val df = DatasetCache.readArtifact(spark, threeFiles("artifact_unfiltered"))
+    val before = Layout.footerReads.get
+    assert(df.count() == 30L)
+    assert(df.collect().length == 30)
+    // a filter with no min/max-comparable bound does not read them either
+    assert(df.filter(col("id") % 2L === 0L).count() == 15L)
+    assert(Layout.footerReads.get == before, "footers read without a usable bound")
+  }
+
+  test("repeated filtered queries on one artifact frame read footers exactly once") {
+    val path = threeFiles("artifact_filtered")
+    val before = Layout.footerReads.get
+    assert(DatasetCache.readArtifact(spark, path).filter(col("id") < 5L).count() == 5L)
+    assert(Layout.footerReads.get - before == 3L, "one footer per file on the first bound")
+    assert(DatasetCache.readArtifact(spark, path).filter(col("id") >= 150L).count() == 10L)
+    assert(DatasetCache.readArtifact(spark, path).filter(col("id") === 205L).count() == 1L)
+    assert(DatasetCache.readArtifact(spark, path)
+      .filter(col("id") > 100L && col("id") <= 102L).count() == 2L)
+    assert(Layout.footerReads.get - before == 3L, "footers re-read for a cached frame")
   }
 
   test("posting-index build tolerates an empty corpus (NULL token sum)") {

@@ -238,6 +238,9 @@ class SelectionOpsSpec extends SparkSpec {
       .getOrElse(fail("no partition-filtered scan of the IVF layout in the plan"))
     assert(layoutScan.partitionFilters.mkString.contains("dynamicpruning"),
       s"expected a dynamic pruning filter, got: ${layoutScan.partitionFilters}")
+    // the layout is an artifact read: DPP runs over the footer-skipping index
+    assert(layoutScan.relation.location.isInstanceOf[FooterStatsFileIndex],
+      s"layout scan over ${layoutScan.relation.location.getClass.getSimpleName}")
     val selected = layoutScan.metrics("numFiles").value
     assert(selected <= 2L,
       s"1-query batch with nprobe=2 read $selected of ${Ivf.K} cells")
