@@ -106,6 +106,11 @@ object Bench {
     * two calls in a fresh JVM). */
   val CanaryIoRefSec: Double = 0.14
 
+  /** Core count of a canonical run: `SPARK_GRAFT_CPUS` unset or equal
+    * to it writes `bench_last.json`; any other count writes
+    * `bench_last_c<N>.json`. */
+  val DefaultCpus = "32"
+
   /** One-time index/layout builds, isolated and individually timed by
     * [[main]] — but only those some selected query actually consumes (a
     * filtered experiment must not pay for unrelated builds). Exposed so
@@ -239,7 +244,7 @@ object Bench {
     // two samples bound drift DURING the run, not just at entry
     val canaryStart = canarySec()
     val canaryIoStart = canaryIoSec()
-    val spark = LocalSession("32")
+    val spark = LocalSession(DefaultCpus)
     // Warm-up: touch every input table once (schema + footer + codegen).
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }
     Seq("lineitem", "documents", "embeddings", "events",
@@ -374,8 +379,11 @@ object Bench {
       // r6, once via the default CWD path in r7 — both now guarded;
       // an EXPLICIT SPARK_GRAFT_BENCH_OUT is always honored)
       val canonical = filter.isEmpty && sfDir.startsWith("/root/testdata/")
+      // a run on another core count lands beside it, never over it
+      val outName = sys.env.get("SPARK_GRAFT_CPUS").filter(_ != DefaultCpus)
+        .fold("bench_last.json")(n => s"bench_last_c$n.json")
       val chosen = sys.env.get("SPARK_GRAFT_BENCH_OUT")
-        .orElse(if (canonical) Some("bench_last.json") else None)
+        .orElse(if (canonical) Some(outName) else None)
         .map(p => java.nio.file.Paths.get(p).toAbsolutePath.normalize)
       val fromClasses =
         if (!canonical) None
@@ -384,7 +392,7 @@ object Bench {
             Bench.getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
           while (p != null && !java.nio.file.Files.exists(p.resolve("build.sbt")))
             p = p.getParent
-          Option(p).map(_.resolve("bench_last.json").toAbsolutePath.normalize)
+          Option(p).map(_.resolve(outName).toAbsolutePath.normalize)
         } catch { case _: Throwable => None }
       (chosen.toSeq ++ fromClasses).distinct
     }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.FileTable
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, FloatType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** The ACID lake as a first-class Spark DSv2 table:
@@ -469,6 +469,9 @@ class LakeFileIndex(spark: SparkSession, root: String,
   /** Stats keyed the way the log stores files: `stage-sub/name`. */
   private val statsByRel: Map[String, String] = entries.toMap
 
+  private val floatColumns: Set[String] =
+    schema.fields.collect { case f if f.dataType == FloatType => f.name }.toSet
+
   private def relOf(p: Path): String = s"${p.getParent.getName}/${p.getName}"
 
   override def listFiles(partitionFilters: Seq[Expression],
@@ -487,7 +490,7 @@ class LakeFileIndex(spark: SparkSession, root: String,
     else base.map { pd =>
       pd.copy(files = pd.files.filter { f =>
         val rel = relOf(f.getPath)
-        LakeStatsPruning.mayMatch(bounds, statsByRel.getOrElse(rel, "")) &&
+        LakeStatsPruning.mayMatch(bounds, statsByRel.getOrElse(rel, ""), floatColumns) &&
           bloomTests.forall(_(rel))
       })
     }.filter(_.files.nonEmpty)
@@ -625,9 +628,18 @@ object LakeStatsPruning {
   }
 
   /** Can a file with `stats` contain a row satisfying ALL bounds?
-    * A column with no usable stats never prunes. */
-  def mayMatch(bounds: Seq[Bound], stats: String): Boolean =
-    mayMatchRanges(bounds, LakeTable.statsRange(stats, _), LakeTable.statsRangeStr(stats, _))
+    * A column with no usable stats never prunes. A FLOAT column's
+    * logged bound is read as the float it names, at that float's exact
+    * double (the value a float literal carries), so logs written with
+    * `Float.toString`'s short form ("0.3" for 0.3f, below the double
+    * 0.30000001192092896) and logs holding the exact double prune alike. */
+  def mayMatch(bounds: Seq[Bound], stats: String, floatColumns: Set[String]): Boolean =
+    mayMatchRanges(bounds,
+      c => LakeTable.statsRange(stats, c).map { case r @ (mn, mx) =>
+        def asFloat(b: BigDecimal) = BigDecimal(b.toFloat.toDouble)
+        if (floatColumns(c)) (asFloat(mn), asFloat(mx)) else r
+      },
+      LakeTable.statsRangeStr(stats, _))
 
   /** [[mayMatch]] over any per-column (min, max) lookup — the lake log's
     * stats string or a Parquet footer ([[graft.FooterStatsFileIndex]]). */

@@ -732,7 +732,9 @@ object LakeTable {
     * scan of freshly-staged data (which at 100 TB ingest would double
     * read I/O). Row-group stats fold across the file; a column whose
     * stats are missing, non-primitive (e.g. decimal), or NaN-tainted is
-    * skipped → the file is conservatively kept by [[pruneByStats]]. */
+    * skipped → the file is conservatively kept by [[pruneByStats]].
+    * Files open with the plain reader options of [[graft.pc.Layout]]
+    * (the Hadoop-conf-derived defaults cost ~11 ms per open). */
   private def footerStats(file: Path, columns: Seq[(String, StatKind)],
       conf: org.apache.hadoop.conf.Configuration): String = {
     import org.apache.hadoop.fs.{Path => HPath}
@@ -742,7 +744,7 @@ object LakeTable {
     import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new HPath(file.toString), conf))
+      HadoopInputFile.fromPath(new HPath(file.toString), conf), graft.pc.Layout.footerOptions)
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
       // reserved entry first: the file's EXACT row count (block counts)
@@ -779,9 +781,16 @@ object LakeTable {
                       case _: java.lang.Long | _: java.lang.Integer => true
                       case _ => false // binary/int96/etc: not our format
                     }
+                    // a FLOAT bound is recorded as its exact double, the
+                    // value a float literal prunes with
+                    // ([[LakeStatsPruning]]); `Float.toString`'s short
+                    // form (0.3f → "0.3") lies below a max of 0.3f
+                    def dec(x: Any): BigDecimal = x match {
+                      case f: java.lang.Float => BigDecimal(f.toDouble)
+                      case v => BigDecimal(v.toString)
+                    }
                     val (mn, mx) = (s.genericGetMin, s.genericGetMax)
-                    if (ok(mn) && ok(mx))
-                      Some(NumRange(BigDecimal(mn.toString), BigDecimal(mx.toString)))
+                    if (ok(mn) && ok(mx)) Some(NumRange(dec(mn), dec(mx)))
                     else None
                   case StatKind.TimeMicros =>
                     val unit = prim.getLogicalTypeAnnotation match {

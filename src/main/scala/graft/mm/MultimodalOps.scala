@@ -154,26 +154,15 @@ object MultimodalOps {
     * appear, identically in the oracle. Cluster-size relation is
     * near-dup-sized (unbounded on a duplicate-heavy corpus): no forced
     * broadcast, AQE picks. */
-  private val pairIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Materialized media near-dup pair index for `(dataset, tau)` — like
     * the text `pair_index`, candidate pairs are computed ONCE per
     * dataset and every consumer (clustering, reporting) reads the
     * relation; `mm_neardup` itself stays on the live computation as the
     * honest benchmark arm for pair generation. */
   private def mmPairIndex(spark: SparkSession, dir: String,
-      tauPpm: Long): DataFrame = {
-    val key = graft.DatasetCache.snapshotKey(spark, dir, "documents.parquet") +
-      s":mmpairs:$tauPpm"
-    val path = pairIndexCache.computeIfAbsent(key, { _ =>
-      val p = graft.DatasetCache.registerTempDir(
-        java.nio.file.Files.createTempDirectory("graft_mm_pair_idx").toString)
-      mmNearDupPairs(tauPpm)(spark, dir).write.mode("overwrite").parquet(p)
-      p
-    })
-    graft.DatasetCache.readArtifact(spark, path)
-  }
+      tauPpm: Long): DataFrame =
+    graft.DatasetCache.frame(spark, dir, s"mm_pair_idx#$tauPpm", "documents.parquet")(
+      mmNearDupPairs(tauPpm)(spark, dir))
 
   /** Force the one-time pair-index build (bench isolation hook). */
   def prebuildMmPairIndex(tauPpm: Long)(spark: SparkSession, dir: String): Unit = {

@@ -308,12 +308,13 @@ object Layout {
   /** Footers parsed by [[readFooter]] since JVM start. */
   private[graft] val footerReads = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Plain reader options, built once. Options derived from a Hadoop
+  /** Plain reader options, built once and shared with the lake's footer
+    * stats ([[graft.lake.LakeTable]]). Options derived from a Hadoop
     * `Configuration` (the default of `ParquetFileReader.open`) cost ~11 ms
     * per open; the footer read itself takes ~0.25 ms (8-file
     * micro-benchmark on a 4-core x86 box). No filter is set, so every row
     * group's metadata is returned. */
-  private val footerOptions = org.apache.parquet.ParquetReadOptions.builder().build()
+  private[graft] val footerOptions = org.apache.parquet.ParquetReadOptions.builder().build()
 
   /** The one footer parser: [[rowGroupStats]] and the artifact reader's
     * file skipping ([[graft.FooterStatsFileIndex]]) both go through it. */

@@ -594,20 +594,11 @@ object RelQueries {
 
   // ---- ACID-table-backed query (lake read path) -----------------------
 
-  private val lakeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** One-time ingest of lineitem into a [[graft.lake.LakeTable]]
     * (snapshot-keyed like every other derived layout). */
-  private def lakeLineitem(spark: SparkSession, dir: String): String = {
-    val key = graft.DatasetCache.snapshotKey(spark, dir, "lineitem.parquet")
-    lakeCache.computeIfAbsent(key, { _ =>
-      val path = graft.DatasetCache.registerTempDir(
-        java.nio.file.Files.createTempDirectory("graft_lake_lineitem").toString)
-      graft.lake.LakeTable.append(spark, path, t(spark, dir, "lineitem"))
-      path
-    })
-  }
+  private def lakeLineitem(spark: SparkSession, dir: String): String =
+    graft.DatasetCache.materialize(spark, dir, "lake_lineitem", "lineitem.parquet")(
+      graft.lake.LakeTable.append(spark, _, t(spark, dir, "lineitem")))
 
   /** Force the one-time lake ingest (bench isolation hook). */
   def prebuildLakeTable(spark: SparkSession, dir: String): Unit = {
@@ -615,26 +606,18 @@ object RelQueries {
     ()
   }
 
-  private val pointLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** One-time build of the Bloom point-lookup fixture: lineitem
     * ingested into a lake table HASH-distributed on `l_orderkey` (16
     * files, each spanning the whole key domain — the layout on which
     * min/max range stats structurally cannot prune a point predicate),
     * then Bloom-indexed on the key. Snapshot-keyed like every derived
     * layout. */
-  private def pointLake(spark: SparkSession, dir: String): String = {
-    val key = s"${graft.DatasetCache.snapshotKey(spark, dir, "lineitem.parquet")}#bloom"
-    pointLakeCache.computeIfAbsent(key, { _ =>
-      val path = graft.DatasetCache.registerTempDir(
-        java.nio.file.Files.createTempDirectory("graft_lake_point").toString)
+  private def pointLake(spark: SparkSession, dir: String): String =
+    graft.DatasetCache.materialize(spark, dir, "lake_point", "lineitem.parquet") { path =>
       graft.lake.LakeTable.append(spark, path,
         t(spark, dir, "lineitem").repartition(16, col("l_orderkey")))
       graft.lake.BloomIndex.build(spark, path, "l_orderkey")
-      path
-    })
-  }
+    }
 
   /** Force the one-time point-lake build (bench isolation hook). */
   def prebuildPointLake(spark: SparkSession, dir: String): Unit = {
@@ -688,9 +671,6 @@ object RelQueries {
 
   // ---- incrementally-maintained materialized view ---------------------
 
-  private val mvCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** One-time: lineitem ingested into a lake table in TWO appends with a
     * range-delete at the end, and a pricing materialized view
     * ([[graft.lake.MaterializedView]]) maintained ACROSS the history —
@@ -698,14 +678,11 @@ object RelQueries {
     * (append delta, then delete delta via the change feed). The view
     * state the query reads was therefore never fully recomputed after
     * creation; matching the flat-SQL oracle proves the delta-multiset
-    * maintenance exact end-to-end. */
-  private def mvPricing(spark: SparkSession, dir: String): String = {
-    val key = graft.DatasetCache.snapshotKey(spark, dir, "lineitem.parquet")
-    mvCache.computeIfAbsent(key, { _ =>
-      val src = graft.DatasetCache.registerTempDir(
-        java.nio.file.Files.createTempDirectory("graft_mv_lineitem").toString)
-      val view = graft.DatasetCache.registerTempDir(
-        java.nio.file.Files.createTempDirectory("graft_mv_pricing").toString)
+    * maintenance exact end-to-end. Source table and view are the
+    * artifact root's `src/` and `view/`; the view path is returned. */
+  private def mvPricing(spark: SparkSession, dir: String): String =
+    graft.DatasetCache.artifact(spark, dir, "mv_pricing", "lineitem.parquet") { root =>
+      val (src, view) = (s"$root/src", s"$root/view")
       val li = t(spark, dir, "lineitem").select(
         col("l_orderkey"), col("l_returnflag"), col("l_linestatus"),
         col("l_quantity").cast(LongType).as("qty"))
@@ -719,8 +696,7 @@ object RelQueries {
       graft.lake.LakeTable.deleteWhere(spark, src, "l_orderkey", 100, 500)
       graft.lake.MaterializedView.refresh(spark, view)
       view
-    })
-  }
+    }
 
   /** Force the one-time MV build (bench isolation hook). */
   def prebuildMv(spark: SparkSession, dir: String): Unit = {
@@ -766,14 +742,11 @@ object RelQueries {
     math.max(JoinBuckets.toLong,
       math.min(4096L, largestRows / JoinBucketRows)).toInt
 
-  private val bucketCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   /** One-time layout: orders + lineitem written as bucketed tables on the
     * order key (`bucketBy` + `sortBy`, pre-repartitioned to one file per
     * bucket so Spark can use both the bucket partitioning AND the
-    * per-bucket sort order at scan time). Snapshot-keyed like the other
-    * derived layouts; table data lands in a registered temp dir.
+    * per-bucket sort order at scan time). One artifact of both tables:
+    * their data lands under its root, one subdirectory per table.
     *
     * This is the persistent-layout analog of [[graft.pc.Layout]] for the
     * relational surface: pay one shuffle at write time, then every
@@ -781,31 +754,26 @@ object RelQueries {
     * the table — the only strategy that survives a 100 TB fact-fact join
     * where neither side can broadcast and a per-query shuffle would move
     * the whole table. */
-  def bucketedTables(spark: SparkSession, dir: String): (String, String) = {
-    val key = graft.DatasetCache.snapshotKey(spark, dir, "lineitem.parquet") +
-      "|" + graft.DatasetCache.snapshotKey(spark, dir, "orders.parquet")
-    bucketCache.computeIfAbsent(key, { _ =>
-      // table identifiers must be stable per snapshot but valid SQL names
-      val h = java.util.UUID.nameUUIDFromBytes(key.getBytes("UTF-8"))
+  def bucketedTables(spark: SparkSession, dir: String): (String, String) =
+    graft.DatasetCache.artifact(spark, dir, "bucketed", "lineitem.parquet",
+        "orders.parquet") { root =>
+      // table identifiers must be unique per artifact but valid SQL names
+      val h = java.util.UUID.nameUUIDFromBytes(root.getBytes("UTF-8"))
         .toString.replace("-", "").take(16)
       val ordName = s"graft_orders_b_$h"
       val liName = s"graft_lineitem_b_$h"
       // ONE adaptive count for both tables (equal counts are what makes
       // the join co-located), derived from the larger table
       val buckets = adaptiveBuckets(t(spark, dir, "lineitem").count())
-      def write(df: DataFrame, bucketCol: String, name: String): Unit = {
-        val path = graft.DatasetCache.registerTempDir(
-          java.nio.file.Files.createTempDirectory(s"graft_bucket_$name").toString)
+      def write(df: DataFrame, bucketCol: String, name: String): Unit =
         df.repartition(buckets, col(bucketCol))
           .write.mode("overwrite")
           .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-          .option("path", path).saveAsTable(name)
-      }
+          .option("path", s"$root/$name").saveAsTable(name)
       write(t(spark, dir, "orders"), "o_orderkey", ordName)
       write(t(spark, dir, "lineitem"), "l_orderkey", liName)
       (ordName, liName)
-    })
-  }
+    }
 
   /** Force the one-time bucketed-table build (bench isolation hook). */
   def prebuildBucketedTables(spark: SparkSession, dir: String): Unit = {

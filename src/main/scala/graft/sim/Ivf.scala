@@ -67,14 +67,10 @@ object Ivf {
   val derivedKSql: String =
     s"(SELECT greatest(2, (count(*) + ${TargetCell - 1}) // $TargetCell) FROM embeddings)"
 
-  private val nCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   /** Corpus vector count, cached per dataset snapshot (one metadata-only
     * parquet count — never a scan). */
   def corpusN(spark: SparkSession, dir: String): Long =
-    nCache.computeIfAbsent(
-      graft.DatasetCache.snapshotKey(spark, dir, "embeddings.parquet"),
+    graft.DatasetCache.artifact(spark, dir, "corpus_n", "embeddings.parquet")(
       _ => SimOps.embeddings(spark, dir).count())
 
   def derivedKCached(spark: SparkSession, dir: String): Int =
@@ -140,13 +136,10 @@ object Ivf {
       struct(distTo(cv).as("dist"), lit(cid).as("cid"))
     }: _*)
 
-  /** Training result cache keyed by input path: both IVF queries (assign
+  /** The trained codebook, a registry artifact: both IVF queries (assign
     * + search) share one trained codebook per dataset, like a production
     * pipeline that trains once and reuses. Centroids are K×dim longs —
     * driver-memory-trivial at any corpus size. */
-  private val trainCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Array[Long])]]()
-
   def trainCached(spark: SparkSession, dir: String): Seq[(Long, Array[Long])] =
     trainCachedK(spark, dir, K)
 
@@ -156,8 +149,7 @@ object Ivf {
     * corpus outgrows its cell budget. */
   def trainCachedK(spark: SparkSession, dir: String,
       k: Int): Seq[(Long, Array[Long])] =
-    trainCache.computeIfAbsent(
-      graft.DatasetCache.snapshotKey(spark, dir, "embeddings.parquet") + s"#k$k",
+    graft.DatasetCache.artifact(spark, dir, s"ivf_train#k$k", "embeddings.parquet")(
       _ => train(quantized(spark, dir), k = k))
 
   /** Lloyd iterations run at training time (the oracle CTE chain extends
@@ -259,21 +251,14 @@ object Ivf {
   /** Materialized inverted-list layout: the assignment written
     * `partitionBy(cid)` — one directory per cell. Built once per dataset
     * (like a production index build job). */
-  private val layoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def layoutPath(spark: SparkSession, dir: String): String =
-    layoutCache.computeIfAbsent(
-      graft.DatasetCache.snapshotKey(spark, dir, "embeddings.parquet"), { _ =>
-      val path = graft.DatasetCache.registerTempDir(
-        java.nio.file.Files.createTempDirectory("graft_ivf_layout").toString)
+    graft.DatasetCache.materialize(spark, dir, "ivf_layout", "embeddings.parquet") { path =>
       val q = quantized(spark, dir)
       val best = nearest(trainCached(spark, dir))
       Ivf2.layoutWrite(
         q.select(col("vec_id"), col("embedding"), best.getField("cid").as("cid")),
         "cid", SimOps.embeddings(spark, dir).count(), path)
-      path
-    })
+    }
 
   /** IVF search against the cid-partitioned layout: same results (and
     * oracle) as [[topK]], but the probe filter `cid IN (...)` prunes at

@@ -135,22 +135,11 @@ object Ivf2 {
 
   // ---- the two-level index as an on-disk artifact (build once) --------
 
-  private val trainedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val layoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Materialized level-2 codebook parquet (c1, scid, cv) — K1·K2 rows,
     * probed (never fully read) by [[topK2]]. */
   private def trained2Path(spark: SparkSession, dir: String): String =
-    trainedCache.computeIfAbsent(
-      graft.DatasetCache.snapshotKey(spark, dir, "embeddings.parquet"), { _ =>
-        val p = graft.DatasetCache.registerTempDir(
-          java.nio.file.Files.createTempDirectory("graft_ivf2_cents").toString)
-        level2Trained(coarseAssigned(spark, dir))
-          .write.mode("overwrite").parquet(p)
-        p
-      })
+    graft.DatasetCache.materialize(spark, dir, "ivf2_cents", "embeddings.parquet")(
+      level2Trained(coarseAssigned(spark, dir)).write.mode("overwrite").parquet(_))
 
   /** Materialized two-level inverted-list layout: (vec_id, embedding,
     * scid) partitioned by the COARSE cell — a probe opens only its
@@ -167,20 +156,16 @@ object Ivf2 {
     * listing/footer costs eventually swamp the dir-pruning the layout
     * exists for. */
   def layout2Path(spark: SparkSession, dir: String): String =
-    layoutCache.computeIfAbsent(
-      graft.DatasetCache.snapshotKey(spark, dir, "embeddings.parquet"), { _ =>
-        val p = graft.DatasetCache.registerTempDir(
-          java.nio.file.Files.createTempDirectory("graft_ivf2_layout").toString)
-        val cents = spark.read.parquet(trained2Path(spark, dir))
-          .select(col("c1"), col("scid"), col("cv"))
-        layoutWrite(
-          assignRow(coarseAssigned(spark, dir), cents)
-            .join(SimOps.embeddings(spark, dir), Seq("vec_id"))
-            .select(col("vec_id"), col("embedding"), col("scid"), col("dist"),
-              col("c1")),
-          "c1", SimOps.embeddings(spark, dir).count(), p, subCols = Seq("scid"))
-        p
-      })
+    graft.DatasetCache.materialize(spark, dir, "ivf2_layout", "embeddings.parquet") { p =>
+      val cents = spark.read.parquet(trained2Path(spark, dir))
+        .select(col("c1"), col("scid"), col("cv"))
+      layoutWrite(
+        assignRow(coarseAssigned(spark, dir), cents)
+          .join(SimOps.embeddings(spark, dir), Seq("vec_id"))
+          .select(col("vec_id"), col("embedding"), col("scid"), col("dist"),
+            col("c1")),
+        "c1", SimOps.embeddings(spark, dir).count(), p, subCols = Seq("scid"))
+    }
 
   /** ONE file-sizing discipline for every cell-partitioned sim layout
     * (two-level, flat IVF, SQ8/PQ codes, LSH buckets): range-partition
@@ -592,32 +577,26 @@ object Ivf2 {
   private def appendSplit(spark: SparkSession, dir: String): Long =
     Ivf.corpusN(spark, dir) / 2
 
-  private val appendCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(Long, Array[Long])], String)]()
-
   /** The FROZEN old-half index (coarse codebook + materialized level-2
     * codebook parquet) — trained once per dataset snapshot, like every
     * other index artifact here: the append path's whole point is that
     * training is periodic and offline, so the op itself must not pay
     * an O(n_old) Lloyd pass per invocation (it did at first — the r9
-    * self-review catch). Distinct cache key from [[trained2Path]]:
-    * these codebooks see only `vec_id < split`. */
+    * self-review catch). Distinct artifact from [[trained2Path]]:
+    * these codebooks see only `vec_id < split`. The coarse codebook is
+    * an in-memory value; the level-2 codebook is written at the root. */
   private def appendIndex(spark: SparkSession, dir: String)
       : (Seq[(Long, Array[Long])], String) =
-    appendCache.computeIfAbsent(
-      graft.DatasetCache.snapshotKey(spark, dir, "embeddings.parquet") + "#append",
-      { _ =>
-        val split = appendSplit(spark, dir)
-        val qOld = Ivf.quantized(spark, dir).filter(col("vec_id") < split)
-        val coarse = Ivf.train(qOld, k = k1(split))
-        val best = Ivf.nearest(coarse)
-        val aOld = qOld.select(col("vec_id"), col("qv"),
-          best.getField("cid").as("c1"))
-        val p = graft.DatasetCache.registerTempDir(
-          java.nio.file.Files.createTempDirectory("graft_ivf2_append").toString)
-        level2Trained(aOld).write.mode("overwrite").parquet(p)
-        (coarse, p)
-      })
+    graft.DatasetCache.artifact(spark, dir, "ivf2_append", "embeddings.parquet") { p =>
+      val split = appendSplit(spark, dir)
+      val qOld = Ivf.quantized(spark, dir).filter(col("vec_id") < split)
+      val coarse = Ivf.train(qOld, k = k1(split))
+      val best = Ivf.nearest(coarse)
+      val aOld = qOld.select(col("vec_id"), col("qv"),
+        best.getField("cid").as("c1"))
+      level2Trained(aOld).write.mode("overwrite").parquet(p)
+      (coarse, p)
+    }
 
   /** Bench isolation hook: force the one-time old-half training. */
   def prebuildAppendIndex(spark: SparkSession, dir: String): Unit = {
@@ -738,9 +717,6 @@ object Ivf2 {
 
   // ---- index lifecycle: delete without retraining ----------------------
 
-  private val dvCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The deletion-vector sidecar for [[layout2Path]]: the kill-list as
     * (vec_id, scid) parquet PARTITIONED BY THE COARSE CELL, mirroring
     * the layout's own directory structure so every read that prunes the
@@ -757,22 +733,17 @@ object Ivf2 {
     * once per dataset snapshot like every other index artifact
     * (`ivf2_delete_dv` in the bench prelude). */
   def deletionVectorPath(spark: SparkSession, dir: String): String =
-    dvCache.computeIfAbsent(
-      graft.DatasetCache.snapshotKey(spark, dir, "embeddings.parquet") + "#dv",
-      { _ =>
-        val p = graft.DatasetCache.registerTempDir(
-          java.nio.file.Files.createTempDirectory("graft_ivf2_dv").toString)
-        // the same kill-list semDedup2 reports as keep=false, off the
-        // shared droppedCells kernel over the shared leafFrame: the
-        // keep-flag left join and the per-vector sort exist for the
-        // dedup REPORT, not for the sidecar, which only needs
-        // (vec_id, scid, c1)
-        SemDedup.droppedCells(leafFrame(spark, dir), SemDedup.Tau,
-            Seq("c1", "scid"))
-          .select(col("v_id").as("vec_id"), col("scid"), col("c1"))
-          .write.mode("overwrite").partitionBy("c1").parquet(p)
-        p
-      })
+    graft.DatasetCache.materialize(spark, dir, "ivf2_dv", "embeddings.parquet") { p =>
+      // the same kill-list semDedup2 reports as keep=false, off the
+      // shared droppedCells kernel over the shared leafFrame: the
+      // keep-flag left join and the per-vector sort exist for the
+      // dedup REPORT, not for the sidecar, which only needs
+      // (vec_id, scid, c1)
+      SemDedup.droppedCells(leafFrame(spark, dir), SemDedup.Tau,
+          Seq("c1", "scid"))
+        .select(col("v_id").as("vec_id"), col("scid"), col("c1"))
+        .write.mode("overwrite").partitionBy("c1").parquet(p)
+    }
 
   /** Bench isolation hook: force the one-time kill-list derivation. */
   def prebuildDeletionVectors(spark: SparkSession, dir: String): Unit = {
@@ -963,9 +934,6 @@ object Ivf2 {
 
   // ---- composed lifecycle read: search base ∪ delta − DV ---------------
 
-  private val lifecycleCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String, String)]()
-
   /** A layout segment (base or delta) read back at the library row
     * shape (vec_id, embedding, scid, dist, c1:long). `spark.read`
     * resolves a streaming file sink's `_spark_metadata` commit log
@@ -979,8 +947,9 @@ object Ivf2 {
       .select("vec_id", "embedding", "scid", "dist", "c1")
 
   /** The three composed-lifecycle artifacts for a dataset snapshot —
-    * (basePath, deltaPath, dvPath), built once like every other index
-    * artifact (`ivf2_lifecycle` in the bench prelude):
+    * (basePath, deltaPath, dvPath), built once as ONE artifact whose
+    * root holds the three as subdirectories (`ivf2_lifecycle` in the
+    * bench prelude):
     *
     *  - BASE: the old corpus half assigned by its own trained codebooks
     *    ([[appendCodebooks]] — the frozen index), written as the
@@ -997,37 +966,33 @@ object Ivf2 {
     * appended without retraining, deduped without rewriting. */
   private def lifecyclePaths(spark: SparkSession, dir: String)
       : (String, String, String) =
-    lifecycleCache.computeIfAbsent(
-      graft.DatasetCache.snapshotKey(spark, dir, "embeddings.parquet") + "#lifecycle",
-      { _ =>
-        val (coarse, cents) = appendCodebooks(spark, dir)
-        val split = appendSplit(spark, dir)
-        def tmp(tag: String) = graft.DatasetCache.registerTempDir(
-          java.nio.file.Files.createTempDirectory(s"graft_ivf2_lc_$tag").toString)
-        val half = SimOps.embeddings(spark, dir).count() / 2
-        val base = tmp("base")
-        layoutWrite(assignFrozenFull(
-          SimOps.embeddings(spark, dir).filter(col("vec_id") < split),
-          coarse, cents), "c1", half, base, subCols = Seq("scid"))
-        val delta = tmp("delta")
-        layoutWrite(assignFrozenFull(
-          SimOps.embeddings(spark, dir).filter(col("vec_id") >= split),
-          coarse, cents), "c1", half, delta, subCols = Seq("scid"))
-        // the kill-list: SemDedup's dominance rule over the UNION
-        // assignment — vectors meet within their (c1, scid) leaf only,
-        // ordered by (dist-to-frozen-sub-centroid, vec_id); ONE shared
-        // kernel (SemDedup.droppedCells) so the lifecycle DV can never
-        // drift from the dedup pipeline that defines it. droppedCells
-        // keeps the dropped vector's leaf key, so the sidecar writes
-        // straight off the pair join — no second corpus-sized scan of
-        // `m` to recover (c1, scid) for ids the join already localized
-        val m = readSegment(spark, base).unionByName(readSegment(spark, delta))
-        val dv = tmp("dv")
-        SemDedup.droppedCells(m, SemDedup.Tau, Seq("c1", "scid"))
-          .select(col("v_id").as("vec_id"), col("scid"), col("c1"))
-          .write.mode("overwrite").partitionBy("c1").parquet(dv)
-        (base, delta, dv)
-      })
+    graft.DatasetCache.artifact(spark, dir, "ivf2_lifecycle", "embeddings.parquet") { root =>
+      val (coarse, cents) = appendCodebooks(spark, dir)
+      val split = appendSplit(spark, dir)
+      val half = SimOps.embeddings(spark, dir).count() / 2
+      val base = s"$root/base"
+      layoutWrite(assignFrozenFull(
+        SimOps.embeddings(spark, dir).filter(col("vec_id") < split),
+        coarse, cents), "c1", half, base, subCols = Seq("scid"))
+      val delta = s"$root/delta"
+      layoutWrite(assignFrozenFull(
+        SimOps.embeddings(spark, dir).filter(col("vec_id") >= split),
+        coarse, cents), "c1", half, delta, subCols = Seq("scid"))
+      // the kill-list: SemDedup's dominance rule over the UNION
+      // assignment — vectors meet within their (c1, scid) leaf only,
+      // ordered by (dist-to-frozen-sub-centroid, vec_id); ONE shared
+      // kernel (SemDedup.droppedCells) so the lifecycle DV can never
+      // drift from the dedup pipeline that defines it. droppedCells
+      // keeps the dropped vector's leaf key, so the sidecar writes
+      // straight off the pair join — no second corpus-sized scan of
+      // `m` to recover (c1, scid) for ids the join already localized
+      val m = readSegment(spark, base).unionByName(readSegment(spark, delta))
+      val dv = s"$root/dv"
+      SemDedup.droppedCells(m, SemDedup.Tau, Seq("c1", "scid"))
+        .select(col("v_id").as("vec_id"), col("scid"), col("c1"))
+        .write.mode("overwrite").partitionBy("c1").parquet(dv)
+      (base, delta, dv)
+    }
 
   /** Bench isolation hook: force the one-time lifecycle artifacts. */
   def prebuildLifecycle(spark: SparkSession, dir: String): Unit = {

@@ -85,12 +85,8 @@ object Pq {
     }
   }
 
-  private val trainCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[Seq[(Long, Array[Long])]]]()
-
   def trainCached(spark: SparkSession, dir: String): Seq[Seq[(Long, Array[Long])]] =
-    trainCache.computeIfAbsent(
-      graft.DatasetCache.snapshotKey(spark, dir, "embeddings.parquet"),
+    graft.DatasetCache.artifact(spark, dir, "pq_train", "embeddings.parquet")(
       _ => train(Ivf.quantized(spark, dir)))
 
   /** Force the one-time codebook training (bench isolation hook). */
@@ -120,22 +116,15 @@ object Pq {
     * per vector instead of re-encoding 256 B embeddings per query, and
     * the `cid` partitioning file-prunes the IVF-PQ probe exactly like
     * the inverted-list layout. */
-  private val codesLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def codesLayoutPath(spark: SparkSession, dir: String): String =
-    codesLayoutCache.computeIfAbsent(
-      graft.DatasetCache.snapshotKey(spark, dir, "embeddings.parquet"), { _ =>
-      val path = graft.DatasetCache.registerTempDir(
-        java.nio.file.Files.createTempDirectory("graft_pq_codes").toString)
+    graft.DatasetCache.materialize(spark, dir, "pq_codes", "embeddings.parquet") { path =>
       val withCell = encoded(spark, dir).withColumn("cid",
         Ivf.nearest(Ivf.trainCached(spark, dir)).getField("cid"))
       Ivf2.layoutWrite(
         withCell.select(
           col("vec_id") +: (0 until M).map(m => col(s"code_$m")) :+ col("cid"): _*),
         "cid", SimOps.embeddings(spark, dir).count(), path)
-      path
-    })
+    }
 
   /** Force the one-time code-index build (bench isolation hook). */
   def prebuildCodesLayout(spark: SparkSession, dir: String): Unit = {

@@ -404,28 +404,22 @@ object SimOps {
 
   // ---- materialized ANN layout: partition pruning on the bucket -------
 
-  private val annLayoutCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Embeddings written `partitionBy(bucket)` — the at-scale ANN layout:
-    * a query reads ONLY its bucket's directory (partition pruning), the
-    * file-source analog of a vector index's inverted lists. */
   /** Force the one-time bucket-layout build (bench isolation hook). */
   def prebuildAnnLayout(spark: SparkSession, dir: String): Unit = {
     annLayoutPath(spark, dir)
     ()
   }
 
+  /** Embeddings written `partitionBy(bucket)` — the at-scale ANN layout:
+    * a query reads ONLY its bucket's directory (partition pruning), the
+    * file-source analog of a vector index's inverted lists. */
   private[graft] def annLayoutPath(spark: SparkSession, dir: String): String =
-    annLayoutCache.computeIfAbsent(
-      graft.DatasetCache.snapshotKey(spark, dir, "embeddings.parquet"), { _ =>
-      val path = graft.DatasetCache.registerTempDir(
-        java.nio.file.Files.createTempDirectory("graft_ann_layout").toString)
+    graft.DatasetCache.materialize(spark, dir, "ann_layout", "embeddings.parquet") { path =>
       Ivf2.layoutWrite(
         embeddings(spark, dir).select(col("vec_id"), col("embedding"),
           bucketCol(col("embedding")).as("bucket")),
         "bucket", embeddings(spark, dir).count(), path)
-      path
-    })
+    }
 
   /** LSH top-k against the bucket-partitioned layout: same results as
     * [[lshTopK]] (same oracle), but the scan is partition-pruned to the

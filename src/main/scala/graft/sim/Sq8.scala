@@ -44,12 +44,8 @@ object Sq8 {
     (mns, rngs, ws)
   }
 
-  private val trainCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Long], Array[Long], Array[Long])]()
-
   def trainCached(spark: SparkSession, dir: String): (Array[Long], Array[Long], Array[Long]) =
-    trainCache.computeIfAbsent(
-      graft.DatasetCache.snapshotKey(spark, dir, "embeddings.parquet"),
+    graft.DatasetCache.artifact(spark, dir, "sq8_train", "embeddings.parquet")(
       _ => train(Ivf.quantized(spark, dir)))
 
   /** Force the one-time range training (bench isolation hook). */
@@ -279,27 +275,20 @@ object Sq8 {
 
   // ---- IVF-SQ8: cells route → bytes rank → floats re-score ------------
 
-  private val layoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** cid-partitioned SQ8 code index — what Faiss persists as
     * `IVF<K>,SQ8`, its most common on-disk index: the inverted-list
     * layout holds 64 B codes per vector, so a probe reads
     * ~nprobe/K of the corpus at 1/4 float width, file-pruned by the
     * partition column. Built once per dataset like [[Pq.codesLayoutPath]]. */
   def codesLayoutPath(spark: SparkSession, dir: String): String =
-    layoutCache.computeIfAbsent(
-      graft.DatasetCache.snapshotKey(spark, dir, "embeddings.parquet"), { _ =>
-        val path = graft.DatasetCache.registerTempDir(
-          java.nio.file.Files.createTempDirectory("graft_sq8_codes").toString)
-        val (mns, rngs, _) = trainCached(spark, dir)
-        Ivf2.layoutWrite(
-          Ivf.quantized(spark, dir).select(col("vec_id"),
-            cdExpr(mns, rngs).as("cd"),
-            Ivf.nearest(Ivf.trainCached(spark, dir)).getField("cid").as("cid")),
-          "cid", SimOps.embeddings(spark, dir).count(), path)
-        path
-      })
+    graft.DatasetCache.materialize(spark, dir, "sq8_codes", "embeddings.parquet") { path =>
+      val (mns, rngs, _) = trainCached(spark, dir)
+      Ivf2.layoutWrite(
+        Ivf.quantized(spark, dir).select(col("vec_id"),
+          cdExpr(mns, rngs).as("cd"),
+          Ivf.nearest(Ivf.trainCached(spark, dir)).getField("cid").as("cid")),
+        "cid", SimOps.embeddings(spark, dir).count(), path)
+    }
 
   /** Force the one-time code-index build (bench isolation hook). */
   def prebuildCodesLayout(spark: SparkSession, dir: String): Unit = {

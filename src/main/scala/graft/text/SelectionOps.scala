@@ -53,12 +53,6 @@ object SelectionOps {
     TextOps.docs(spark, dir)
       .select(col("doc_id"), col("lang"), explode(pairBuckets).as("b"))
 
-  /** Trained DSIR weight table cache — 256 longs per dataset snapshot,
-    * the same codebook-sized driver collect as the IVF/PQ training
-    * results. */
-  private val dsirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
-
   /** Force the one-time DSIR model fit + score materialization (bench
     * isolation hook). */
   def prebuildDsirModel(spark: SparkSession, dir: String): Unit = {
@@ -93,10 +87,12 @@ object SelectionOps {
     * int64 as long as n_pairs·(R/T) < 9·10^12, i.e. for any document
     * under ~10^6 bigrams unless the target slice is below ~10^-7 of
     * the corpus. A deployment weighting toward a slice that thin
-    * should shrink the 10^6 scale factor accordingly. */
-  def dsirWeights(spark: SparkSession, dir: String): Array[Long] = {
-    val key = graft.DatasetCache.snapshotKey(spark, dir, "documents.parquet")
-    dsirCache.computeIfAbsent(key, { _ =>
+    * should shrink the 10^6 scale factor accordingly.
+    *
+    * The trained table (256 longs, the same codebook-sized driver collect
+    * as the IVF/PQ training results) is a registry artifact. */
+  def dsirWeights(spark: SparkSession, dir: String): Array[Long] =
+    graft.DatasetCache.artifact(spark, dir, "dsir_weights", "documents.parquet") { _ =>
       val rows = pairRel(spark, dir)
         .groupBy("b")
         .agg(count(lit(1)).as("r"),
@@ -115,8 +111,7 @@ object SelectionOps {
         w(b) = ((BigInt(t + 1) * totR * 1000000) / (BigInt(r + 1) * totT)).toLong
       }
       w
-    })
-  }
+    }
 
   /** The live scoring plan: the 256-long model is a LITERAL, so scoring
     * is a map-only pass (explode + element_at + one keyed aggregation on
@@ -133,23 +128,13 @@ object SelectionOps {
         expr("s div n_pairs").as("dsir_ppm"))
   }
 
-  private val dsirScoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Materialized per-document DSIR scores (doc_id, n_pairs, dsir_ppm) —
     * quality/importance scores are computed ONCE and every consumer
     * (score reports, budget selection, filtering) reads the scored
     * relation; the same path-keyed materialization as the LM scores. */
-  private def dsirScores(spark: SparkSession, dir: String): DataFrame = {
-    val key = graft.DatasetCache.snapshotKey(spark, dir, "documents.parquet")
-    val path = dsirScoreCache.computeIfAbsent(key, { _ =>
-      val p = graft.DatasetCache.registerTempDir(
-        java.nio.file.Files.createTempDirectory("graft_dsir_scores").toString)
-      dsirScoresRaw(spark, dir).write.mode("overwrite").parquet(p)
-      p
-    })
-    graft.DatasetCache.readArtifact(spark, path)
-  }
+  private def dsirScores(spark: SparkSession, dir: String): DataFrame =
+    graft.DatasetCache.frame(spark, dir, "dsir_scores", "documents.parquet")(
+      dsirScoresRaw(spark, dir))
 
   /** Per-document DSIR importance score: the mean bucket importance
     * ratio over the document's bigrams, in ppm. */
@@ -226,9 +211,6 @@ object SelectionOps {
     * bucketing: a single weight VALUE carrying a large mass stays in
     * one bucket (the df-cap hot-key situation); quantile cuts bound
     * every multi-value bucket at ~1/buckets of a language. */
-  private val cutsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
-
   def docSelectBudget(budget: Long, buckets: Int = 64)(
       spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -240,11 +222,12 @@ object SelectionOps {
     // like every trained model here — cached per dataset snapshot so
     // repeated invocations don't re-run the quantile job);
     // g = #cuts <= weight is monotone
-    val cuts = cutsCache.computeIfAbsent(
-      graft.DatasetCache.snapshotKey(spark, dir, "documents.parquet") + s":$buckets",
-      _ => sc0.stat.approxQuantile("dsir_ppm",
+    val cuts = graft.DatasetCache.artifact(spark, dir, s"dsir_cuts#$buckets",
+        "documents.parquet") { _ =>
+      sc0.stat.approxQuantile("dsir_ppm",
         (1 until buckets).map(_.toDouble / buckets).toArray, 0.01)
-        .map(_.toLong).distinct.sorted)
+        .map(_.toLong).distinct.sorted
+    }
     // native count_le kernel: the literal-array filter HOF is
     // CodegenFallback (r9 standing-audit find); same INT bucket index
     val sc = sc0.withColumn("g",

@@ -452,22 +452,6 @@ object TextOps {
 
   // ---- duplicate-span coverage (exact-substring dedup signal) ----------
 
-  /** Per-document duplicated-span coverage — the exact-substring dedup
-    * signal of Lee et al. ("Deduplicating Training Data Makes Language
-    * Models Better"), at 8-token granularity: an 8-gram occurring more
-    * than once ANYWHERE in the corpus marks its 8 token positions as
-    * duplicated; a document's coverage is the fraction of its tokens
-    * inside such spans (ppm, integer-exact). High coverage → the doc is
-    * mostly boilerplate/copy even when no single whole-doc near-dup
-    * exists — the case shingle-Jaccard misses.
-    *
-    * Scale design: one groupBy on a 60-bit gram hash (map-combinable
-    * count), a semi-join back on the same 8-byte key, and a bounded ×8
-    * explode of ONLY the duplicated grams before the per-doc distinct
-    * count — no all-pairs joins, no windows. */
-  private val spanIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Force the one-time span-coverage materialization (bench isolation
     * hook). */
   def prebuildSpanIndex(spark: SparkSession, dir: String): Unit = {
@@ -481,17 +465,23 @@ object TextOps {
     * like the LM scores it is computed once per dataset and every
     * consumer reads the covered relation; same path-keyed
     * materialization as [[shingleIndex]]. */
-  private def spanCoverage(spark: SparkSession, dir: String): DataFrame = {
-    val key = graft.DatasetCache.snapshotKey(spark, dir, "documents.parquet")
-    val path = spanIndexCache.computeIfAbsent(key, { _ =>
-      val p = graft.DatasetCache.registerTempDir(
-        java.nio.file.Files.createTempDirectory("graft_span_idx").toString)
-      spanCoverageCompute(spark, dir).write.mode("overwrite").parquet(p)
-      p
-    })
-    graft.DatasetCache.readArtifact(spark, path)
-  }
+  private def spanCoverage(spark: SparkSession, dir: String): DataFrame =
+    graft.DatasetCache.frame(spark, dir, "span_idx", "documents.parquet")(
+      spanCoverageCompute(spark, dir))
 
+  /** Per-document duplicated-span coverage — the exact-substring dedup
+    * signal of Lee et al. ("Deduplicating Training Data Makes Language
+    * Models Better"), at 8-token granularity: an 8-gram occurring more
+    * than once ANYWHERE in the corpus marks its 8 token positions as
+    * duplicated; a document's coverage is the fraction of its tokens
+    * inside such spans (ppm, integer-exact). High coverage → the doc is
+    * mostly boilerplate/copy even when no single whole-doc near-dup
+    * exists — the case shingle-Jaccard misses.
+    *
+    * Scale design: one groupBy on a 60-bit gram hash (map-combinable
+    * count), a semi-join back on the same 8-byte key, and a bounded ×8
+    * explode of ONLY the duplicated grams before the per-doc distinct
+    * count — no all-pairs joins, no windows. */
   def docDupSpanCoverage(spark: SparkSession, dir: String): DataFrame =
     spanCoverage(spark, dir).orderBy("doc_id")
 
@@ -712,16 +702,6 @@ object TextOps {
           i => concat_ws(" ", slice(w, i + lit(1), lit(3)))))).as("s"))
   }
 
-  /** Materialized shingle index: (doc_id, h28, h60) — both hash widths
-    * via the native md5-prefix kernel — written to parquet once per
-    * dataset and shared by every shingle consumer (jaccard pairs, dup
-    * clusters, minhash signatures/LSH, cross-modal dedup). The build-once
-    * pattern of the ANN/IVF layouts applied to the text-dedup index: at
-    * 100 TB you explode + hash the corpus once, not once per query.
-    * Session-safe because the cache stores a PATH, not a DataFrame. */
-  private val shingleIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Force the one-time shingle-index build (bench isolation hook);
     * includes the derived hot-key list and capped relation at the
     * default cap. */
@@ -731,12 +711,15 @@ object TextOps {
     ()
   }
 
-  private[text] def shingleIndex(spark: SparkSession, dir: String): DataFrame = {
-    // key on (path, input snapshot) — a rewritten dataset re-indexes
-    val key = graft.DatasetCache.snapshotKey(spark, dir, "documents.parquet")
-    val path = shingleIndexCache.computeIfAbsent(key, { _ =>
-      val p = graft.DatasetCache.registerTempDir(
-        java.nio.file.Files.createTempDirectory("graft_shingle_idx").toString)
+  /** Materialized shingle index: (doc_id, h28, h60) — both hash widths
+    * via the native md5-prefix kernel — written to parquet once per
+    * dataset and shared by every shingle consumer (jaccard pairs, dup
+    * clusters, minhash signatures/LSH, cross-modal dedup). The build-once
+    * pattern of the ANN/IVF layouts applied to the text-dedup index: at
+    * 100 TB you explode + hash the corpus once, not once per query.
+    * Session-safe because the registry stores a PATH, not a DataFrame. */
+  private[text] def shingleIndex(spark: SparkSession, dir: String): DataFrame =
+    graft.DatasetCache.frame(spark, dir, "shingle_idx", "documents.parquet") {
       // ONE digest per shingle: h28 (hex chars 1-7 = bits [0,28)) is
       // the top 28 bits of h60 (bits [0,60)), so derive it by shift
       // instead of a second md5_prefix over the same string. The hash
@@ -752,11 +735,7 @@ object TextOps {
           explode(call_function("kgram_hashes", w, lit(3))).as("h60"))
         .select(col("doc_id"), shiftright(col("h60"), 32).as("h28"),
           col("h60"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    graft.DatasetCache.readArtifact(spark, path)
-  }
+    }
 
   private[text] val shinglesSql: String =
     """SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(ws)-1),
@@ -790,9 +769,6 @@ object TextOps {
   private[text] def dfCapped(rows: DataFrame, keys: Seq[String], dfCap: Int): DataFrame =
     rows.join(hotKeys(rows, keys, dfCap), keys, "left_anti")
 
-  private val hotIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Materialized over-cap shingle keys for `(dataset, dfCap)` — small
     * in practice (Zipfian shingle dfs; worst case rows/cap), but
     * deriving it is a FULL-index
@@ -800,22 +776,9 @@ object TextOps {
     * k times would otherwise pay that aggregation k times (the
     * `doc_neardup_lookup` profile: 3 subtree occurrences → 3 corpus
     * aggregations). Snapshot-keyed like every other index artifact. */
-  private def hotShingleKeys(spark: SparkSession, dir: String, dfCap: Int): DataFrame = {
-    val key =
-      s"${graft.DatasetCache.snapshotKey(spark, dir, "documents.parquet")}#hot$dfCap"
-    val path = hotIndexCache.computeIfAbsent(key, { _ =>
-      val p = graft.DatasetCache.registerTempDir(
-        java.nio.file.Files.createTempDirectory("graft_hot_idx").toString)
-      hotKeys(shingleIndex(spark, dir).select(col("h60").as("h")),
-          Seq("h"), dfCap)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    graft.DatasetCache.readArtifact(spark, path)
-  }
-
-  private val cappedIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private def hotShingleKeys(spark: SparkSession, dir: String, dfCap: Int): DataFrame =
+    graft.DatasetCache.frame(spark, dir, s"hot_idx#$dfCap", "documents.parquet")(
+      hotKeys(shingleIndex(spark, dir).select(col("h60").as("h")), Seq("h"), dfCap))
 
   /** Frequency-capped shingle relation, MATERIALIZED per
     * `(dataset, dfCap)` — plans that mention it k times (the pair join
@@ -836,12 +799,8 @@ object TextOps {
   private def cappedCounts(spark: SparkSession, dir: String, dfCap: Int): DataFrame =
     graft.DatasetCache.readArtifact(spark, s"${cappedIndexPath(spark, dir, dfCap)}/n")
 
-  private def cappedIndexPath(spark: SparkSession, dir: String, dfCap: Int): String = {
-    val key =
-      s"${graft.DatasetCache.snapshotKey(spark, dir, "documents.parquet")}#capped$dfCap"
-    cappedIndexCache.computeIfAbsent(key, { _ =>
-      val p = graft.DatasetCache.registerTempDir(
-        java.nio.file.Files.createTempDirectory("graft_capped_idx").toString)
+  private def cappedIndexPath(spark: SparkSession, dir: String, dfCap: Int): String =
+    graft.DatasetCache.materialize(spark, dir, s"capped_idx#$dfCap", "documents.parquet") { p =>
       shingleIndex(spark, dir).select(col("doc_id"), col("h60").as("h"))
         .join(hotShingleKeys(spark, dir, dfCap), Seq("h"), "left_anti")
         .write.mode("overwrite").parquet(s"$p/sh")
@@ -850,9 +809,7 @@ object TextOps {
       spark.read.parquet(s"$p/sh")
         .groupBy("doc_id").agg(count(lit(1)).as("n"))
         .write.mode("overwrite").parquet(s"$p/n")
-      p
-    })
-  }
+    }
 
   /** Near-duplicate pairs with shingle-set Jaccard >= tau. The join is an
     * equi-join on the shingle (shuffle on shingle hash, combiner-friendly
@@ -1038,9 +995,6 @@ object TextOps {
     * warmed cache key can never silently diverge from the timed query. */
   val DupClusterTau = 0.8
 
-  private val pairIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Force the one-time pair-index build (bench isolation hook). */
   def prebuildPairIndex(tau: Double)(spark: SparkSession, dir: String): Unit = {
     pairIndex(spark, dir, tau)
@@ -1052,17 +1006,9 @@ object TextOps {
     * reused across clustering / keep-one / reporting), mirroring the
     * shingle index. Deterministic, so reading it back is
     * oracle-equivalent to recomputing [[ngramJaccardPairs]]. */
-  private def pairIndex(spark: SparkSession, dir: String, tau: Double): DataFrame = {
-    val key =
-      s"${graft.DatasetCache.snapshotKey(spark, dir, "documents.parquet")}#$tau/$ShingleDfCap"
-    val path = pairIndexCache.computeIfAbsent(key, { _ =>
-      val p = graft.DatasetCache.registerTempDir(
-        java.nio.file.Files.createTempDirectory("graft_pair_idx").toString)
-      ngramJaccardPairs(tau)(spark, dir).write.mode("overwrite").parquet(p)
-      p
-    })
-    graft.DatasetCache.readArtifact(spark, path)
-  }
+  private def pairIndex(spark: SparkSession, dir: String, tau: Double): DataFrame =
+    graft.DatasetCache.frame(spark, dir, s"pair_idx#$tau/$ShingleDfCap", "documents.parquet")(
+      ngramJaccardPairs(tau)(spark, dir))
 
   /** Near-dup retrieval for ONE query document — the dedup-at-ingest /
     * serving path: the query doc's shingle set (bounded by a single
@@ -1260,37 +1206,15 @@ object TextOps {
        | SELECT doc_id, cluster, CAST(count(*) OVER (PARTITION BY cluster) AS BIGINT) AS cluster_size
        | FROM lab ORDER BY doc_id""".stripMargin.replace("\n", " ")
 
-  /** End-to-end fuzzy-dedup corpus filter — the step a training pipeline
-    * actually ships: resolve near-dup clusters, keep ONE representative
-    * per cluster (the smallest doc_id, the same order-free fixpoint the
-    * cluster labels converge to), drop the rest. The "loser" list
-    * (cluster members that are not their cluster's minimum) holds only
-    * near-dups — usually tiny relative to the corpus, so AQE broadcasts
-    * it and the corpus side streams through a map-only LEFT ANTI join;
-    * on a heavily-duplicated corpus, where the list is itself
-    * corpus-sized, the unhinted join degrades to a keyed shuffle
-    * instead of OOMing (a forced broadcast hint could not). */
-  private val labelIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Materialized converged cluster labels for `(dataset, tau)` — the
     * next pipeline artifact after [[pairIndex]]: the iterative CC runs
     * ONCE per dataset, and every downstream consumer (keep-one filter,
     * reporting) reads the label relation instead of re-iterating.
     * `doc_dup_clusters` stays on the live computation by design — it is
     * the honest benchmark arm for the clustering itself. */
-  private def labelIndex(spark: SparkSession, dir: String, tau: Double): DataFrame = {
-    val key =
-      s"${graft.DatasetCache.snapshotKey(spark, dir, "documents.parquet")}#lbl$tau/$ShingleDfCap"
-    val path = labelIndexCache.computeIfAbsent(key, { _ =>
-      val p = graft.DatasetCache.registerTempDir(
-        java.nio.file.Files.createTempDirectory("graft_label_idx").toString)
-      val edges = pairIndex(spark, dir, tau).select(col("d1"), col("d2"))
-      connectedComponents(edges)._1.write.mode("overwrite").parquet(p)
-      p
-    })
-    graft.DatasetCache.readArtifact(spark, path)
-  }
+  private def labelIndex(spark: SparkSession, dir: String, tau: Double): DataFrame =
+    graft.DatasetCache.frame(spark, dir, s"label_idx#$tau/$ShingleDfCap", "documents.parquet")(
+      connectedComponents(pairIndex(spark, dir, tau).select(col("d1"), col("d2")))._1)
 
   /** Force the one-time label-index build (bench isolation hook). */
   def prebuildLabelIndex(tau: Double)(spark: SparkSession, dir: String): Unit = {
@@ -1344,6 +1268,16 @@ object TextOps {
        | count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS n_chars_total
        | FROM bk GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin.replace("\n", " ")
 
+  /** End-to-end fuzzy-dedup corpus filter — the step a training pipeline
+    * actually ships: resolve near-dup clusters, keep ONE representative
+    * per cluster (the smallest doc_id, the same order-free fixpoint the
+    * cluster labels converge to), drop the rest. The "loser" list
+    * (cluster members that are not their cluster's minimum) holds only
+    * near-dups — usually tiny relative to the corpus, so AQE broadcasts
+    * it and the corpus side streams through a map-only LEFT ANTI join;
+    * on a heavily-duplicated corpus, where the list is itself
+    * corpus-sized, the unhinted join degrades to a keyed shuffle
+    * instead of OOMing (a forced broadcast hint could not). */
   def dedupKeepOne(tau: Double)(spark: SparkSession, dir: String): DataFrame = {
     val losers = labelIndex(spark, dir, tau)
       .filter(col("doc_id") =!= col("lbl")).select(col("doc_id"))
@@ -1405,9 +1339,6 @@ object TextOps {
         "internal")
   }
 
-  private val bloomCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
-
   /** Bloom-prescreened decontamination — the same result as
     * [[contamination]], via the plan a 100 TB pipeline actually runs:
     * the eval set's shingles aggregate into ONE Bloom filter (a scalar
@@ -1438,14 +1369,13 @@ object TextOps {
     // size the filter to the eval set (one tiny cached count): the
     // no-arg default assumes 1M items and serializes a ~1 MB literal
     // into every task — 40x the needed bits for a benchmark eval set
-    val bf = bloomCache.computeIfAbsent(
-      graft.DatasetCache.snapshotKey(spark, dir, "documents.parquet") + s":$evalDocs",
-      { _ =>
-        val n = math.max(evalSh.count(), 1L)
-        evalSh
-          .agg(call_function("graft_bloom_agg", xxhash64(col("h")), lit(n)).as("bf"))
-          .head.getAs[Array[Byte]]("bf")
-      })
+    val bf = graft.DatasetCache.artifact(spark, dir, s"eval_bloom#$evalDocs",
+        "documents.parquet") { _ =>
+      val n = math.max(evalSh.count(), 1L)
+      evalSh
+        .agg(call_function("graft_bloom_agg", xxhash64(col("h")), lit(n)).as("bf"))
+        .head.getAs[Array[Byte]]("bf")
+    }
     sh.filter(col("doc_id") >= evalDocs)
       .filter(call_function("graft_might_contain", lit(bf), xxhash64(col("h"))))
       .join(broadcast(evalSh), "h") // exact verify on candidates only
@@ -1657,9 +1587,6 @@ object TextOps {
     java.lang.Long.parseLong(hex, 16) % TermBuckets
   }
 
-  private val postingCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Materialized inverted index: `postings/` holds (term, doc_id, tf,
     * dl) partitioned by the term's hash bucket — the distributed
     * posting-list layout a lexical search system keeps on disk —
@@ -1667,42 +1594,38 @@ object TextOps {
     * touch the corpus. Built once per dataset (one explode + one
     * map-side-combined aggregation), like every index build here. */
   def postingIndexPath(spark: SparkSession, dir: String): String =
-    postingCache.computeIfAbsent(
-      graft.DatasetCache.snapshotKey(spark, dir, "documents.parquet"), { _ =>
-        val path = graft.DatasetCache.registerTempDir(
-          java.nio.file.Files.createTempDirectory("graft_postings").toString)
-        val d = docs(spark, dir)
-        d.agg(count(lit(1)).cast(LongType).as("n"),
-            sum(size(words).cast(LongType)).as("t"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
-        // spread before the tokenize+explode+aggregate chain: the build's
-        // heavy map side otherwise runs as ONE task on the single-file
-        // canonical corpus (profiled: 2.0 s single-task stage); identity
-        // at real scale — the [[shingleIndex]] discipline
-        val post = graft.DatasetCache.spread(d.select(col("doc_id"), col("text")))
-          .select(col("doc_id"), size(words).cast(LongType).as("dl"),
-            explode(words).as("term"))
-          .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
-          .withColumn("tb", termBucketCol(col("term")))
-        // layoutWrite range discipline on (tb, term) — r13, the r12
-        // flagged-deferred fanout: writing straight off the aggregation's
-        // hash partitioning lands every reduce task in up to all 64
-        // term-bucket dirs — (tasks × buckets) files, linear in the
-        // corpus at scale (the NOTES_r12 §5 trap in a text index). Range
-        // partitioning keeps each bucket's terms contiguous, so file
-        // count stays ≈ max(buckets, rows/budget), and the in-file
-        // (tb, term) sort gives parquet min/max stats that prune probed
-        // terms WITHIN a bucket dir. Sized by the total token count (an
-        // upper bound on posting rows) read back from the 1-row stats
-        // artifact written above — no extra corpus pass.
-        // sum over zero rows is NULL: an empty corpus must size as 0,
-        // not NPE (the pre-r13 write path handled empty fine)
-        val statsRow = spark.read.parquet(s"$path/stats").head
-        val totTokens = if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1)
-        graft.sim.Ivf2.layoutWrite(post, "tb", totTokens,
-          s"$path/postings", subCols = Seq("term"))
-        path
-      })
+    graft.DatasetCache.materialize(spark, dir, "postings", "documents.parquet") { path =>
+      val d = docs(spark, dir)
+      d.agg(count(lit(1)).cast(LongType).as("n"),
+          sum(size(words).cast(LongType)).as("t"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
+      // spread before the tokenize+explode+aggregate chain: the build's
+      // heavy map side otherwise runs as ONE task on the single-file
+      // canonical corpus (profiled: 2.0 s single-task stage); identity
+      // at real scale — the [[shingleIndex]] discipline
+      val post = graft.DatasetCache.spread(d.select(col("doc_id"), col("text")))
+        .select(col("doc_id"), size(words).cast(LongType).as("dl"),
+          explode(words).as("term"))
+        .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
+        .withColumn("tb", termBucketCol(col("term")))
+      // layoutWrite range discipline on (tb, term) — r13, the r12
+      // flagged-deferred fanout: writing straight off the aggregation's
+      // hash partitioning lands every reduce task in up to all 64
+      // term-bucket dirs — (tasks × buckets) files, linear in the
+      // corpus at scale (the NOTES_r12 §5 trap in a text index). Range
+      // partitioning keeps each bucket's terms contiguous, so file
+      // count stays ≈ max(buckets, rows/budget), and the in-file
+      // (tb, term) sort gives parquet min/max stats that prune probed
+      // terms WITHIN a bucket dir. Sized by the total token count (an
+      // upper bound on posting rows) read back from the 1-row stats
+      // artifact written above — no extra corpus pass.
+      // sum over zero rows is NULL: an empty corpus must size as 0,
+      // not NPE (the pre-r13 write path handled empty fine)
+      val statsRow = spark.read.parquet(s"$path/stats").head
+      val totTokens = if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1)
+      graft.sim.Ivf2.layoutWrite(post, "tb", totTokens,
+        s"$path/postings", subCols = Seq("term"))
+    }
 
   /** Force the one-time posting-index build (bench isolation hook). */
   def prebuildPostingIndex(spark: SparkSession, dir: String): Unit = {
@@ -2052,9 +1975,6 @@ object TextOps {
         expr("s div n_pairs").as("lm_ppm"))
   }
 
-  private val lmIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Force the one-time LM score materialization (bench isolation). */
   def prebuildLmIndex(spark: SparkSession, dir: String): Unit = {
     lmScores(spark, dir)
@@ -2065,16 +1985,8 @@ object TextOps {
     * a real pipeline computes quality scores ONCE and every consumer
     * (score reports, CCNet bucketing, filtering) reads the scored
     * relation; same path-keyed materialization as [[shingleIndex]]. */
-  private def lmScores(spark: SparkSession, dir: String): DataFrame = {
-    val key = graft.DatasetCache.snapshotKey(spark, dir, "documents.parquet")
-    val path = lmIndexCache.computeIfAbsent(key, { _ =>
-      val p = graft.DatasetCache.registerTempDir(
-        java.nio.file.Files.createTempDirectory("graft_lm_idx").toString)
-      lmScoresRaw(spark, dir).write.mode("overwrite").parquet(p)
-      p
-    })
-    graft.DatasetCache.readArtifact(spark, path)
-  }
+  private def lmScores(spark: SparkSession, dir: String): DataFrame =
+    graft.DatasetCache.frame(spark, dir, "lm_idx", "documents.parquet")(lmScoresRaw(spark, dir))
 
   def docLmScore(spark: SparkSession, dir: String): DataFrame =
     lmScores(spark, dir).orderBy("doc_id")
@@ -2221,9 +2133,6 @@ object TextOps {
       .select(col("w"),
         regexp_replace(col("w"), "(.)", "|$1|").as("seq"), col("freq"))
 
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Long, String, String, Long)]]()
-
   /** Merge-loop lineage budget: the vocab DataFrame is checkpointed
     * after every this-many merge steps, bounding the plan stack at a
     * constant regardless of the requested merge count. */
@@ -2233,48 +2142,46 @@ object TextOps {
     * [[docBpeMerges]] returns it, [[docBpeTokenize]] applies it. */
   private def bpeMerges(steps: Int)(
       spark: SparkSession, dir: String): Seq[(Long, String, String, Long)] =
-    bpeCache.computeIfAbsent(
-      graft.DatasetCache.snapshotKey(spark, dir, "documents.parquet") + s":$steps",
-      { _ =>
-        val vocab0 = bpeVocab0(spark, dir).cache()
-        val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
-        var v: DataFrame = vocab0
-        var s = 1
-        while (s <= steps) {
-          val syms = split(trim(col("seq"), "|"), "\\|\\|")
-          val prs = zip_with(
-            slice(syms, lit(1), greatest(size(syms) - 1, lit(0))),
-            slice(syms, lit(2), greatest(size(syms) - 1, lit(0))),
-            (a, b) => struct(a.as("p1"), b.as("p2")))
-          val best = v.select(explode(prs).as("p"), col("freq"))
-            .groupBy(col("p.p1").as("p1"), col("p.p2").as("p2"))
-            .agg(sum("freq").as("cnt"))
-            .orderBy(col("cnt").desc, col("p1").asc, col("p2").asc)
-            .limit(1).collect()
-          if (best.isEmpty) { s = steps + 1 } // vocabulary fully merged
-          else {
-            val (p1, p2, cnt) =
-              (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-            merges += ((s.toLong, p1, p2, cnt))
-            v = v.select(col("w"),
-              replace(col("seq"), lit(s"|$p1||$p2|"), lit(s"|$p1$p2|")).as("seq"),
-              col("freq"))
-            // lineage truncation every few merges (the
-            // [[connectedComponents]] discipline): each step layers a
-            // `replace` projection AND runs a limit(1).collect() job
-            // against the whole stack — at a realistic merge count
-            // (thousands) an unbounded stack blows the plan tree and
-            // re-analyzes O(steps) projections per step. The vocab is
-            // word-count-sized (bounded, nowhere near the corpus), so
-            // the checkpoint is cheap; every merge step stays one job
-            // over a LEAF relation regardless of `steps`.
-            if (s % BpeCheckpointEvery == 0) v = v.localCheckpoint(true)
-            s += 1
-          }
+    graft.DatasetCache.artifact(spark, dir, s"bpe_merges#$steps", "documents.parquet") { _ =>
+      val vocab0 = bpeVocab0(spark, dir).cache()
+      val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
+      var v: DataFrame = vocab0
+      var s = 1
+      while (s <= steps) {
+        val syms = split(trim(col("seq"), "|"), "\\|\\|")
+        val prs = zip_with(
+          slice(syms, lit(1), greatest(size(syms) - 1, lit(0))),
+          slice(syms, lit(2), greatest(size(syms) - 1, lit(0))),
+          (a, b) => struct(a.as("p1"), b.as("p2")))
+        val best = v.select(explode(prs).as("p"), col("freq"))
+          .groupBy(col("p.p1").as("p1"), col("p.p2").as("p2"))
+          .agg(sum("freq").as("cnt"))
+          .orderBy(col("cnt").desc, col("p1").asc, col("p2").asc)
+          .limit(1).collect()
+        if (best.isEmpty) { s = steps + 1 } // vocabulary fully merged
+        else {
+          val (p1, p2, cnt) =
+            (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+          merges += ((s.toLong, p1, p2, cnt))
+          v = v.select(col("w"),
+            replace(col("seq"), lit(s"|$p1||$p2|"), lit(s"|$p1$p2|")).as("seq"),
+            col("freq"))
+          // lineage truncation every few merges (the
+          // [[connectedComponents]] discipline): each step layers a
+          // `replace` projection AND runs a limit(1).collect() job
+          // against the whole stack — at a realistic merge count
+          // (thousands) an unbounded stack blows the plan tree and
+          // re-analyzes O(steps) projections per step. The vocab is
+          // word-count-sized (bounded, nowhere near the corpus), so
+          // the checkpoint is cheap; every merge step stays one job
+          // over a LEAF relation regardless of `steps`.
+          if (s % BpeCheckpointEvery == 0) v = v.localCheckpoint(true)
+          s += 1
         }
-        vocab0.unpersist()
-        merges.toSeq
-      })
+      }
+      vocab0.unpersist()
+      merges.toSeq
+    }
 
   /** Force the one-time merge training (bench isolation hook). */
   def prebuildBpeMerges(steps: Int)(spark: SparkSession, dir: String): Unit = {
@@ -2474,25 +2381,19 @@ object TextOps {
   def docWinnow(spark: SparkSession, dir: String): DataFrame =
     winnowIndex(spark, dir).orderBy("doc_id", "fp")
 
-  /** Materialized winnow-fingerprint relation (doc_id, fp, n_windows) —
-    * the same build-once artifact discipline as [[shingleIndex]]: the
-    * CPU-heavy hashing pass runs once per (dataset snapshot) and every
-    * consumer ([[docWinnow]], the [[docWinnowPairs]] self-join, which
-    * would otherwise hash the corpus TWICE) scans ~8-byte-key parquet. */
-  private val winnowIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Force the one-time winnow-index build (bench isolation hook). */
   def prebuildWinnowIndex(spark: SparkSession, dir: String): Unit = {
     winnowIndex(spark, dir)
     ()
   }
 
-  private[text] def winnowIndex(spark: SparkSession, dir: String): DataFrame = {
-    val key = graft.DatasetCache.snapshotKey(spark, dir, "documents.parquet")
-    val path = winnowIndexCache.computeIfAbsent(key, { _ =>
-      val p = graft.DatasetCache.registerTempDir(
-        java.nio.file.Files.createTempDirectory("graft_winnow_idx").toString)
+  /** Materialized winnow-fingerprint relation (doc_id, fp, n_windows) —
+    * the same build-once artifact discipline as [[shingleIndex]]: the
+    * CPU-heavy hashing pass runs once per (dataset snapshot) and every
+    * consumer ([[docWinnow]], the [[docWinnowPairs]] self-join, which
+    * would otherwise hash the corpus TWICE) scans ~8-byte-key parquet. */
+  private[text] def winnowIndex(spark: SparkSession, dir: String): DataFrame =
+    graft.DatasetCache.frame(spark, dir, "winnow_idx", "documents.parquet") {
       val w = words
       // hash-and-winnow runs in the native winnow_mins kernel (one loop
       // per document, incremental MD5); the HOF spelling — transform +
@@ -2508,11 +2409,7 @@ object TextOps {
           call_function("winnow_mins", w, lit(WinnowK), lit(WinnowW))).as("fp"))
         .groupBy("doc_id", "fp")
         .agg(count(lit(1)).as("n_windows"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    graft.DatasetCache.readArtifact(spark, path)
-  }
+    }
 
   /** The winnow fingerprint relation as a SQL fragment (no ORDER BY) —
     * shared by [[docWinnowSql]] and [[docWinnowPairsSql]]. */

@@ -125,6 +125,40 @@ class LakeTableSpec extends SparkSpec {
     assert(LakeTable.snapshotWhere(spark, t, "x", 0.0, 3.0).count() == 2)
   }
 
+  /** Two single-file commits of a FLOAT column: (0.1f, 0.3f), (0.5f, 0.7f). */
+  private def floatTable(): String = {
+    import spark.implicits._
+    val t = freshTable()
+    LakeTable.append(spark, t, Seq(0.1f, 0.3f).toDF("f").coalesce(1))
+    LakeTable.append(spark, t, Seq(0.5f, 0.7f).toDF("f").coalesce(1))
+    t
+  }
+
+  private def floatReads(t: String): Seq[Long] = {
+    val lake = spark.read.format("lake").load(t)
+    Seq(lake.filter(col("f") >= 0.3f).count(), lake.filter(col("f") >= 0.3).count(),
+      lake.filter(col("f") <= 0.1f).count(), lake.filter(col("f") === 0.3f).count())
+  }
+
+  test("float log stats never skip a file whose bound equals the literal") {
+    assert(floatReads(floatTable()) == Seq(3L, 3L, 1L, 1L))
+  }
+
+  test("float bounds logged in Float.toString's short form still prune exactly") {
+    val t = floatTable()
+    // rewrite the commits as an older writer logged them: 0.3f as "0.3"
+    val logs = Files.list(Paths.get(t, "_txlog")).toArray.map(_.asInstanceOf[java.nio.file.Path])
+    val short = Seq(0.1f, 0.3f, 0.5f, 0.7f).map(f => BigDecimal(f.toDouble).toString -> f.toString)
+    var rewritten = 0
+    logs.filter(_.getFileName.toString.endsWith(".json")).foreach { p =>
+      val old = Files.readString(p)
+      val now = short.foldLeft(old) { case (s, (exact, brief)) => s.replace(exact, brief) }
+      if (now != old) { rewritten += 1; Files.writeString(p, now) }
+    }
+    assert(rewritten == 2, "both commits carry float bounds")
+    assert(floatReads(t) == Seq(3L, 3L, 1L, 1L))
+  }
+
   test("vacuum drops pre-retention files but keeps retained versions readable") {
     val t = freshTable()
     LakeTable.append(spark, t, df(0 until 10))       // v1
