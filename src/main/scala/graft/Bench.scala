@@ -283,9 +283,6 @@ object Bench {
     // runs, which min-of-N cannot remove (the r5 rel_nation_* 3-5×
     // in-suite-vs-isolated swing). ~10-50 ms of untimed wall-clock per
     // query on the 8g bench heap.
-    // SPARK_GRAFT_BENCH_GC=0 disables the barrier — the A/B knob the
-    // variance root-cause experiment uses; default ON
-    val gcBarrier = sys.env.get("SPARK_GRAFT_BENCH_GC").forall(_ != "0")
     // SPARK_GRAFT_BENCH_RUNS (default 3): scale-stress sweeps on N00x
     // fixtures run each query for minutes, where (a) min-of-3 triples a
     // multi-hour wall and (b) scheduler noise is proportionally tiny —
@@ -313,7 +310,7 @@ object Bench {
       // from preceding queries inflates ALL N timing runs equally, so
       // min-of-N cannot remove it — only draining between queries can.
       // ~250 ms of untimed wall per query.
-      if (gcBarrier) { System.gc(); Thread.sleep(200); System.gc() }
+      System.gc(); Thread.sleep(200); System.gc()
       val times = (0 until runsPerQuery).map { _ =>
         val t0 = System.nanoTime()
         // noop sink, NOT count(): count() lets ColumnPruning delete any

@@ -18,17 +18,19 @@ import graft.pc.Layout
   * index's, so partition discovery and dynamic partition pruning are
   * unchanged.
   *
-  * A file's range on a column is the union of its row groups' ranges.
-  * If any row group has no bounds on the column — all nulls, a NaN, a
-  * non-numeric type, or a file that lacks the column — the file has no
-  * range there and that column never prunes it. Predicates become
-  * intervals through [[LakeStatsPruning.constraints]], the lake's own
-  * extractor: strict bounds count as inclusive, and casts that round
-  * (long→double) bound nothing.
+  * A file's range on a column is the union of its row groups' bounds
+  * ([[Layout.fileBounds]] over [[Layout.readFooter]]): numbers,
+  * timestamps, dates and strings. If any row group has no bounds on the
+  * column — all nulls, a NaN, a type without usable bounds, or a file
+  * that lacks the column — the file has no range there and that column
+  * never prunes it. Predicates become intervals through
+  * [[LakeStatsPruning.constraints]] and are tested by
+  * [[LakeStatsPruning.mayMatchRanges]], the lake's own extractor and test:
+  * strict bounds count as inclusive, and casts that round (long→double)
+  * bound nothing.
   *
   * Footers are read once per index, on the first listing whose filters
-  * carry a numeric bound; the artifact never changes, so they never go
-  * stale. */
+  * carry a bound; the artifact never changes, so they never go stale. */
 private[graft] final class FooterStatsFileIndex(base: FileIndex, conf: Configuration)
     extends FileIndex {
 
@@ -39,45 +41,21 @@ private[graft] final class FooterStatsFileIndex(base: FileIndex, conf: Configura
   override def partitionSchema: StructType = base.partitionSchema
   override def metadataOpsTimeNs: Option[Long] = base.metadataOpsTimeNs
 
-  private lazy val ranges: Map[Path, Map[String, (BigDecimal, BigDecimal)]] =
+  private lazy val bounds: Map[Path, Layout.FooterRowGroup] =
     base.listFiles(Nil, Nil).flatMap(_.files).map { f =>
-      f.getPath -> FooterStatsFileIndex.fileRanges(Layout.readFooter(conf, f.fileStatus))
+      f.getPath -> Layout.fileBounds(Layout.readFooter(conf, f.fileStatus))
     }.toMap
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val listed = base.listFiles(partitionFilters, dataFilters)
-    val bounds = LakeStatsPruning.constraints(dataFilters)
-      .collect { case b: LakeStatsPruning.NumBound => b }
-    if (bounds.isEmpty) listed
+    val constraints = LakeStatsPruning.constraints(dataFilters)
+    if (constraints.isEmpty) listed
     else listed.map { pd =>
       pd.copy(files = pd.files.filter { f =>
-        val r = ranges.getOrElse(f.getPath, Map.empty)
-        LakeStatsPruning.mayMatchRanges(bounds, r.get, _ => None)
+        bounds.get(f.getPath).forall(b =>
+          LakeStatsPruning.mayMatchRanges(constraints, b.nums.get, b.strs.get))
       })
     }.filter(_.files.nonEmpty)
-  }
-}
-
-private[graft] object FooterStatsFileIndex {
-
-  /** Per-column union of row-group ranges, as exact decimals (the
-    * [[LakeStatsPruning]] value space); infinite bounds give no range. */
-  def fileRanges(rowGroups: Seq[Layout.FooterRowGroup]): Map[String, (BigDecimal, BigDecimal)] =
-    rowGroups.map { rg =>
-      rg.ranges.flatMap { case (c, (lo, hi)) =>
-        for (l <- exact(lo); h <- exact(hi)) yield c -> (l, h)
-      }
-    }.reduceOption { (a, b) =>
-      a.collect { case (c, (lo, hi)) if b.contains(c) =>
-        c -> (lo.min(b(c)._1), hi.max(b(c)._2))
-      }
-    }.getOrElse(Map.empty)
-
-  private def exact(n: Number): Option[BigDecimal] = n match {
-    case _: java.lang.Float | _: java.lang.Double =>
-      val d = n.doubleValue
-      if (d.isInfinite || d.isNaN) None else Some(BigDecimal(d))
-    case _ => Some(BigDecimal(n.longValue))
   }
 }

@@ -449,9 +449,10 @@ object LakeSqlDelete {
 
 /** File index seeded from the lake log snapshot. `listFiles` receives
   * the pushed data filters as catalyst predicates and drops every file
-  * whose log min/max cannot contain a matching row — the same interval
-  * test as `LakeTable.pruneByStats`, applied where `FileScan.partitions`
-  * (and hence `planInputPartitions`) gets its file list. */
+  * whose log min/max cannot contain a matching row — the one test the
+  * library verbs use too ([[LakeStatsPruning.mayMatch]]), applied where
+  * `FileScan.partitions` (and hence `planInputPartitions`) gets its file
+  * list. */
 class LakeFileIndex(spark: SparkSession, root: String,
     entries: Seq[(String, String)], schema: StructType)
     extends InMemoryFileIndex(
@@ -469,8 +470,7 @@ class LakeFileIndex(spark: SparkSession, root: String,
   /** Stats keyed the way the log stores files: `stage-sub/name`. */
   private val statsByRel: Map[String, String] = entries.toMap
 
-  private val floatColumns: Set[String] =
-    schema.fields.collect { case f if f.dataType == FloatType => f.name }.toSet
+  private val floatColumns = LakeStatsPruning.floatColumns(schema)
 
   private def relOf(p: Path): String = s"${p.getParent.getName}/${p.getName}"
 
@@ -627,6 +627,11 @@ object LakeStatsPruning {
     }
   }
 
+  /** The FLOAT columns of `schema`, whose logged bounds [[mayMatch]]
+    * reads as floats. */
+  def floatColumns(schema: StructType): Set[String] =
+    schema.fields.collect { case f if f.dataType == FloatType => f.name }.toSet
+
   /** Can a file with `stats` contain a row satisfying ALL bounds?
     * A column with no usable stats never prunes. A FLOAT column's
     * logged bound is read as the float it names, at that float's exact
@@ -653,8 +658,8 @@ object LakeStatsPruning {
         }
       case StrBound(column, lo, hi) =>
         strRange(column).forall { case (mn, mx) =>
-          hi.forall(h => LakeTable.unsignedCompare(mn, h) <= 0) &&
-            lo.forall(l => LakeTable.unsignedCompare(l, mx) <= 0)
+          hi.forall(h => java.util.Arrays.compareUnsigned(mn, h) <= 0) &&
+            lo.forall(l => java.util.Arrays.compareUnsigned(l, mx) <= 0)
         }
     }
 }

@@ -6,7 +6,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** ACID table format on plain Parquet — the transaction-log half of the
   * "lakehouse" (data lake + ACID) thesis, built from scratch because no
@@ -661,51 +661,22 @@ object LakeTable {
   }
 
   /** Stage `df` as immutable parquet files under a unique subdir and
-    * return their table-relative paths with per-file min/max stats for
-    * every numeric column (`col=min:max;...`) — the data-skipping index,
-    * computed in ONE distributed pass grouped by `input_file_name`.
-    * Distributed write; nothing is visible until a log entry references
-    * it. */
+    * return their table-relative paths with per-file stats
+    * ([[footerStats]]) — the data-skipping index, read from the footers
+    * just written. Distributed write; nothing is visible until a log
+    * entry references it. */
   private def stage(df: DataFrame, table: String): (Seq[String], Seq[String]) = {
+    import org.apache.hadoop.fs.{Path => HPath}
     val sub = s"stage-${java.util.UUID.randomUUID().toString.take(12)}"
     val dir = Paths.get(table, sub)
     enforceConstraints(df, table).write.parquet(dir.toString)
-    val it = Files.list(dir)
-    val files =
-      try it.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(n => n.endsWith(".parquet") && !n.startsWith("."))
-        .map(n => s"$sub/$n").toSeq.sorted
-      finally it.close()
-    // stats cover plain numerics, timestamps (as integer micros), dates
-    // (as integer days) and strings (escaped byte bounds) — NOT
-    // DecimalType: parquet footers store decimals as UNSCALED int32/int64
-    // (precision<=18), so recording genericGetMin verbatim would log e.g.
-    // 1234 for 12.34 and pruneByStats would silently skip matching files
-    // (wrong results); decimal columns simply carry no stats and are
-    // conservatively kept
-    val statCols = df.schema.fields.flatMap(f =>
-      statKind(f.dataType).map(k => (f.name, k))).toSeq
     val conf = new org.apache.hadoop.conf.Configuration()
-    (files, files.map(f => footerStats(Paths.get(table, f), statCols, conf)))
-  }
-
-  /** How a column's footer stats are recorded in the log, if at all. */
-  private[lake] sealed trait StatKind
-  private[lake] object StatKind {
-    /** int/float family: decimal min/max under the plain `name=` key. */
-    case object Num extends StatKind
-    /** timestamp (LTZ or NTZ): integer MICROS under the plain key —
-      * catalyst timestamp literals carry micros, so pruning compares in
-      * matching units with no conversion at read time. */
-    case object TimeMicros extends StatKind
-    /** date: integer DAYS under the plain key (catalyst date literals
-      * carry days). */
-    case object Days extends StatKind
-    /** string: percent-escaped UTF-8 byte bounds under the `str$` key
-      * ([[StrKeyPrefix]]), compared as UNSIGNED bytes — the order both
-      * parquet binary stats and Spark's UTF8String comparisons use. */
-    case object Str extends StatKind
+    val hdir = new HPath(dir.toString)
+    val parts = hdir.getFileSystem(conf).listStatus(hdir).toSeq
+      .filter { f => val n = f.getPath.getName; n.endsWith(".parquet") && !n.startsWith(".") }
+      .sortBy(_.getPath.getName)
+    (parts.map(f => s"$sub/${f.getPath.getName}"),
+      parts.map(f => footerStats(graft.pc.Layout.readFooter(conf, f), df.schema)))
   }
 
   /** Key prefix separating string-typed stats from the numeric namespace
@@ -715,154 +686,33 @@ object LakeTable {
     * at all — collision-proof by construction. */
   private[lake] val StrKeyPrefix = "str$"
 
-  private def statKind(dt: org.apache.spark.sql.types.DataType): Option[StatKind] = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType |
-           FloatType | DoubleType => Some(StatKind.Num)
-      case TimestampType | TimestampNTZType => Some(StatKind.TimeMicros)
-      case DateType => Some(StatKind.Days)
-      case StringType => Some(StatKind.Str)
-      case _ => None // DecimalType: unscaled footer ints — see stage()
+  /** One file's log stats, from its footer alone — driver-side metadata
+    * reads (a few KB per file), not a second full scan of freshly-staged
+    * data. Which bounds are usable, and in which units, is
+    * [[graft.pc.Layout.readFooter]]'s decision, folded over the file's
+    * row groups by [[graft.pc.Layout.fileBounds]]; this is only the log
+    * encoding, in `schema` order:
+    *  - `#rows=n`, the file's exact row count, first — it serves
+    *    metadata-only `count(*)` ([[LakeV2Table.logRowCount]]); left out
+    *    when a real column's range takes the reserved key;
+    *  - `name=min:max` for numbers (timestamps as micros, dates as days);
+    *  - `str$name=min:max` for strings, percent-escaped
+    *    ([[escBytes]]) and truncated to [[StrStatsMaxLen]] bytes.
+    * A column without bounds, or named under [[StrKeyPrefix]], has no
+    * entry, so every read keeps the file for it. */
+  private def footerStats(rowGroups: Seq[graft.pc.Layout.FooterRowGroup],
+      schema: StructType): String = {
+    val file = graft.pc.Layout.fileBounds(rowGroups)
+    val cols = schema.fieldNames.toSeq.filterNot(_.startsWith(StrKeyPrefix)).flatMap { name =>
+      file.nums.get(name).map { case (mn, mx) => s"$name=$mn:$mx" }.orElse(
+        file.strs.get(name).flatMap { case (mn, mx) =>
+          // an all-0xFF prefix has no finite truncated upper bound
+          truncUpper(mx, StrStatsMaxLen).map(hi =>
+            s"$StrKeyPrefix$name=${escBytes(truncLower(mn, StrStatsMaxLen))}:${escBytes(hi)}")
+        })
     }
-  }
-
-  /** Per-file min/max for `columns` from the parquet FOOTER alone —
-    * driver-side metadata reads (a few KB per file), not a second full
-    * scan of freshly-staged data (which at 100 TB ingest would double
-    * read I/O). Row-group stats fold across the file; a column whose
-    * stats are missing, non-primitive (e.g. decimal), or NaN-tainted is
-    * skipped → the file is conservatively kept by [[pruneByStats]].
-    * Files open with the plain reader options of [[graft.pc.Layout]]
-    * (the Hadoop-conf-derived defaults cost ~11 ms per open). */
-  private def footerStats(file: Path, columns: Seq[(String, StatKind)],
-      conf: org.apache.hadoop.conf.Configuration): String = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new HPath(file.toString), conf), graft.pc.Layout.footerOptions)
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      // reserved entry first: the file's EXACT row count (block counts)
-      // — serves metadata-only `count(*)` ([[LakeV2Table.logRowCount]]).
-      // Skipped if a real column shades the reserved name, so pruning
-      // can never read a row count as a value range.
-      val rows =
-        if (columns.exists(_._1 == RowsKey)) Seq.empty
-        else Seq(s"$RowsKey=${blocks.map(_.getRowCount).sum}")
-      val colStats = columns.flatMap { case (name, kind) =>
-        if (name.startsWith(StrKeyPrefix)) None // see [[StrKeyPrefix]]
-        else {
-          // fold (min, max) across this file's row groups; every row
-          // group must contribute usable stats or the column gets none.
-          // Each bound is validated against BOTH the requested kind and
-          // the column's physical/logical parquet type — a mismatch
-          // (INT96 timestamps, nano units, unannotated binary) yields
-          // no stats, never a wrong range.
-          val perGroup = blocks.map { b =>
-            b.getColumns.asScala
-              .find(_.getPath.toDotString == name)
-              .flatMap { c =>
-                val s = c.getStatistics
-                val prim = c.getPrimitiveType
-                if (s == null || !s.hasNonNullValue) None
-                else kind match {
-                  case StatKind.Num =>
-                    // reject NaN AND infinities: BigDecimal("Infinity")
-                    // throws, which would fail the whole append for data
-                    // that is perfectly writable
-                    def ok(x: Any): Boolean = x match {
-                      case d: java.lang.Double => !d.isNaN && !d.isInfinite
-                      case f: java.lang.Float => !f.isNaN && !f.isInfinite
-                      case _: java.lang.Long | _: java.lang.Integer => true
-                      case _ => false // binary/int96/etc: not our format
-                    }
-                    // a FLOAT bound is recorded as its exact double, the
-                    // value a float literal prunes with
-                    // ([[LakeStatsPruning]]); `Float.toString`'s short
-                    // form (0.3f → "0.3") lies below a max of 0.3f
-                    def dec(x: Any): BigDecimal = x match {
-                      case f: java.lang.Float => BigDecimal(f.toDouble)
-                      case v => BigDecimal(v.toString)
-                    }
-                    val (mn, mx) = (s.genericGetMin, s.genericGetMax)
-                    if (ok(mn) && ok(mx)) Some(NumRange(dec(mn), dec(mx)))
-                    else None
-                  case StatKind.TimeMicros =>
-                    val unit = prim.getLogicalTypeAnnotation match {
-                      case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                        t.getUnit match {
-                          case TimeUnit.MICROS => Some(1L)
-                          case TimeUnit.MILLIS => Some(1000L)
-                          case _ => None // NANOS: lossy to micros — skip
-                        }
-                      case _ => None // INT96 or unannotated: unordered
-                    }
-                    (unit, s.genericGetMin, s.genericGetMax) match {
-                      case (Some(m), mn: java.lang.Long, mx: java.lang.Long) =>
-                        Some(NumRange(BigDecimal(mn * m), BigDecimal(mx * m)))
-                      case _ => None
-                    }
-                  case StatKind.Days =>
-                    val isDate = prim.getLogicalTypeAnnotation
-                      .isInstanceOf[LogicalTypeAnnotation.DateLogicalTypeAnnotation]
-                    (s.genericGetMin, s.genericGetMax) match {
-                      case (mn: java.lang.Integer, mx: java.lang.Integer) if isDate =>
-                        Some(NumRange(BigDecimal(mn.toInt), BigDecimal(mx.toInt)))
-                      case _ => None
-                    }
-                  case StatKind.Str =>
-                    val isStr = prim.getPrimitiveTypeName == PrimitiveTypeName.BINARY &&
-                      prim.getLogicalTypeAnnotation
-                        .isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]
-                    (s.genericGetMin, s.genericGetMax) match {
-                      case (mn: org.apache.parquet.io.api.Binary,
-                            mx: org.apache.parquet.io.api.Binary) if isStr =>
-                        Some(StrRange(mn.getBytes, mx.getBytes))
-                      case _ => None
-                    }
-                }
-              }
-          }
-          if (perGroup.isEmpty || perGroup.exists(_.isEmpty)) None
-          else perGroup.flatten.reduceLeft[StatRange](_ merge _).entry(name)
-        }
-      }
-      (rows ++ colStats).mkString(";")
-    } finally reader.close()
-  }
-
-  /** A foldable per-row-group stats range of one column. */
-  private sealed trait StatRange {
-    def merge(o: StatRange): StatRange
-    /** The `key=min:max` log entry, or None if unencodable. */
-    def entry(name: String): Option[String]
-  }
-  private final case class NumRange(mn: BigDecimal, mx: BigDecimal)
-      extends StatRange {
-    def merge(o: StatRange): StatRange = o match {
-      case NumRange(a, b) => NumRange(mn.min(a), mx.max(b))
-      case _ => this // unreachable: kinds are per-column
-    }
-    def entry(name: String): Option[String] = Some(s"$name=$mn:$mx")
-  }
-  private final case class StrRange(mn: Array[Byte], mx: Array[Byte])
-      extends StatRange {
-    def merge(o: StatRange): StatRange = o match {
-      case StrRange(a, b) =>
-        StrRange(if (unsignedCompare(a, mn) < 0) a else mn,
-          if (unsignedCompare(b, mx) > 0) b else mx)
-      case _ => this
-    }
-    def entry(name: String): Option[String] =
-      for {
-        lo <- Some(truncLower(mn, StrStatsMaxLen))
-        hi <- truncUpper(mx, StrStatsMaxLen) // all-0xFF prefix: no bound
-      } yield s"$StrKeyPrefix$name=${escBytes(lo)}:${escBytes(hi)}"
+    val rows = if (file.nums.contains(RowsKey)) Nil else Seq(s"$RowsKey=${file.rows}")
+    (rows ++ cols).mkString(";")
   }
 
   /** Cap on stored string-bound length: long values truncate (lower
@@ -870,17 +720,6 @@ object LakeTable {
     * parquet truncation rule) so a pathological 1 MB key cannot bloat
     * the log. */
   private[lake] val StrStatsMaxLen = 64
-
-  private[lake] def unsignedCompare(a: Array[Byte], b: Array[Byte]): Int = {
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) {
-      val d = (a(i) & 0xff) - (b(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    a.length - b.length
-  }
 
   private def truncLower(v: Array[Byte], max: Int): Array[Byte] =
     if (v.length <= max) v else v.take(max) // prefix <= v: valid lower bound
@@ -1270,14 +1109,14 @@ object LakeTable {
   }
 
   /** Can a pure-append winner's files contain a row with
-    * `column ∈ [lo, hi]`? Checked from the COMMIT's own stats — the
-    * same interval test as [[pruneByStats]]; a file without usable
+    * `column ∈ [lo, hi]`? Checked from the COMMIT's own stats with the
+    * same test as every read ([[filesMayMatch]]); a file without usable
     * stats conservatively counts as overlapping. */
-  private def appendOverlapsRange(w: Commit, column: String,
+  private def appendOverlapsRange(w: Commit, schema: StructType, column: String,
       lo: Double, hi: Double): Boolean =
-    pruneByStats(w.add.zipWithIndex.map { case (f, i) =>
+    filesMayMatch(w.add.zipWithIndex.map { case (f, i) =>
       (f, w.addStats.lift(i).getOrElse(""))
-    }, column, lo, hi).nonEmpty
+    }, schema, Seq((column, lo, hi))).nonEmpty
 
   /** Resolve `column` against the schema (exact first, then the
     * case-insensitive match Spark's own resolution uses), require it
@@ -1385,7 +1224,7 @@ object LakeTable {
         cdc = cdc),
       "merge",
       w => keyHull.exists { case (lo, hi) =>
-        !appendOverlapsRange(w, keyName, lo, hi) })
+        !appendOverlapsRange(w, schema, keyName, lo, hi) })
   }
 
   /** Copy-on-write DELETE of rows with `column ∈ [lo, hi]`. The
@@ -1403,7 +1242,7 @@ object LakeTable {
     * multi-column SQL `DELETE WHERE` translates to. Affected files are
     * pruned against EVERY conjunct's interval (a file escapes the
     * rewrite if ANY range provably excludes it — intersection pruning,
-    * the same interval logic as [[pruneByStats]] per column), so a
+    * the same test as [[snapshotWhere]] per column), so a
     * two-column delete touches no more files than the more selective of
     * its columns alone. Row-level semantics are SQL's: a row deletes iff
     * the conjunction is TRUE (a NULL in any predicate column keeps the
@@ -1427,10 +1266,7 @@ object LakeTable {
     require(resolved.map(_._1).distinct.size == resolved.size,
       s"deleteWhere: duplicate predicate column in ${resolved.map(_._1)}")
     // intersection pruning: keep a file only while every range could hit
-    val affected = resolved.foldLeft(all) { case (rem, (c, lo, hi)) =>
-      val keep = pruneByStats(rem, c, lo, hi).toSet
-      rem.filter(e => keep(e._1))
-    }.map(_._1)
+    val affected = filesMayMatch(all, schema, resolved)
     val matched = resolved.map { case (c, lo, hi) =>
       col(c) >= lo && col(c) <= hi
     }.reduce(_ && _)
@@ -1452,7 +1288,7 @@ object LakeTable {
         cdc = cdc),
       "delete",
       w => resolved.exists { case (c, lo, hi) =>
-        !appendOverlapsRange(w, c, lo, hi) })
+        !appendOverlapsRange(w, schema, c, lo, hi) })
   }
 
   /** TRUNCATE: remove every live row in one METADATA-ONLY commit — no
@@ -1616,10 +1452,7 @@ object LakeTable {
     resolved.map(_._1).foreach(c => require(!assignments.contains(c),
       "updateWhere: assigning the predicate column would make the result " +
         "order-of-application dependent; use merge for key rewrites"))
-    val affected = resolved.foldLeft(all) { case (rem, (c, lo, hi)) =>
-      val keep = pruneByStats(rem, c, lo, hi).toSet
-      rem.filter(e => keep(e._1))
-    }.map(_._1)
+    val affected = filesMayMatch(all, schema, resolved)
     // three-valued logic: a NULL conjunct means NOT matched
     val matched = coalesce(resolved.map { case (c, lo, hi) =>
       col(c) >= lo && col(c) <= hi
@@ -1649,7 +1482,7 @@ object LakeTable {
         cdc = cdc),
       "update",
       w => resolved.exists { case (c, lo, hi) =>
-        !appendOverlapsRange(w, c, lo, hi) })
+        !appendOverlapsRange(w, schema, c, lo, hi) })
   }
 
   /** OPTIMIZE with Z-ORDER BY: rewrite the live file set compacted into
@@ -1886,13 +1719,13 @@ object LakeTable {
     val (all, schemaJson) = snapshotFilesWithStats(table, Some(baseVersion))
     val schema = DataType.fromJson(schemaJson.get).asInstanceOf[StructType]
     val c = requireNumeric(schema, column, "deleteWhereDV")
-    val affected = pruneByStats(all, c, lo, hi)
+    val affected = filesMayMatch(all, schema, Seq((c, lo, hi)))
     if (affected.isEmpty)
       return commitWithRebase(table,
         Commit(baseVersion + 1, "delete-dv", Seq.empty, Seq.empty,
           schemaJson.get),
         "delete-dv",
-        w => !appendOverlapsRange(w, c, lo, hi))
+        w => !appendOverlapsRange(w, schema, c, lo, hi))
     // newly deleted (rel_file, row_index) pairs, read DV-applied so a
     // row already masked by an older DV is not re-matched
     val parsed = affected.map(parseEntry)
@@ -1930,7 +1763,7 @@ object LakeTable {
         affected.map(statsOf), // stats carry over: DVs only remove rows
         cdc = cdc),
       "delete-dv",
-      w => !appendOverlapsRange(w, c, lo, hi))
+      w => !appendOverlapsRange(w, schema, c, lo, hi))
   }
 
   // ---- read path -------------------------------------------------------
@@ -1952,15 +1785,11 @@ object LakeTable {
     }
   }
 
-  /** Prune `(file, stats)` entries down to those whose stats could
-    * contain a row with `column ∈ [lo, hi]`. A file with no stats for
-    * the column — or an unparseable/NaN range — is conservatively
-    * kept. */
   /** Parse one file's flat stats string for a column's (min, max).
     * Parsed as BigDecimal, NOT Double: an int64 value above 2^53 (e.g. a
     * nanosecond-timestamp long) is not Double-representable, and a lossy
     * parse could SHRINK the range below the file's true bounds — then
-    * pruneByStats wrongly skips a file whose rows match, a silent-wrong-
+    * pruning wrongly skips a file whose rows match, a silent-wrong-
     * result path for snapshotWhere/deleteWhere/updateWhere. BigDecimal
     * round-trips every decimal literal [[stage]] ever writes exactly. */
   private[lake] def statsRange(stats: String, column: String): Option[(BigDecimal, BigDecimal)] = {
@@ -1992,17 +1821,28 @@ object LakeTable {
       (math.nextDown(mn.toDouble), math.nextUp(mx.toDouble))
     }
 
-  private def pruneByStats(all: Seq[(String, String)], column: String,
-      lo: Double, hi: Double): Seq[String] = {
-    // Double → BigDecimal is exact (binary fractions are finite decimals);
-    // an infinite endpoint is an unbounded side — no constraint from it
-    val blo = if (lo.isNegInfinity) None else Some(BigDecimal(lo))
-    val bhi = if (hi.isPosInfinity) None else Some(BigDecimal(hi))
-    all.collect {
-      case (f, stats) if statsRange(stats, column)
-        .forall { case (mn, mx) =>
-          bhi.forall(mn <= _) && blo.forall(_ <= mx) } => f
+  /** Entries of `all` whose log stats could hold a row inside every
+    * `column ∈ [lo, hi]` range: [[LakeStatsPruning.mayMatch]], the test
+    * the DSv2 scan uses, over `schema`'s FLOAT columns. An infinite
+    * endpoint leaves that side open.
+    *
+    * The rows match as `col(column) >= lo && col(column) <= hi`, where
+    * a LONG column compares as its nearest double: above 2^53 a long
+    * rounds onto a bound it lies below (2^60 - 50 compares as 2^60), so a
+    * long column's sides widen by one ulp, at their exact value. */
+  private def filesMayMatch(all: Seq[(String, String)], schema: StructType,
+      ranges: Seq[(String, Double, Double)]): Seq[String] = {
+    val bounds = ranges.map { case (c, lo, hi) =>
+      val long = schema.fields.exists(f => f.name == c && f.dataType == LongType)
+      def side(d: Double, widen: Double => Double) = {
+        val w = if (long) widen(d) else d
+        if (w.isInfinite) None
+        else Some(if (long) BigDecimal(new java.math.BigDecimal(w)) else BigDecimal(w))
+      }
+      LakeStatsPruning.NumBound(c, side(lo, math.nextDown), side(hi, math.nextUp))
     }
+    val floats = LakeStatsPruning.floatColumns(schema)
+    all.collect { case (f, stats) if LakeStatsPruning.mayMatch(bounds, stats, floats) => f }
   }
 
   /** Files at `version` whose stats could contain a row with
@@ -2010,8 +1850,9 @@ object LakeTable {
     * from the log alone, no footer reads. */
   def prunedFiles(table: String, column: String, lo: Double, hi: Double,
       version: Option[Long] = None): (Seq[String], Int) = {
-    val (all, _) = snapshotFilesWithStats(table, version)
-    (pruneByStats(all, column, lo, hi), all.size)
+    val (all, schemaJson) = snapshotFilesWithStats(table, version)
+    val schema = schemaJson.fold(new StructType())(DataType.fromJson(_).asInstanceOf[StructType])
+    (filesMayMatch(all, schema, Seq((column, lo, hi))), all.size)
   }
 
   /** Snapshot read restricted by a range predicate, scanning ONLY the
@@ -2021,15 +1862,20 @@ object LakeTable {
       lo: Double, hi: Double, version: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.col
     val (all, schemaJson) = snapshotFilesWithStats(table, version)
-    val files = pruneByStats(all, column, lo, hi)
     val schema = DataType.fromJson(schemaJson.getOrElse(
       throw new IllegalArgumentException(s"no such table: $table")))
       .asInstanceOf[StructType]
+    val files = filesMayMatch(all, schema, Seq((column, lo, hi)))
     val base =
       if (files.isEmpty) emptyDf(spark, schema)
       else readEntries(spark, table, files, schema)
     base.filter(col(column) >= lo && col(column) <= hi)
   }
+
+  /** Ops whose commits are row-identical re-layouts: their added files
+    * hold only rows earlier commits already carried, so change readers
+    * and streams skip them silently (Delta's dataChange=false). */
+  private val DataIdenticalOps = Set("optimize", "compact")
 
   /** Incremental change feed: the rows appended by commits in
     * `(fromVersion, toVersion]` — how a downstream job consumes a table
@@ -2040,11 +1886,6 @@ object LakeTable {
     * range containing one throws rather than returning wrong changes —
     * the consumer falls back to a snapshot diff or re-sync, exactly
     * Delta's behavior when CDF is unavailable. */
-  /** Ops whose commits are row-identical re-layouts: their added files
-    * hold only rows earlier commits already carried, so change readers
-    * and streams skip them silently (Delta's dataChange=false). */
-  private val DataIdenticalOps = Set("optimize", "compact")
-
   def changesBetween(spark: SparkSession, table: String,
       fromVersion: Long, toVersion: Long): DataFrame = {
     val latest = latestVersion(table).getOrElse(

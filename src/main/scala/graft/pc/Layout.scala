@@ -287,63 +287,98 @@ object Layout {
       .filter(_.getPath.getName.endsWith(".parquet")).toSeq
       .flatMap { f =>
         readFooter(conf, f).zipWithIndex.map { case (rg, idx) =>
-          def side(end: ((Number, Number)) => Number): Map[String, Double] =
-            dims.flatMap(d => rg.ranges.get(d).map(r => d -> end(r).doubleValue)).toMap
+          def side(end: ((BigDecimal, BigDecimal)) => BigDecimal): Map[String, Double] =
+            dims.flatMap(d => rg.nums.get(d).map(r => d -> end(r).toDouble)).toMap
           RowGroupStat(f.getPath.getName, idx, rg.rows, side(_._1), side(_._2))
         }
       }
   }
 
-  /** One row group of a Parquet footer: its row count and the raw
-    * (min, max) of every top-level numeric column (FLOAT, DOUBLE, and
-    * INT32/INT64 unannotated or signed-integer annotated) whose chunk has
-    * defined bounds. A chunk without them is absent: all nulls, or a
-    * float/double chunk holding a NaN (parquet-mr orders NaN last and
-    * drops such bounds on read). Decimal, date, time, timestamp and
-    * unsigned columns are absent too: their raw values are not the values
-    * Spark compares. */
-  private[graft] final case class FooterRowGroup(
-      rows: Long, ranges: Map[String, (Number, Number)])
+  /** Footer bounds of one row group (or, folded by [[fileBounds]], of a
+    * whole file) in the value space Spark compares, per top-level column
+    * whose chunk has them:
+    *  - `nums`: signed INT32/INT64 and FLOAT/DOUBLE as exact decimals (a
+    *    float as its exact double), TIMESTAMP(MICROS|MILLIS) as micros,
+    *    DATE as days;
+    *  - `strs`: UTF8 strings as unsigned bytes.
+    * A chunk without usable bounds is absent: all nulls, a NaN (parquet-mr
+    * orders NaN last and drops such bounds on read) or an infinite bound,
+    * and every other type (decimal, INT96, NANOS, unsigned, binary, time),
+    * whose raw footer values are not the values Spark compares. The lake
+    * log ([[graft.lake.LakeTable]]) and the artifact reader's file
+    * skipping both take their bounds from here. */
+  private[graft] final case class FooterRowGroup(rows: Long,
+      nums: Map[String, (BigDecimal, BigDecimal)],
+      strs: Map[String, (Array[Byte], Array[Byte])])
 
   /** Footers parsed by [[readFooter]] since JVM start. */
   private[graft] val footerReads = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Plain reader options, built once and shared with the lake's footer
-    * stats ([[graft.lake.LakeTable]]). Options derived from a Hadoop
+  /** Plain reader options, built once. Options derived from a Hadoop
     * `Configuration` (the default of `ParquetFileReader.open`) cost ~11 ms
     * per open; the footer read itself takes ~0.25 ms (8-file
     * micro-benchmark on a 4-core x86 box). No filter is set, so every row
     * group's metadata is returned. */
   private[graft] val footerOptions = org.apache.parquet.ParquetReadOptions.builder().build()
 
-  /** The one footer parser: [[rowGroupStats]] and the artifact reader's
-    * file skipping ([[graft.FooterStatsFileIndex]]) both go through it. */
+  /** The one footer parser: [[rowGroupStats]], the artifact reader's file
+    * skipping ([[graft.FooterStatsFileIndex]]) and the lake log's per-file
+    * stats all go through it. */
   private[graft] def readFooter(conf: Configuration, file: FileStatus): Seq[FooterRowGroup] = {
     import scala.jdk.CollectionConverters._
-    import org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation
+    import org.apache.parquet.schema.LogicalTypeAnnotation._
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.Type.Repetition
     footerReads.incrementAndGet()
+    def exact(v: Any): Option[BigDecimal] = v match {
+      case f: java.lang.Float => exact(f.toDouble)
+      case d: java.lang.Double => if (d.isNaN || d.isInfinite) None else Some(BigDecimal(d))
+      case n: java.lang.Number => Some(BigDecimal(n.longValue))
+    }
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf), footerOptions)
     try reader.getFooter.getBlocks.asScala.toSeq.map { b =>
-      FooterRowGroup(b.getRowCount, b.getColumns.asScala.flatMap { c =>
+      val nums = Map.newBuilder[String, (BigDecimal, BigDecimal)]
+      val strs = Map.newBuilder[String, (Array[Byte], Array[Byte])]
+      b.getColumns.asScala.foreach { c =>
         val t = c.getPrimitiveType
-        val signed = t.getLogicalTypeAnnotation match {
-          case null => true
-          case i: IntLogicalTypeAnnotation => i.isSigned
-          case _ => false
+        val s: org.apache.parquet.column.statistics.Statistics[_] = c.getStatistics
+        if (c.getPath.size == 1 && t.getRepetition != Repetition.REPEATED &&
+            s != null && s.hasNonNullValue) {
+          val name = c.getPath.toArray.head
+          def scaled(unit: Long) = for (lo <- exact(s.genericGetMin); hi <- exact(s.genericGetMax))
+            yield name -> (if (unit == 1L) (lo, hi) else (lo * unit, hi * unit))
+          (t.getPrimitiveTypeName, t.getLogicalTypeAnnotation) match {
+            case (INT32 | INT64 | FLOAT | DOUBLE, null) => nums ++= scaled(1L)
+            case (INT32 | INT64, i: IntLogicalTypeAnnotation) if i.isSigned => nums ++= scaled(1L)
+            case (INT32, _: DateLogicalTypeAnnotation) => nums ++= scaled(1L)
+            case (INT64, ts: TimestampLogicalTypeAnnotation) => ts.getUnit match {
+              case TimeUnit.MICROS => nums ++= scaled(1L)
+              case TimeUnit.MILLIS => nums ++= scaled(1000L)
+              case _ => // NANOS: micros would round
+            }
+            case (BINARY, _: StringLogicalTypeAnnotation) =>
+              strs += name -> (s.getMinBytes, s.getMaxBytes)
+            case _ =>
+          }
         }
-        val s = c.getStatistics
-        val numeric = t.getPrimitiveTypeName match {
-          case INT32 | INT64 | FLOAT | DOUBLE => true
-          case _ => false
-        }
-        if (c.getPath.size != 1 || t.getRepetition == Repetition.REPEATED ||
-            !numeric || !signed || s == null || !s.hasNonNullValue) None
-        else Some(c.getPath.toArray.head ->
-          (s.genericGetMin.asInstanceOf[Number], s.genericGetMax.asInstanceOf[Number]))
-      }.toMap)
+      }
+      FooterRowGroup(b.getRowCount, nums.result(), strs.result())
     } finally reader.close()
+  }
+
+  /** The one fold from row-group bounds to a file's: rows add up, and a
+    * column's range is the union of its row groups' ranges. A column
+    * missing from any row group has no range, nor does a file without row
+    * groups. */
+  private[graft] def fileBounds(rowGroups: Seq[FooterRowGroup]): FooterRowGroup = {
+    def union[T](a: Map[String, (T, T)], b: Map[String, (T, T)])(implicit o: Ordering[T]) =
+      a.collect { case (c, (lo, hi)) if b.contains(c) =>
+        c -> (o.min(lo, b(c)._1), o.max(hi, b(c)._2))
+      }
+    implicit val unsigned: Ordering[Array[Byte]] = java.util.Arrays.compareUnsigned(_, _)
+    rowGroups.reduceOption((a, b) =>
+      FooterRowGroup(a.rows + b.rows, union(a.nums, b.nums), union(a.strs, b.strs)))
+      .getOrElse(FooterRowGroup(0L, Map.empty, Map.empty))
   }
 
   /** Row groups whose stats intersect a query box — the driver-side

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 
 import graft.text.{Sketches, TextOps}
@@ -50,7 +48,7 @@ class DedupSkewSpec extends SparkSpec {
   }
 
   private def writeDocs(texts: Seq[String]): String = {
-    val dir = Files.createTempDirectory("dedup_skew").toString
+    val dir = tempDir("dedup_skew")
     val s: SparkSession = spark
     import s.implicits._
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }

@@ -22,7 +22,7 @@ class FoldDeltaSpec extends SparkSpec {
     val n = SimOps.embeddings(spark, sf0001).count()
     val split = n / 2
     val (coarse, cents) = Ivf2.appendCodebooks(spark, sf0001)
-    val base = Files.createTempDirectory("fold_base").toString
+    val base = tempDir("fold_base")
     Ivf2.assignFrozenFull(
       SimOps.embeddings(spark, sf0001).filter(col("vec_id") < split),
       coarse, cents)
@@ -30,14 +30,14 @@ class FoldDeltaSpec extends SparkSpec {
 
     val newHalf = SimOps.embeddings(spark, sf0001)
       .filter(col("vec_id") >= split).select("vec_id", "embedding")
-    val src = Files.createTempDirectory("fold_src")
-    val stage = Files.createTempDirectory("fold_stage")
+    val src = Paths.get(tempDir("fold_src"))
+    val stage = Paths.get(tempDir("fold_stage"))
     newHalf.coalesce(1).write.mode("overwrite").parquet(stage.toString)
     val part = Files.list(stage).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
     Files.move(part, src.resolve("wave0.parquet"), StandardCopyOption.ATOMIC_MOVE)
-    val delta = Files.createTempDirectory("fold_delta").toString
-    val ckpt = Files.createTempDirectory("fold_ckpt").toString
+    val delta = tempDir("fold_delta")
+    val ckpt = tempDir("fold_ckpt")
     val q = EmbedStream.startIndexIngest(
       spark.readStream.schema(newHalf.schema).parquet(src.toString),
       coarse, cents, delta, ckpt)
@@ -146,7 +146,7 @@ class FoldDeltaSpec extends SparkSpec {
     val (base, delta) = buildBaseAndDelta()
     // snapshot the segment — the state a crash between the base write
     // and the segment removal leaves behind
-    val stale = Files.createTempDirectory("fold_stale")
+    val stale = Paths.get(tempDir("fold_stale"))
     val dp = Paths.get(delta)
     val walk = Files.walk(dp)
     try walk.iterator().asScala.toSeq.foreach { p =>
@@ -167,7 +167,7 @@ class FoldDeltaSpec extends SparkSpec {
 
   test("an empty delta folds as the identity and a streaming base is refused") {
     val (base, _) = buildBaseAndDelta()
-    val empty = Files.createTempDirectory("fold_empty").toString
+    val empty = tempDir("fold_empty")
     val pre = fileSet(base)
     assert(EmbedStream.foldDelta(spark, base, empty).isEmpty)
     assert(fileSet(base) == pre)
@@ -175,7 +175,7 @@ class FoldDeltaSpec extends SparkSpec {
     // a retired segment — the identity fold must not delete it
     assert(Files.exists(Paths.get(empty)), "identity fold must not consume")
 
-    val seg = Files.createTempDirectory("fold_streambase")
+    val seg = Paths.get(tempDir("fold_streambase"))
     Files.createDirectory(seg.resolve("_spark_metadata"))
     intercept[IllegalArgumentException] {
       EmbedStream.foldDelta(spark, seg.toString, empty)
@@ -194,14 +194,14 @@ class FoldDeltaSpec extends SparkSpec {
 
     val newHalf = SimOps.embeddings(spark, sf0001)
       .filter(col("vec_id") >= n / 2).select("vec_id", "embedding")
-    val src = Files.createTempDirectory("fold_zsrc")
-    val stage = Files.createTempDirectory("fold_zstage")
+    val src = Paths.get(tempDir("fold_zsrc"))
+    val stage = Paths.get(tempDir("fold_zstage"))
     newHalf.coalesce(1).write.mode("overwrite").parquet(stage.toString)
     val part = Files.list(stage).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
     Files.move(part, src.resolve("wave0.parquet"), StandardCopyOption.ATOMIC_MOVE)
-    val seg = Files.createTempDirectory("fold_zseg").toString
-    val ckpt = Files.createTempDirectory("fold_zckpt").toString
+    val seg = tempDir("fold_zseg")
+    val ckpt = tempDir("fold_zckpt")
     val q = EmbedStream.startIndexIngest(
       spark.readStream.schema(newHalf.schema).parquet(src.toString)
         .filter(col("vec_id") < 0), // every row filtered: zero-row commits
@@ -230,7 +230,7 @@ class FoldDeltaSpec extends SparkSpec {
       .select("vec_id", "embedding", "scid", "dist", "c1")
       .orderBy("vec_id").limit(1)
       .withColumn("dist", col("dist") + 1L)
-    val forged = Files.createTempDirectory("fold_forged").toString
+    val forged = tempDir("fold_forged")
     victim.write.mode("overwrite").partitionBy("c1").parquet(forged)
     val ex = intercept[IllegalStateException] {
       EmbedStream.foldDelta(spark, base, forged)
@@ -265,7 +265,7 @@ class FoldDeltaSpec extends SparkSpec {
       unionIds.filter(_ % 7 == 3)
     assert(kill.exists(_ < n / 2) && kill.exists(_ >= n / 2),
       "fixture regression: kill-list must span base and delta")
-    val dvPath = Files.createTempDirectory("fold_dv").toString
+    val dvPath = tempDir("fold_dv")
     union.filter(col("vec_id").isInCollection(kill))
       .select("vec_id", "scid", "c1")
       .write.mode("overwrite").partitionBy("c1").parquet(dvPath)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -17,7 +15,7 @@ import graft.pc.{Aabb, Layout, Points}
   * chunks, files with different schemas). */
 class FooterSkippingSpec extends SparkSpec {
 
-  private lazy val tmp = Files.createTempDirectory("graft-footer-skip").toString
+  private lazy val tmp = tempDir("graft-footer-skip")
   private lazy val points = Points.fromLineitem(spark, sf001)
 
   // sf0.01 has ~60k points; 2048-row files give ~30 files per layout
@@ -171,7 +169,7 @@ class FooterSkippingSpec extends SparkSpec {
     val maxes = fs.listStatus(new org.apache.hadoop.fs.Path(path))
       .filter(_.getPath.getName.endsWith(".parquet"))
       .flatMap(f => Layout.readFooter(spark.sparkContext.hadoopConfiguration, f))
-      .map(_.ranges("i")._2.doubleValue)
+      .map(_.nums("i")._2.toDouble)
     assert(maxes.length == 4)
     for (c <- Seq(0.1, 0.3, 0.5, 0.75) ++ maxes) {
       exact(path, col("i") < c, is.count(_ < c).toLong)
@@ -193,7 +191,7 @@ class FooterSkippingSpec extends SparkSpec {
     val dir = new org.apache.hadoop.fs.Path(path)
     val footers = dir.getFileSystem(conf).listStatus(dir)
       .filter(_.getPath.getName.endsWith(".parquet")).map(f => Layout.readFooter(conf, f))
-    assert(footers.count(_.exists(!_.ranges.contains("x"))) == 1,
+    assert(footers.count(_.exists(!_.nums.contains("x"))) == 1,
       "the NaN chunk must carry no x bounds")
     exact(path, col("x") > 5.0, 1L)
     exact(path, col("x") >= 2.5, 3L)
@@ -211,6 +209,33 @@ class FooterSkippingSpec extends SparkSpec {
     exact(path, col("v") <= 1.0, 1L)
     exact(path, col("v") > 5.0, 0L)
     exact(path, col("v").isNull && col("id") >= 2L, 2L)
+  }
+
+  test("date, timestamp_ntz and string bounds prune and answer exactly") {
+    // one file per year; dates, timestamps and keys all sort by (year, month)
+    val path = artifact("typed", Seq(2021, 2022, 2023).map { y =>
+      spark.sql(s"""SELECT id, make_date($y, m, 1) AS d,
+        make_timestamp_ntz($y, m, 1, 12, 0, 0) AS ntz,
+        CAST(make_timestamp_ntz($y, m, 1, 12, 0, 0) AS TIMESTAMP) AS ltz,
+        concat('k$y-', lpad(CAST(m AS STRING), 2, '0')) AS s
+        FROM (SELECT id, CAST(id % 12 + 1 AS INT) AS m FROM range(${y * 100}, ${y * 100 + 12}))""")
+    })
+    def listed(cond: String, want: Long): Long = exact(path, expr(cond), want)
+    assert(listed("d >= DATE'2022-06-01'", 19L) == 2L)
+    assert(listed("d = DATE'2021-03-01'", 1L) == 1L)
+    // strict bounds count as inclusive: the file whose min is the literal stays
+    assert(listed("d < DATE'2021-01-01'", 0L) == 1L)
+    assert(listed("d < DATE'2020-12-31'", 0L) == 0L)
+    assert(listed("ntz < TIMESTAMP_NTZ'2021-02-01 12:00:00'", 1L) == 1L)
+    assert(listed("ntz <= TIMESTAMP_NTZ'2021-12-01 12:00:00'", 12L) == 1L)
+    assert(listed("ntz > TIMESTAMP_NTZ'2021-12-01 12:00:00'", 24L) == 3L)
+    assert(listed("ntz > TIMESTAMP_NTZ'2021-12-01 12:00:00.000001'", 24L) == 2L)
+    assert(listed("s = 'k2023-05'", 1L) == 1L)
+    assert(listed("s > 'k2022'", 24L) == 2L)
+    assert(listed("s < 'k2021-1'", 9L) == 1L)
+    assert(listed("s >= 'l'", 0L) == 0L)
+    // INT96 timestamps (Spark's default for TIMESTAMP) carry no usable bounds
+    assert(listed("ltz >= TIMESTAMP'2023-01-01 00:00:00'", 12L) == 3L)
   }
 
   test("a multi-file artifact whose files have different schemas") {

@@ -12,8 +12,7 @@ import graft.lake.LakeTable
 class LakeCatalogSpec extends SparkSpec {
 
   private lazy val root: String = {
-    val r = java.nio.file.Files.createTempDirectory("lake-cat").toString
-    DatasetCache.registerTempDir(r)
+    val r = tempDir("lake-cat")
     // prod.orders: two appends => versions 1..2
     val t = s"$r/prod/orders"
     LakeTable.append(spark, t,

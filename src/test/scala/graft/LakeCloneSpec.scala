@@ -11,19 +11,13 @@ import graft.lake.LakeTable
   * shallow clone lacks — survive the SOURCE's vacuum. */
 class LakeCloneSpec extends SparkSpec {
 
-  private def fresh(name: String): String = {
-    val d = Files.createTempDirectory(name).toString
-    DatasetCache.registerTempDir(d)
-    d
-  }
-
   private def df(ids: Range) = {
     import spark.implicits._
     ids.map(_.toLong).toDF("id").withColumn("v", col("id") * 3)
   }
 
   test("clone equals the source snapshot with zero data bytes copied") {
-    val (src, dst) = (fresh("clone_src"), fresh("clone_dst"))
+    val (src, dst) = (tempDir("clone_src"), tempDir("clone_dst"))
     LakeTable.append(spark, src, df(0 until 500).repartition(4))
     assert(LakeTable.cloneTable(src, dst) == 1L)
     val a = LakeTable.snapshot(spark, src).collect().map(_.toSeq).toSet
@@ -51,7 +45,7 @@ class LakeCloneSpec extends SparkSpec {
   }
 
   test("clone and source diverge independently") {
-    val (src, dst) = (fresh("div_src"), fresh("div_dst"))
+    val (src, dst) = (tempDir("div_src"), tempDir("div_dst"))
     LakeTable.append(spark, src, df(0 until 100))
     LakeTable.cloneTable(src, dst)
     LakeTable.append(spark, dst, df(100 until 150))
@@ -61,7 +55,7 @@ class LakeCloneSpec extends SparkSpec {
   }
 
   test("the clone survives the SOURCE's vacuum (the shallow-clone failure mode)") {
-    val (src, dst) = (fresh("vac_src"), fresh("vac_dst"))
+    val (src, dst) = (tempDir("vac_src"), tempDir("vac_dst"))
     LakeTable.append(spark, src, df(0 until 200).repartition(3))
     LakeTable.cloneTable(src, dst)
     // source moves on and vacuums its old files away
@@ -74,9 +68,9 @@ class LakeCloneSpec extends SparkSpec {
   }
 
   test("clone refuses a missing source and an existing target") {
-    val (src, dst) = (fresh("ref_src"), fresh("ref_dst"))
+    val (src, dst) = (tempDir("ref_src"), tempDir("ref_dst"))
     intercept[IllegalArgumentException] {
-      LakeTable.cloneTable(fresh("nope"), dst)
+      LakeTable.cloneTable(tempDir("nope"), dst)
     }
     LakeTable.append(spark, src, df(0 until 10))
     LakeTable.append(spark, dst, df(0 until 10))
@@ -86,7 +80,7 @@ class LakeCloneSpec extends SparkSpec {
   }
 
   test("constraints carry over to the clone") {
-    val (src, dst) = (fresh("c_src"), fresh("c_dst"))
+    val (src, dst) = (tempDir("c_src"), tempDir("c_dst"))
     LakeTable.append(spark, src, df(0 until 20))
     LakeTable.addConstraint(spark, src, "id_nonneg", "id >= 0")
     LakeTable.cloneTable(src, dst)

@@ -18,7 +18,7 @@ import graft.lake.LakeTable
 class LakeDataSourceSpec extends SparkSpec {
 
   private def mkTable(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("lake-dsv2").toString
+    val dir = tempDir("lake-dsv2")
     // three appends with DISJOINT id ranges → 3+ files with disjoint
     // log stats, the precondition for provable pruning
     Seq((0L, 100L), (100L, 200L), (200L, 300L)).foreach { case (lo, hi) =>
@@ -128,7 +128,7 @@ class LakeDataSourceSpec extends SparkSpec {
     * [60,90), category = f"cat_$d%03d" (zero-padded so lexicographic
     * order equals numeric order), ts = 2024-01-01 + d days. */
   private def mkTypedTable(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("lake-typed").toString
+    val dir = tempDir("lake-typed")
     Seq((0L, 30L), (30L, 60L), (60L, 90L)).foreach { case (lo, hi) =>
       LakeTable.append(spark, dir,
         spark.range(lo, hi).repartition(1).select(
@@ -185,7 +185,7 @@ class LakeDataSourceSpec extends SparkSpec {
     // strings with format delimiters, percent signs, non-ASCII, and
     // >64-byte values (truncated upper bounds) round-trip the log and
     // never lose rows
-    val dir2 = java.nio.file.Files.createTempDirectory("lake-oddstr").toString
+    val dir2 = tempDir("lake-oddstr")
     val odd = Seq("a;b", "c:d=e", "100%", "naïve—ü", "z" + ("y" * 100))
     import spark.implicits._
     LakeTable.append(spark, dir2, odd.toDF("s").repartition(1))

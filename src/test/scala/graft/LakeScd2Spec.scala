@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.events.EventOps
 import graft.lake.LakeTable
@@ -11,12 +9,6 @@ import graft.lake.LakeTable
   * new version), history stays time-travelable, and the tiling
   * invariant survives every apply. */
 class LakeScd2Spec extends SparkSpec {
-
-  private def freshTable(): String = {
-    val d = Files.createTempDirectory("graft_scd2").toString
-    DatasetCache.registerTempDir(d)
-    d
-  }
 
   /** A 3-user dimension: u1 tier 1 @ [10, MAX), u2 tier 2 @ [10, 40)
     * then tier 0 @ [40, MAX). */
@@ -91,7 +83,7 @@ class LakeScd2Spec extends SparkSpec {
   }
 
   test("SCD2 apply is one atomic lake MERGE; history time-travels") {
-    val t = freshTable()
+    val t = tempDir("graft_scd2")
     import spark.implicits._
     LakeTable.append(spark, t, seedDim())
     val v1 = LakeTable.latestVersion(t).get
@@ -124,12 +116,12 @@ class LakeScd2Spec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val t = freshTable()
+    val t = tempDir("graft_scd2")
     LakeTable.append(spark, t, seedDim())
     // a stream of (user_id, tier, ts_us) changes, applied per micro-batch
     // as one transactional MERGE each — the streaming CDC→SCD2 pipeline
     val mem = MemoryStream[(Long, Long, Long)]
-    val ckpt = Files.createTempDirectory("scd2_stream_ckpt").toString
+    val ckpt = tempDir("scd2_stream_ckpt")
     val q = mem.toDF().toDF("user_id", "tier", "ts_us").writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -155,7 +147,7 @@ class LakeScd2Spec extends SparkSpec {
   }
 
   test("a second apply chains versions and stays tiled") {
-    val t = freshTable()
+    val t = tempDir("graft_scd2")
     import spark.implicits._
     LakeTable.append(spark, t, seedDim())
     val c1 = Seq((1L, 3L, 50L)).toDF("user_id", "tier", "ts_us")

@@ -14,19 +14,13 @@ import graft.lake.LakeTable
   * crash-orphan invisibility, vacuum. */
 class LakeTableSpec extends SparkSpec {
 
-  private def freshTable(): String = {
-    val d = Files.createTempDirectory("graft_lake").toString
-    DatasetCache.registerTempDir(d)
-    d
-  }
-
   private def df(ids: Range) = {
     import spark.implicits._
     ids.map(_.toLong).toDF("id").withColumn("v", col("id") * 2)
   }
 
   test("append/overwrite/time travel: every version stays readable") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     val v1 = LakeTable.append(spark, t, df(0 until 10))
     val v2 = LakeTable.append(spark, t, df(10 until 30))
     val v3 = LakeTable.overwrite(spark, t, df(100 until 105))
@@ -40,7 +34,7 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("snapshot isolation: an open snapshot ignores a later overwrite") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 20))
     val pinned = LakeTable.snapshot(spark, t) // file list captured NOW
     LakeTable.overwrite(spark, t, df(0 until 3))
@@ -49,7 +43,7 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("concurrent appends all commit with contiguous versions, no loss") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 1))
     val pool = Executors.newFixedThreadPool(8)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
@@ -64,7 +58,7 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("concurrent overwrites serialize: last version wins, count is sane") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 10))
     val pool = Executors.newFixedThreadPool(4)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
@@ -81,7 +75,7 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("a crashed writer's staged files are invisible and vacuumable") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 10))
     // simulate a crash: data staged, no commit written
     df(0 until 99).write.parquet(s"$t/stage-crashed0000")
@@ -100,14 +94,14 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("vacuum clamps retention to the latest version (current state survives)") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 10))
     LakeTable.vacuum(t, retainFrom = 99L) // overshoot must NOT delete v1's files
     assert(LakeTable.snapshot(spark, t).count() == 10)
   }
 
   test("time travel to a nonexistent version fails instead of serving latest") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 5))
     intercept[IllegalArgumentException] {
       LakeTable.snapshot(spark, t, Some(99L)).count()
@@ -116,7 +110,7 @@ class LakeTableSpec extends SparkSpec {
 
   test("NaN stats endpoints never prune a file") {
     import spark.implicits._
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t,
       Seq(0.5, 2.0, Double.NaN).toDF("x").coalesce(1))
     val (kept, total) = LakeTable.prunedFiles(t, "x", 0.0, 3.0)
@@ -128,7 +122,7 @@ class LakeTableSpec extends SparkSpec {
   /** Two single-file commits of a FLOAT column: (0.1f, 0.3f), (0.5f, 0.7f). */
   private def floatTable(): String = {
     import spark.implicits._
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, Seq(0.1f, 0.3f).toDF("f").coalesce(1))
     LakeTable.append(spark, t, Seq(0.5f, 0.7f).toDF("f").coalesce(1))
     t
@@ -144,9 +138,10 @@ class LakeTableSpec extends SparkSpec {
     assert(floatReads(floatTable()) == Seq(3L, 3L, 1L, 1L))
   }
 
-  test("float bounds logged in Float.toString's short form still prune exactly") {
+  /** [[floatTable]] with its log rewritten as an older writer logged
+    * float bounds: `Float.toString`'s short form (0.3f as "0.3"). */
+  private def shortFormFloatTable(): String = {
     val t = floatTable()
-    // rewrite the commits as an older writer logged them: 0.3f as "0.3"
     val logs = Files.list(Paths.get(t, "_txlog")).toArray.map(_.asInstanceOf[java.nio.file.Path])
     val short = Seq(0.1f, 0.3f, 0.5f, 0.7f).map(f => BigDecimal(f.toDouble).toString -> f.toString)
     var rewritten = 0
@@ -156,11 +151,72 @@ class LakeTableSpec extends SparkSpec {
       if (now != old) { rewritten += 1; Files.writeString(p, now) }
     }
     assert(rewritten == 2, "both commits carry float bounds")
-    assert(floatReads(t) == Seq(3L, 3L, 1L, 1L))
+    t
+  }
+
+  test("float bounds logged in Float.toString's short form still prune exactly") {
+    assert(floatReads(shortFormFloatTable()) == Seq(3L, 3L, 1L, 1L))
+  }
+
+  test("library verbs prune short-form float logs exactly") {
+    val t = shortFormFloatTable()
+    val at = 0.3f.toDouble
+    assert(LakeTable.snapshotWhere(spark, t, "f", at, 1.0).count() == 3)
+    val (kept, total) = LakeTable.prunedFiles(t, "f", at, 1.0)
+    assert(total == 2 && kept.size == 2, s"kept $kept of $total files")
+    LakeTable.deleteWhere(spark, t, "f", at, at)
+    assert(LakeTable.snapshot(spark, t).count() == 3, "exactly the 0.3f row is deleted")
+    assert(LakeTable.snapshot(spark, t).filter(col("f") === 0.3f).count() == 0)
+  }
+
+  test("library verbs keep longs that round onto a double bound") {
+    import spark.implicits._
+    val t = tempDir("graft_lake")
+    val v = 1L << 60 // doubles are 128 apart below it, 256 above
+    // 2^60 - 50 and 2^60 + 100 compare as the double 2^60
+    LakeTable.append(spark, t, Seq(v - 50L, v - 300L).toDF("l").coalesce(1))
+    LakeTable.append(spark, t, Seq(v + 100L, v + 300L).toDF("l").coalesce(1))
+    val at = v.toDouble
+    for ((lo, hi) <- Seq((at, Double.PositiveInfinity), (Double.NegativeInfinity, at), (at, at))) {
+      val want = LakeTable.snapshot(spark, t).filter(col("l") >= lo && col("l") <= hi).count()
+      assert(want > 0 && LakeTable.snapshotWhere(spark, t, "l", lo, hi).count() == want,
+        s"[$lo, $hi]")
+    }
+    assert(LakeTable.deleteWhere(spark, t, "l", at, at) > 0)
+    assert(LakeTable.snapshot(spark, t).as[Long].collect().sorted.toSeq == Seq(v - 300L, v + 300L))
+  }
+
+  test("the logged stats string of every stats kind is pinned byte for byte") {
+    val t = tempDir("graft_lake")
+    val long = "é" * 40 // 80 UTF-8 bytes: the upper bound truncates to 64
+    LakeTable.append(spark, t, spark.sql(s"""SELECT * FROM VALUES
+      (CAST(-3 AS TINYINT), CAST(-300 AS SMALLINT), -7, 9007199254740993L,
+       CAST(0.3 AS FLOAT), 2.5D, TIMESTAMP_NTZ'2024-03-01 12:00:00.000001',
+       TIMESTAMP'2024-03-01 12:00:00', DATE'2024-03-01', 'a;b=c',
+       CAST(12.34 AS DECIMAL(10,2)), CAST('NaN' AS DOUBLE), CAST(NULL AS INT), 5L, 'p'),
+      (CAST(4 AS TINYINT), CAST(300 AS SMALLINT), 7, -1L,
+       CAST(-1.5 AS FLOAT), -0.1D, TIMESTAMP_NTZ'1969-12-31 23:59:59',
+       TIMESTAMP'2025-01-01 00:00:00', DATE'1960-01-01', '$long',
+       CAST(-5.00 AS DECIMAL(10,2)), CAST('NaN' AS DOUBLE), CAST(NULL AS INT), 6L, 'q')
+      AS t(b, s, i, l, f, d, ntz, ltz, dt, str, dec, nan, nul, `#rows`, `str$$x`)""")
+      .coalesce(1))
+    val (files, _) = LakeTable.snapshotFilesWithStats(t)
+    // no `#rows=2` count (a real column shades it); no entry for the ltz
+    // (INT96), decimal, NaN, all-null or `str$x` columns; the float as
+    // its exact double; the string escaped, its upper bound truncated
+    val logged =
+      "b=-3:4;s=-300:300;i=-7:7;l=-1:9007199254740993;" +
+      "f=-1.5:0.30000001192092896;d=-0.1:2.5;" +
+      "ntz=-1000000:1709294400000001;dt=-3653:19783;" +
+      "str$str=a%3bb%3dc:" +
+      "%c3%a9%c3%a9%c3%a9%c3%a9%c3%a9%c3%a9%c3%a9%c3%a9%c3%a9%c3%a9%c3%a9%c3%a9%c3%a9%c3%a9%c3%a9%c3%a9" +
+      "%c3%a9%c3%a9%c3%a9%c3%a9%c3%a9%c3%a9%c3%a9%c3%a9%c3%a9%c3%a9%c3%a9%c3%a9%c3%a9%c3%a9%c3%a9%c3%aa;" +
+      "#rows=5:6"
+    assert(files.map(_._2) == Seq(logged))
   }
 
   test("vacuum drops pre-retention files but keeps retained versions readable") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 10))       // v1
     LakeTable.overwrite(spark, t, df(0 until 4))     // v2: v1 files now dead
     LakeTable.append(spark, t, df(100 until 102))    // v3
@@ -172,7 +228,7 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("log stats prune files for range reads; results stay exact") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     // three appends with disjoint id ranges → three file groups whose
     // log stats partition the id axis
     LakeTable.append(spark, t, df(0 until 100).coalesce(1))
@@ -185,13 +241,13 @@ class LakeTableSpec extends SparkSpec {
     assert(rows.count() == 61) // inclusive range
     // conservative: a column with no stats (string) never prunes
     import spark.implicits._
-    val t2 = freshTable()
+    val t2 = tempDir("graft_lake")
     LakeTable.append(spark, t2, Seq("a", "b").toDF("s").coalesce(1))
     assert(LakeTable.prunedFiles(t2, "missing", 0, 1)._1.nonEmpty)
   }
 
   test("idempotent append: a replayed batch token commits exactly once") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     val v1 = LakeTable.appendIdempotent(spark, t, df(0 until 10), "job-a", 0L)
     assert(v1.contains(1L))
     // replay of the same (appId, version): no-op
@@ -203,9 +259,8 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("streaming sink: AvailableNow replay into the table is exactly-once") {
-    val t = freshTable()
-    val src = Files.createTempDirectory("lake_stream_src").toString
-    DatasetCache.registerTempDir(src)
+    val t = tempDir("graft_lake")
+    val src = tempDir("lake_stream_src")
     df(0 until 40).repartition(4).write.mode("overwrite").parquet(src)
     val schema = df(0 until 1).schema
     def run(ckpt: String): Unit = {
@@ -213,8 +268,7 @@ class LakeTableSpec extends SparkSpec {
         spark.readStream.schema(schema).parquet(src), t, "ingest", ckpt)
       q.awaitTermination(120000)
     }
-    val ckpt = Files.createTempDirectory("lake_stream_ckpt").toString
-    DatasetCache.registerTempDir(ckpt)
+    val ckpt = tempDir("lake_stream_ckpt")
     run(ckpt)
     val afterFirst = LakeTable.snapshot(spark, t).count()
     assert(afterFirst == 40)
@@ -225,15 +279,14 @@ class LakeTableSpec extends SparkSpec {
     // batches — the txn tokens make the replay a no-op instead of
     // doubling the table. (If the source had grown, the LakeSink
     // contract requires a new appId — see its scaladoc.)
-    val ckpt2 = Files.createTempDirectory("lake_stream_ckpt2").toString
-    DatasetCache.registerTempDir(ckpt2)
+    val ckpt2 = tempDir("lake_stream_ckpt2")
     run(ckpt2)
     assert(LakeTable.snapshot(spark, t).count() == 40,
       "replayed batch ids must hit the idempotence tokens")
   }
 
   test("checkpoint compaction: snapshots replay from the checkpoint, identically") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     (0 until 23).foreach(i => LakeTable.append(spark, t, df(i * 5 until i * 5 + 5)))
     LakeTable.overwrite(spark, t, df(0 until 7)) // v24
     LakeTable.append(spark, t, df(7 until 9))    // v25
@@ -258,7 +311,7 @@ class LakeTableSpec extends SparkSpec {
     // the point-cloud thesis one level up: append the cloud in spatial
     // slices (what a tiled ingest naturally produces) and range reads
     // prune WHOLE FILES from log stats before any parquet is opened
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     val pts = graft.pc.Points.fromLineitem(spark, sf0001)
     Seq((0.0, 333.0), (333.0, 666.0), (666.0, 1000.1)).foreach { case (lo, hi) =>
       LakeTable.append(spark, t,
@@ -272,7 +325,7 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("merge upserts copy-on-write: only files holding matched keys rewrite") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     // three disjoint single-file appends
     LakeTable.append(spark, t, df(0 until 100).coalesce(1))
     LakeTable.append(spark, t, df(100 until 200).coalesce(1))
@@ -300,7 +353,7 @@ class LakeTableSpec extends SparkSpec {
 
   test("merge rejects a schema that differs from the table's") {
     import spark.implicits._
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 5))
     val wrongType = Seq((1, 2)).toDF("id", "v") // int, table is long
     intercept[IllegalArgumentException] {
@@ -312,7 +365,7 @@ class LakeTableSpec extends SparkSpec {
     // with broadcast disabled the semi-join runs as a shuffle join —
     // input_file_name() must still resolve because it is projected in
     // the scan stage, before the exchange
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 50).coalesce(1))
     LakeTable.append(spark, t, df(50 until 100).coalesce(1))
     import spark.implicits._
@@ -329,7 +382,7 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("changesBetween (0, 0] on an existing table is the documented empty delta") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 5))
     val d = LakeTable.changesBetween(spark, t, 0L, 0L)
     assert(d.count() == 0)
@@ -337,7 +390,7 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("deleteWhere resolves columns case-insensitively like Spark does") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 10).coalesce(1))
     LakeTable.deleteWhere(spark, t, "ID", 0.0, 4.0)
     assert(LakeTable.snapshot(spark, t).count() == 5)
@@ -345,7 +398,7 @@ class LakeTableSpec extends SparkSpec {
 
   test("merge rejects duplicate update keys instead of duplicating rows") {
     import spark.implicits._
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 5))
     val dup = Seq((1L, -1L), (1L, -2L)).toDF("id", "v")
     intercept[IllegalArgumentException] {
@@ -356,7 +409,7 @@ class LakeTableSpec extends SparkSpec {
 
   test("deleteWhere rejects non-numeric and unknown columns") {
     import spark.implicits._
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t,
       Seq((1L, "alice"), (2L, "bob")).toDF("id", "name"))
     // a string column would cast to null and silently delete every row
@@ -370,7 +423,7 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("updateWhere rewrites only stats-affected files and applies assignments") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 100).coalesce(1))
     LakeTable.append(spark, t, df(100 until 200).coalesce(1))
     LakeTable.append(spark, t, df(200 until 300).coalesce(1))
@@ -392,7 +445,7 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("deleteWhere prunes unaffected files from stats and keeps results exact") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 100).coalesce(1))
     LakeTable.append(spark, t, df(100 until 200).coalesce(1))
     LakeTable.append(spark, t, df(200 until 300).coalesce(1))
@@ -408,7 +461,7 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("optimize zorder: compaction tightens stats so pruning bites both axes") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     // 6 appends of (x, y) data that interleave ranges — every file's
     // stats span nearly the whole domain, so nothing prunes
     import spark.implicits._
@@ -433,7 +486,7 @@ class LakeTableSpec extends SparkSpec {
 
   test("WriteSerializable: a DISJOINT concurrent append rebases DML instead of aborting") {
     import graft.lake.LakeTestHooks
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 100).repartition(1)) // v1
     var fired = false
     LakeTestHooks.withRaceHook { _ =>
@@ -450,7 +503,7 @@ class LakeTableSpec extends SparkSpec {
 
   test("WriteSerializable: an OVERLAPPING concurrent append conflicts loudly") {
     import graft.lake.LakeTestHooks
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 100).repartition(1))
     var fired = false
     val e = intercept[java.util.ConcurrentModificationException] {
@@ -468,7 +521,7 @@ class LakeTableSpec extends SparkSpec {
   test("WriteSerializable: merge rebases across key-disjoint appends, conflicts on overlap") {
     import spark.implicits._
     import graft.lake.LakeTestHooks
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 50).repartition(1))
     // disjoint keys: append 500.. while merging keys 0..9 → rebase
     var fired = false
@@ -496,7 +549,7 @@ class LakeTableSpec extends SparkSpec {
 
   test("WriteSerializable: maintenance (optimize/compact) rebases across ANY append") {
     import graft.lake.LakeTestHooks
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     (0 until 3).foreach(i =>
       LakeTable.append(spark, t, df(i * 10 until i * 10 + 10).repartition(1)))
     var fired = false
@@ -522,7 +575,7 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("compact bin-packs small files only, carrying well-sized files by reference") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     // one "big" file (10k rows) + six tiny ones
     LakeTable.append(spark, t, df(100000 until 110000).repartition(1))
     (0 until 6).foreach(i =>
@@ -551,7 +604,7 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("compact absorbs deletion vectors and is silent to change readers") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 100).repartition(1)) // v1
     LakeTable.append(spark, t, df(100 until 200).repartition(1)) // v2
     LakeTable.deleteWhereDV(spark, t, "id", 0, 9) // v3: DV on file 1
@@ -569,7 +622,7 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("change feed: append ranges are exact deltas; rewrites refuse") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 10))   // v1
     LakeTable.append(spark, t, df(10 until 25))  // v2
     LakeTable.append(spark, t, df(25 until 30))  // v3
@@ -591,7 +644,7 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("deleteWhereDV: merge-on-read delete commits without rewriting any data file") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 100)) // v1
     LakeTable.append(spark, t, df(100 until 200)) // v2
     val before = LakeTable.snapshotFiles(t)._1.toSet
@@ -605,7 +658,7 @@ class LakeTableSpec extends SparkSpec {
     assert(LakeTable.snapshot(spark, t).count() == 190)
     assert(LakeTable.snapshot(spark, t).agg(sum("id")).head.getLong(0) == 19655)
     // identical to the copy-on-write path on a twin table
-    val cow = freshTable()
+    val cow = tempDir("graft_lake")
     LakeTable.append(spark, cow, df(0 until 100))
     LakeTable.append(spark, cow, df(100 until 200))
     LakeTable.deleteWhere(spark, cow, "id", 20, 29)
@@ -616,7 +669,7 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("deletion vectors stack, prune-read exactly, and OPTIMIZE compacts them away") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 100))
     LakeTable.append(spark, t, df(100 until 200))
     LakeTable.deleteWhereDV(spark, t, "id", 20, 29)
@@ -652,7 +705,7 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("copy-on-write delete and update on a DV'd table respect the mask") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 100))
     LakeTable.deleteWhereDV(spark, t, "id", 0, 9)
     // CoW delete of an overlapping range: rewrites survivors DV-applied
@@ -670,7 +723,7 @@ class LakeTableSpec extends SparkSpec {
   test("model check: random op sequences match an in-memory reference at every version") {
     import spark.implicits._
     val rnd = new scala.util.Random(20260812L)
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     // model: id -> v, tracked after every commit; snapshots stored per
     // version so time travel can be re-checked at the end
     var model = Map.empty[Long, Long]
@@ -761,7 +814,7 @@ class LakeTableSpec extends SparkSpec {
   test("model check: timestamp verbs resolve through recorded wall-clock at every instant") {
     import spark.implicits._
     val rnd = new scala.util.Random(20260814L)
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     def toDf(m: Seq[(Long, Long)]) = m.toDF("id", "v")
     def freshRows(n: Int, taken: Set[Long]): Seq[(Long, Long)] =
       Seq.fill(n)(rnd.nextLong(1000L) -> rnd.nextLong(100L))
@@ -856,7 +909,7 @@ class LakeTableSpec extends SparkSpec {
 
   test("change feed: typed row changes for append/delete/update/merge") {
     import spark.implicits._
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 10))                        // v1
     LakeTable.deleteWhere(spark, t, "id", 3.0, 5.0)                   // v2
     LakeTable.updateWhere(spark, t, "id", 0.0, 1.0, Map("v" -> 999L)) // v3
@@ -893,7 +946,7 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("change feed: DV delete emits the same rows as copy-on-write") {
-    val (t1, t2) = (freshTable(), freshTable())
+    val (t1, t2) = (tempDir("graft_lake"), tempDir("graft_lake"))
     Seq(t1, t2).foreach(t => LakeTable.append(spark, t, df(0 until 50)))
     LakeTable.deleteWhere(spark, t1, "id", 10.0, 19.0)
     LakeTable.deleteWhereDV(spark, t2, "id", 10.0, 19.0)
@@ -904,7 +957,7 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("change feed: rewrites refuse; optimize is silent; vacuum respects retention") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 30))           // v1
     LakeTable.deleteWhere(spark, t, "id", 0.0, 4.0)      // v2 (cdc staged)
     LakeTable.overwrite(spark, t, df(100 until 130))     // v3 (whole-table)
@@ -929,7 +982,7 @@ class LakeTableSpec extends SparkSpec {
 
   test("change feed refuses a range spanning a schema evolution") {
     import spark.implicits._
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 5))                       // v1
     LakeTable.append(spark, t,                                      // v2: +w
       df(5 until 8).withColumn("w", col("id") + 100L),
@@ -944,7 +997,7 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("restore re-points an old snapshot metadata-only; history is preserved") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 100))             // v1
     LakeTable.append(spark, t, df(100 until 250))           // v2
     LakeTable.deleteWhere(spark, t, "id", 0.0, 199.0)       // v3
@@ -970,7 +1023,7 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("restore refuses when vacuum already reclaimed the target's files") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 50))              // v1
     LakeTable.overwrite(spark, t, df(50 until 60))          // v2 (v1 files dead)
     LakeTable.vacuum(t, retainFrom = 2L)                    // v1's files reclaimed
@@ -984,7 +1037,7 @@ class LakeTableSpec extends SparkSpec {
   }
 
   test("schema is pinned per commit; empty and missing tables behave") {
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     intercept[IllegalArgumentException] { LakeTable.snapshot(spark, t) }
     LakeTable.append(spark, t, df(0 until 5))
     LakeTable.overwrite(spark, t, df(0 until 0)) // empty overwrite
@@ -998,7 +1051,7 @@ class LakeTableSpec extends SparkSpec {
 
   test("schema evolution: mergeSchema append adds a column, old rows null-fill") {
     import spark.implicits._
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 5))
     // un-opted new column is rejected loudly (no silent clobber)
     val widened = Seq((100L, 200L, "x")).toDF("id", "v", "tag")
@@ -1023,7 +1076,7 @@ class LakeTableSpec extends SparkSpec {
 
   test("schema evolution: writers may omit nullable columns (null-filled)") {
     import spark.implicits._
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t,
       Seq((1L, 2L, "a")).toDF("id", "v", "tag"))
     // a narrower writer omits `tag`; the table schema must NOT shrink
@@ -1036,7 +1089,7 @@ class LakeTableSpec extends SparkSpec {
 
   test("schema evolution: type changes and case collisions fail loudly") {
     import spark.implicits._
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 3))
     val retyped = Seq((1L, "not-a-long")).toDF("id", "v")
     val e1 = intercept[IllegalArgumentException] {
@@ -1056,7 +1109,7 @@ class LakeTableSpec extends SparkSpec {
 
   test("decimal columns carry no log stats (unscaled-footer hazard) and never misprune") {
     import spark.implicits._
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     // parquet stores precision<=18 decimals as UNSCALED ints in footer
     // stats; recording those verbatim would prune wrongly — the contract
     // is: decimal columns contribute NO stats, files are kept, results
@@ -1078,7 +1131,7 @@ class LakeTableSpec extends SparkSpec {
 
   test("appends with infinities succeed; the column just loses its stats") {
     import spark.implicits._
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, Seq(
       (1L, 1.0), (2L, Double.PositiveInfinity), (3L, Double.NegativeInfinity))
       .toDF("id", "score"))
@@ -1090,7 +1143,7 @@ class LakeTableSpec extends SparkSpec {
 
   test("updateWhere: NULL and NaN assignments are exact; lossy casts still fail") {
     import spark.implicits._
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, Seq((1L, 1.5, "a"), (2L, 2.5, "b"), (10L, 9.0, "c"))
       .toDF("id", "score", "tag"))
     // SET tag = NULL — plain SQL, must commit
@@ -1109,7 +1162,7 @@ class LakeTableSpec extends SparkSpec {
 
   test("append omitting a NON-nullable column fails instead of null-filling") {
     import spark.implicits._
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 5)) // id, v: non-nullable longs
     val e = intercept[IllegalArgumentException] {
       LakeTable.append(spark, t, Seq(7L).toDF("id")) // omits non-null v
@@ -1120,7 +1173,7 @@ class LakeTableSpec extends SparkSpec {
 
   test("schema evolution: stats pruning still works across schema versions") {
     import spark.implicits._
-    val t = freshTable()
+    val t = tempDir("graft_lake")
     LakeTable.append(spark, t, df(0 until 100))
     LakeTable.append(spark, t,
       (1000 until 1100).map(i => (i.toLong, i.toLong * 2, i.toLong * 10))

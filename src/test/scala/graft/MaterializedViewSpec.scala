@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.lake.{LakeTable, MaterializedView}
@@ -10,12 +8,6 @@ import graft.lake.{LakeTable, MaterializedView}
   * to a from-scratch recompute after ANY supported DML history — the
   * delta-multiset rule has no partial credit. */
 class MaterializedViewSpec extends SparkSpec {
-
-  private def fresh(prefix: String): String = {
-    val d = Files.createTempDirectory(prefix).toString
-    DatasetCache.registerTempDir(d)
-    d
-  }
 
   private def rows(ids: Range) = {
     import spark.implicits._
@@ -37,8 +29,8 @@ class MaterializedViewSpec extends SparkSpec {
   }
 
   test("create builds the full state; incremental append refresh matches recompute") {
-    val src = fresh("graft_mv_src")
-    val view = fresh("graft_mv_view")
+    val src = tempDir("graft_mv_src")
+    val view = tempDir("graft_mv_view")
     LakeTable.append(spark, src, rows(0 until 100))
     MaterializedView.create(spark, view, src, Seq("g"), Seq("x"))
     assertMatches(view, src)
@@ -51,8 +43,8 @@ class MaterializedViewSpec extends SparkSpec {
   }
 
   test("refresh is idempotent and stale-proof: no source change → None") {
-    val src = fresh("graft_mv_src")
-    val view = fresh("graft_mv_view")
+    val src = tempDir("graft_mv_src")
+    val view = tempDir("graft_mv_view")
     LakeTable.append(spark, src, rows(0 until 20))
     MaterializedView.create(spark, view, src, Seq("g"), Seq("x"))
     assert(MaterializedView.refresh(spark, view).isEmpty)
@@ -60,8 +52,8 @@ class MaterializedViewSpec extends SparkSpec {
   }
 
   test("deletes and updates fold through the change feed, to group death") {
-    val src = fresh("graft_mv_src")
-    val view = fresh("graft_mv_view")
+    val src = tempDir("graft_mv_src")
+    val view = tempDir("graft_mv_view")
     LakeTable.append(spark, src, rows(0 until 50).repartition(4))
     MaterializedView.create(spark, view, src, Seq("g"), Seq("x"))
     // delete a slice, update another, then delete EVERY row of group g4
@@ -81,8 +73,8 @@ class MaterializedViewSpec extends SparkSpec {
 
   test("merge (upsert) folds incrementally") {
     import spark.implicits._
-    val src = fresh("graft_mv_src")
-    val view = fresh("graft_mv_view")
+    val src = tempDir("graft_mv_src")
+    val view = tempDir("graft_mv_view")
     LakeTable.append(spark, src, rows(0 until 40))
     MaterializedView.create(spark, view, src, Seq("g"), Seq("x"))
     LakeTable.merge(spark, src,
@@ -92,8 +84,8 @@ class MaterializedViewSpec extends SparkSpec {
   }
 
   test("whole-table rewrite falls back to full recompute, still exact") {
-    val src = fresh("graft_mv_src")
-    val view = fresh("graft_mv_view")
+    val src = tempDir("graft_mv_src")
+    val view = tempDir("graft_mv_view")
     LakeTable.append(spark, src, rows(0 until 30))
     MaterializedView.create(spark, view, src, Seq("g"), Seq("x"))
     LakeTable.overwrite(spark, src, rows(500 until 620)) // no row-level feed
@@ -106,8 +98,8 @@ class MaterializedViewSpec extends SparkSpec {
 
   test("null group keys and null measures carry SQL semantics through deltas") {
     import spark.implicits._
-    val src = fresh("graft_mv_src")
-    val view = fresh("graft_mv_view")
+    val src = tempDir("graft_mv_src")
+    val view = tempDir("graft_mv_view")
     val withNulls = Seq[(java.lang.Long, String, java.lang.Long)](
       (1L, null, 10L), (2L, null, null), (3L, "a", null), (4L, "a", 5L))
       .toDF("id", "g", "x")
@@ -128,8 +120,8 @@ class MaterializedViewSpec extends SparkSpec {
   }
 
   test("random DML storm: interleaved refreshes always equal recompute") {
-    val src = fresh("graft_mv_src")
-    val view = fresh("graft_mv_view")
+    val src = tempDir("graft_mv_src")
+    val view = tempDir("graft_mv_view")
     val rnd = new scala.util.Random(42)
     LakeTable.append(spark, src, rows(0 until 60).repartition(3))
     MaterializedView.create(spark, view, src, Seq("g"), Seq("x"))
@@ -172,8 +164,8 @@ class MaterializedViewSpec extends SparkSpec {
   }
 
   test("min/max views: appends fold incrementally, exact extrema") {
-    val src = fresh("graft_mv_src")
-    val view = fresh("graft_mv_view")
+    val src = tempDir("graft_mv_src")
+    val view = tempDir("graft_mv_view")
     LakeTable.append(spark, src, rows(0 until 50))
     MaterializedView.create(spark, view, src, Seq("g"), Seq("x"), Seq("x"))
     assertMatchesMM(view, src)
@@ -190,8 +182,8 @@ class MaterializedViewSpec extends SparkSpec {
   }
 
   test("min/max views: a delete in the range triggers the exact full-recompute fallback") {
-    val src = fresh("graft_mv_src")
-    val view = fresh("graft_mv_view")
+    val src = tempDir("graft_mv_src")
+    val view = tempDir("graft_mv_view")
     LakeTable.append(spark, src, rows(0 until 50).repartition(2))
     MaterializedView.create(spark, view, src, Seq("g"), Seq("x"), Seq("x"))
     // delete the global maximum of group g4 (id 49, x = 49): the stored
@@ -210,8 +202,8 @@ class MaterializedViewSpec extends SparkSpec {
   }
 
   test("sum-only views still fold deletes incrementally (fallback is min/max-scoped)") {
-    val src = fresh("graft_mv_src")
-    val view = fresh("graft_mv_view")
+    val src = tempDir("graft_mv_src")
+    val view = tempDir("graft_mv_view")
     LakeTable.append(spark, src, rows(0 until 50).repartition(2))
     MaterializedView.create(spark, view, src, Seq("g"), Seq("x"))
     LakeTable.deleteWhere(spark, src, "id", 10, 19)
@@ -223,28 +215,28 @@ class MaterializedViewSpec extends SparkSpec {
 
   test("min/max create refuses non-orderable columns; old specs read back minmax-free") {
     import spark.implicits._
-    val src = fresh("graft_mv_src")
+    val src = tempDir("graft_mv_src")
     LakeTable.append(spark, src,
       Seq((1L, "a", Seq(1.0))).toDF("id", "g", "arr"))
     intercept[IllegalArgumentException] {
-      MaterializedView.create(spark, fresh("graft_mv_view"), src,
+      MaterializedView.create(spark, tempDir("graft_mv_view"), src,
         Seq("g"), Seq.empty, Seq("arr"))
     }
   }
 
   test("create refuses unknown columns and decimal measures") {
     import spark.implicits._
-    val src = fresh("graft_mv_src")
+    val src = tempDir("graft_mv_src")
     LakeTable.append(spark, src, rows(0 until 5))
     intercept[IllegalArgumentException] {
-      MaterializedView.create(spark, fresh("graft_mv_view"), src,
+      MaterializedView.create(spark, tempDir("graft_mv_view"), src,
         Seq("nope"), Seq("x"))
     }
-    val dsrc = fresh("graft_mv_src")
+    val dsrc = tempDir("graft_mv_src")
     LakeTable.append(spark, dsrc, Seq((1L, "a", BigDecimal(1)))
       .toDF("id", "g", "d"))
     intercept[IllegalArgumentException] {
-      MaterializedView.create(spark, fresh("graft_mv_view"), dsrc,
+      MaterializedView.create(spark, tempDir("graft_mv_view"), dsrc,
         Seq("g"), Seq("d"))
     }
   }

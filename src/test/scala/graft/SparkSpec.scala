@@ -36,6 +36,12 @@ trait SparkSpec extends AnyFunSuite {
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 
+  /** A fresh directory under the system temp dir, deleted at JVM exit
+    * ([[DatasetCache.registerTempDir]]), so suite runs leave no data
+    * behind. */
+  def tempDir(prefix: String): String =
+    DatasetCache.registerTempDir(java.nio.file.Files.createTempDirectory(prefix).toString)
+
   /** A session on the shared context WITHOUT the graft extensions (the
     * shared session has them on by default — `spark.sql.extensions`
     * propagates through the SparkContext conf to every new session, so

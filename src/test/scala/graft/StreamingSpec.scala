@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.events.EventOps
@@ -33,8 +32,8 @@ class StreamingSpec extends SparkSpec {
 
   private def runStream(build: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
       sink: String): Unit = {
-    val src = Files.createTempDirectory("evt_stream").toString
-    val ckpt = Files.createTempDirectory("evt_ckpt").toString
+    val src = tempDir("evt_stream")
+    val ckpt = tempDir("evt_ckpt")
     // replay the batch table as a 4-file stream
     eventsBatch.repartition(4).write.mode("overwrite").parquet(src)
     val stream = spark.readStream.schema(eventsBatch.schema).parquet(src)
@@ -94,7 +93,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val mem = MemoryStream[(Long, String)]
     val df = mem.toDF().toDF("rec_id", "fp")
-    val ckpt = Files.createTempDirectory("dedup_ckpt").toString
+    val ckpt = tempDir("dedup_ckpt")
     val q = EventStream.streamingDedup(df, Seq("fp")).writeStream
       .format("memory").queryName("dedup_sink").outputMode("append")
       .option("checkpointLocation", ckpt).start()
@@ -114,8 +113,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream-stream interval join equals the batch join") {
-    val src = Files.createTempDirectory("ssj_stream").toString
-    val ckpt = Files.createTempDirectory("ssj_ckpt").toString
+    val src = tempDir("ssj_stream")
+    val ckpt = tempDir("ssj_ckpt")
     eventsBatch.repartition(4).write.mode("overwrite").parquet(src)
     def split(df: org.apache.spark.sql.DataFrame) = (
       df.filter(col("event_type") === "click"),
@@ -145,7 +144,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val mem = MemoryStream[(Long, String, java.sql.Timestamp)]
     val df = mem.toDF().toDF("rec_id", "fp", "event_time")
-    val ckpt = Files.createTempDirectory("dedup_wm_ckpt").toString
+    val ckpt = tempDir("dedup_wm_ckpt")
     val q = EventStream
       .streamingDedup(df, Seq("fp"), eventTimeCol = Some("event_time"))
       .writeStream
@@ -178,7 +177,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3)))
     val mem = MemoryStream[(Long, Long, String, Double)]
     val df = mem.toDF().toDF("user_id", "ts", "event_type", "value")
-    val ckpt = Files.createTempDirectory("evt_ckpt2").toString
+    val ckpt = tempDir("evt_ckpt2")
     val q = EventStream.runningUserTotals(df).writeStream
       .format("memory").queryName("totals_sink").outputMode("update")
       .option("checkpointLocation", ckpt).start()
@@ -217,7 +216,7 @@ class StreamingSpec extends SparkSpec {
       .sortBy(r => (r._2, r._1))
     val mem = MemoryStream[(Long, Long, Long, String)]
     val df = mem.toDF().toDF("event_id", "ts", "user_id", "event_type")
-    val ckpt = Files.createTempDirectory("evt_ckpt3").toString
+    val ckpt = tempDir("evt_ckpt3")
     val q = EventStream.streamingTransitions(df).writeStream
       .format("memory").queryName("trans_sink").outputMode("append")
       .option("checkpointLocation", ckpt).start()
@@ -252,7 +251,7 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[(Long, Long, Long, String, Double)]
     val df = mem.toDF()
       .toDF("event_id", "ts", "user_id", "event_type", "value")
-    val ckpt = Files.createTempDirectory("attr_ckpt").toString
+    val ckpt = tempDir("attr_ckpt")
     val q = EventStream.streamingAttribution(df).writeStream
       .format("memory").queryName("attr_sink").outputMode("append")
       .option("checkpointLocation", ckpt).start()
@@ -285,7 +284,7 @@ class StreamingSpec extends SparkSpec {
       .sortBy(r => (r._2, r._1))
     val mem = MemoryStream[(Long, Long, Long, String)]
     val df = mem.toDF().toDF("event_id", "ts", "user_id", "event_type")
-    val ckpt = Files.createTempDirectory("funnel_ckpt").toString
+    val ckpt = tempDir("funnel_ckpt")
     val q = EventStream.streamingFunnel(df).writeStream
       .format("memory").queryName("funnel_sink").outputMode("append")
       .option("checkpointLocation", ckpt).start()
@@ -323,7 +322,7 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[(Long, Long, Long, String, Double)]
     val df = mem.toDF()
       .toDF("event_id", "ts", "user_id", "event_type", "value")
-    val ckpt = Files.createTempDirectory("pit_ckpt").toString
+    val ckpt = tempDir("pit_ckpt")
     val q = EventStream.streamingPitFeatures(df).writeStream
       .format("memory").queryName("pit_sink").outputMode("append")
       .option("checkpointLocation", ckpt).start()
@@ -359,7 +358,7 @@ class StreamingSpec extends SparkSpec {
       .sortBy(r => (r._2, r._1))
     val mem = MemoryStream[(Long, Long, Long, String)]
     val df = mem.toDF().toDF("event_id", "ts", "user_id", "event_type")
-    val ckpt = Files.createTempDirectory("ret_ckpt").toString
+    val ckpt = tempDir("ret_ckpt")
     val q = EventStream.streamingRetention(df).writeStream
       .format("memory").queryName("ret_sink").outputMode("append")
       .option("checkpointLocation", ckpt).start()
@@ -398,7 +397,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1)))
     val mem = MemoryStream[(Long, String)]
     val df = mem.toDF().toDF("user_id", "event_type")
-    val ckpt = Files.createTempDirectory("mg_ckpt").toString
+    val ckpt = tempDir("mg_ckpt")
     val q = EventStream.typeHeavyCandidates(df, 2 * denom).writeStream
       .format("memory").queryName("mg_sink").outputMode("update")
       .option("checkpointLocation", ckpt).start()
