@@ -135,7 +135,7 @@ object Aabb {
     * zero-area bounds (single point / collinear data) get size 1.0 so
     * everything lands in one window instead of dividing by zero. */
   def gridDerivation(bounds: Aabb, count: Long, sigma: Int,
-      batchSize: Long = 524288L): (Double, Double, Int) = {
+      batchSize: Long = Layout.BatchSize): (Double, Double, Int) = {
     val numBatches = math.max(1L, count / batchSize)
     val raw = math.round(math.sqrt(bounds.area / (numBatches.toDouble / sigma))).toDouble
     val size = if (raw > 0.0) raw else 1.0
@@ -159,7 +159,7 @@ object Aabb {
       bounds: Aabb, // XY bounds of the data
       count: Long,
       sigma: Int,
-      batchSize: Long = 524288L): (Seq[Aabb], Double) = {
+      batchSize: Long = Layout.BatchSize): (Seq[Aabb], Double) = {
     val (size, acc, splits) = gridDerivation(bounds, count, sigma, batchSize)
     val windows = gridCoverage(bounds, Seq(acc * size, acc * size))
     val cells = windows.flatMap { w =>
@@ -184,7 +184,7 @@ object Aabb {
   val MaxQuadtreeDepth: Int = 12
 
   def quadtreeDerivation(bounds: Aabb, count: Long,
-      batchSize: Long = 524288L): (Aabb, Int) = {
+      batchSize: Long = Layout.BatchSize): (Aabb, Int) = {
     val dx = bounds.upper(0) - bounds.lower(0)
     val dy = bounds.upper(1) - bounds.lower(1)
     val size = math.max(dx, dy) + 0.1
@@ -202,7 +202,7 @@ object Aabb {
   def quadtreePartitionCells(
       bounds: Aabb,
       count: Long,
-      batchSize: Long = 524288L): (Seq[Aabb], Int) = {
+      batchSize: Long = Layout.BatchSize): (Seq[Aabb], Int) = {
     val (box, depth) = quadtreeDerivation(bounds, count, batchSize)
     (quadtreeCells(box, depth), depth)
   }

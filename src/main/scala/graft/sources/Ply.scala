@@ -8,7 +8,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
-import graft.pc.PcSchema
+import graft.pc.{Layout, PcSchema}
 
 /** PLY point-cloud reader/writer (reference: pc-io/src/ply.rs:39-360).
   *
@@ -224,7 +224,7 @@ object Ply {
       }
       require(rows != null, s"no `$element` element in $path")
       spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, math.max(1, rows.size / 524288 + 1)),
+        spark.sparkContext.parallelize(rows, math.max(1, (rows.size / Layout.BatchSize + 1).toInt)),
         schema)
     } finally in.close()
   }

@@ -15,7 +15,7 @@ object LasConvert {
 
   /** Plain convert: LAS → Parquet + importance column. */
   def toParquet(spark: SparkSession, lasPath: String, outPath: String,
-      seed: Long = 42L, rowGroupRows: Long = 524288L): Unit =
+      seed: Long = 42L, rowGroupRows: Long = Layout.BatchSize): Unit =
     Points.withImportance(read(spark, lasPath), seed)
       .write.mode("overwrite")
       .option("maxRecordsPerFile", rowGroupRows)

@@ -1,6 +1,5 @@
 package graft.sources.las
 
-import java.nio.{ByteBuffer, ByteOrder}
 import java.util.OptionalLong
 
 import scala.jdk.CollectionConverters._
@@ -16,6 +15,9 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
+import graft.pc.Layout
+import graft.sources.las.laz.LazFormat
 
 /** Hadoop-conf plumbing: the source must honor `spark.hadoop.*` settings
   * (custom filesystems, credentials) like any built-in file source.
@@ -47,14 +49,22 @@ final class SerializableHadoopConf(@transient var value: Configuration)
   }
 }
 
-/** Spark DSv2 source for LAS point clouds — the faithful port of the
-  * reference's custom provider (pc-io/src/las/source.rs:34-138,
-  * pc-io/src/las/provider.rs:33-182), re-expressed on the connector API:
+/** Spark DSv2 source for LAS and LAZ point clouds — the faithful port of
+  * the reference's custom provider (pc-io/src/las/source.rs:34-138,
+  * pc-io/src/las/provider.rs:33-182), re-expressed on the connector API.
+  * Both formats share one record codec ([[LasFormat]]: `readRaw` and
+  * `project`) and one scan path:
   *
-  *  - one `InputPartition` per 512Ki-point slice per file (the
-  *    reference's chunk-parallel decode — parallelism *between* tasks
-  *    instead of a rayon pool inside one partition);
-  *  - `SupportsPushDownRequiredColumns`: only requested fields decode;
+  *  - one [[LasSpan]] per task: a byte span of one file plus its chunks'
+  *    byte and point counts — a 512Ki-point slice of a LAS file is one
+  *    raw chunk, a LAZ span is a run of chunk-table chunks of about as
+  *    many points (the reference's chunk-parallel decode, as parallelism
+  *    *between* tasks instead of a rayon pool inside one partition);
+  *  - one reader: read the span once, then per chunk raw records or the
+  *    LAZ pointwise/layered decoder, then project; a zero-column read
+  *    (`count()`) opens no file;
+  *  - `SupportsPushDownRequiredColumns`: only requested fields project,
+  *    and the layered LAZ decoder decodes only their layers;
   *  - `SupportsPushDownFilters`: x/y/z range predicates prune whole
   *    files against header bounds (I1) but remain residual — *inexact*
   *    pushdown, exactly the reference's contract
@@ -62,7 +72,8 @@ final class SerializableHadoopConf(@transient var value: Configuration)
   *  - `SupportsReportStatistics`: exact row count + byte size from the
   *    headers (I5).
   *
-  * Usage: `spark.read.format("las").load(path)` (or directory of .las).
+  * Usage: `spark.read.format("las").load(path)` (a file, or a directory
+  * of .las/.laz files).
   */
 class LasDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "las"
@@ -162,45 +173,42 @@ object LasPruning {
     case _ => false
   }
 
-  /** Can a record inside `bounds` possibly satisfy `f`? */
+  /** Can a record inside `bounds` possibly satisfy `f`? A NaN literal
+    * prunes nothing: Spark orders NaN above every double, so `x < NaN`
+    * holds on every row (`LakeStatsPruning` reads it the same way). */
   def mayMatch(f: Filter, bounds: Map[String, (Double, Double)]): Boolean = f match {
     case GreaterThan(a, v: Number) =>
-      bounds.get(a).forall(_._2 > v.doubleValue)
+      nan(v) || bounds.get(a).forall(_._2 > v.doubleValue)
     case GreaterThanOrEqual(a, v: Number) =>
-      bounds.get(a).forall(_._2 >= v.doubleValue)
+      nan(v) || bounds.get(a).forall(_._2 >= v.doubleValue)
     case LessThan(a, v: Number) =>
-      bounds.get(a).forall(_._1 < v.doubleValue)
+      nan(v) || bounds.get(a).forall(_._1 < v.doubleValue)
     case LessThanOrEqual(a, v: Number) =>
-      bounds.get(a).forall(_._1 <= v.doubleValue)
+      nan(v) || bounds.get(a).forall(_._1 <= v.doubleValue)
     case EqualTo(a, v: Number) =>
-      bounds.get(a).forall(b => b._1 <= v.doubleValue && v.doubleValue <= b._2)
+      nan(v) || bounds.get(a).forall(b => b._1 <= v.doubleValue && v.doubleValue <= b._2)
     case And(l, r) => mayMatch(l, bounds) && mayMatch(r, bounds)
     case Or(l, r) => mayMatch(l, bounds) || mayMatch(r, bounds)
     case _ => true
   }
+
+  private def nan(v: Number): Boolean = v.doubleValue.isNaN
 }
 
-final case class LasInputPartition(
-    path: String, pointFormat: Int, recordLength: Int, pointOffset: Long,
-    start: Long, count: Long,
-    sx: Double, sy: Double, sz: Double,
-    ox: Double, oy: Double, oz: Double) extends InputPartition
-
-/** A run of consecutive LAZ chunks (contiguous in the file — one read,
-  * decoded chunk-by-chunk; chunks are the format's independent decode
-  * units, mirroring the reference's chunk-table partitioning).
-  * `extraCount` is the record's extra-bytes tail length. */
-final case class LazInputPartition(
-    path: String, pointFormat: Int, extraCount: Int,
-    firstChunkOffset: Long, chunkBytes: Array[Long], chunkPoints: Array[Long],
-    sx: Double, sy: Double, sz: Double,
-    ox: Double, oy: Double, oz: Double) extends InputPartition
+/** One read task: a contiguous byte span of `path` holding consecutive
+  * chunks of point records, with each chunk's byte length and point count.
+  * A LAS slice is one uncompressed chunk; a LAZ span is a run of the
+  * chunk table's independently decodable chunks. `header` carries the
+  * point format, extra-bytes tail, scale/offset and compression. */
+final case class LasSpan(path: String, header: LasFormat.LasHeader, start: Long,
+    chunkBytes: Array[Long], chunkPoints: Array[Long]) extends InputPartition
 
 class LasScan(fullSchema: StructType, required: StructType,
     headers: Seq[(String, LasFormat.LasHeader)], pushed: Array[Filter])
     extends Scan with Batch with SupportsReportStatistics {
 
-  val ChunkRows: Long = 524288L // reference batch size (pc-io/src/config.rs:3)
+  /** Points per read task (the reference's batch size). */
+  val ChunkRows: Long = Layout.BatchSize
 
   override def readSchema(): StructType = required
 
@@ -212,36 +220,29 @@ class LasScan(fullSchema: StructType, required: StructType,
 
   override def planInputPartitions(): Array[InputPartition] =
     survivors.flatMap { case (f, h) =>
-      if (h.laz.isEmpty) {
-        (0L until h.pointCount by ChunkRows).map { start =>
-          LasInputPartition(f, h.pointFormat, h.recordLength, h.pointOffset,
-            start, math.min(ChunkRows, h.pointCount - start),
-            h.scale._1, h.scale._2, h.scale._3,
-            h.offset._1, h.offset._2, h.offset._3): InputPartition
-        }
-      } else {
-        // LAZ: the chunk table defines the independent decode units; group
-        // consecutive chunks into ~ChunkRows-point partitions (one
-        // contiguous read each)
-        val chunks = graft.sources.las.laz.LazFormat.readChunks(
-          LasHadoopConf.sessionConf(), f, h)
-        val groups = scala.collection.mutable.ArrayBuffer.empty[Vector[graft.sources.las.laz.LazFormat.LazChunk]]
-        var cur = Vector.empty[graft.sources.las.laz.LazFormat.LazChunk]
-        var curPoints = 0L
-        chunks.foreach { c =>
-          if (cur.nonEmpty && curPoints + c.pointCount > ChunkRows) {
-            groups += cur; cur = Vector.empty; curPoints = 0L
+      // the independent decode units — ChunkRows-point slices of raw
+      // records, or the LAZ chunk table's chunks — grouped into
+      // ~ChunkRows-point spans (one contiguous read each)
+      val chunks =
+        if (h.laz.isEmpty)
+          (0L until h.pointCount by ChunkRows).map { first =>
+            val n = math.min(ChunkRows, h.pointCount - first)
+            LazFormat.LazChunk(h.pointOffset + first * h.recordLength, n * h.recordLength, first, n)
           }
-          cur :+= c; curPoints += c.pointCount
+        else LazFormat.readChunks(LasHadoopConf.sessionConf(), f, h)
+      val groups = scala.collection.mutable.ArrayBuffer.empty[Vector[LazFormat.LazChunk]]
+      var cur = Vector.empty[LazFormat.LazChunk]
+      var curPoints = 0L
+      chunks.foreach { c =>
+        if (cur.nonEmpty && curPoints + c.pointCount > ChunkRows) {
+          groups += cur; cur = Vector.empty; curPoints = 0L
         }
-        if (cur.nonEmpty) groups += cur
-        groups.map { g =>
-          LazInputPartition(f, h.pointFormat,
-            h.extraBytes,
-            g.head.fileOffset, g.map(_.byteLen).toArray, g.map(_.pointCount).toArray,
-            h.scale._1, h.scale._2, h.scale._3,
-            h.offset._1, h.offset._2, h.offset._3): InputPartition
-        }
+        cur :+= c; curPoints += c.pointCount
+      }
+      if (cur.nonEmpty) groups += cur
+      groups.map { g =>
+        LasSpan(f, h, g.head.fileOffset, g.map(_.byteLen).toArray,
+          g.map(_.pointCount).toArray): InputPartition
       }
     }.toArray
 
@@ -267,110 +268,6 @@ class LasReaderFactory(fieldCodes: Array[Int],
     confBc: org.apache.spark.broadcast.Broadcast[SerializableHadoopConf])
     extends PartitionReaderFactory {
 
-  /** Project one decoded LAZ point through the semantic field codes
-    * (same contract as [[LasFormat.decode]] for raw records); extended
-    * records (formats 6-8) read the 4-bit returns / extFlags / i16 scan
-    * angle / nir fields instead of the legacy packed byte. */
-  private def projectLaz(pt: graft.sources.las.laz.LazPoint, p: LazInputPartition,
-      out: Array[Any]): Unit = {
-    val ext = LasFormat.isExtended(p.pointFormat)
-    var i = 0
-    while (i < fieldCodes.length) {
-      out(i) = fieldCodes(i) match {
-        case 0 => pt.x * p.sx + p.ox
-        case 1 => pt.y * p.sy + p.oy
-        case 2 => pt.z * p.sz + p.oz
-        case 3 => pt.intensity
-        case 4 =>
-          if (ext) (pt.returns & 0x0f).toShort else (pt.flags & 0x07).toShort
-        case 5 =>
-          if (ext) ((pt.returns >> 4) & 0x0f).toShort
-          else ((pt.flags >> 3) & 0x07).toShort
-        case 6 =>
-          if (ext) ((pt.extFlags >> 6) & 0x01).toShort
-          else ((pt.flags >> 6) & 0x01).toShort
-        case 7 =>
-          if (ext) ((pt.extFlags >> 7) & 0x01) == 1
-          else ((pt.flags >> 7) & 0x01) == 1
-        case 8 => // legacy strips the flag bits like the reference's reader
-          if (ext) pt.classification.toShort else (pt.classification & 0x1f).toShort
-        case 9 => // i8 "rank" (legacy) vs i16 0.006-degree units (extended)
-          if (ext) pt.scanAngle.toShort else pt.scanAngleRank.toByte.toShort
-        case 10 => pt.userData.toShort
-        case 11 => pt.pointSourceId
-        case 12 => java.lang.Double.longBitsToDouble(pt.gpsTime)
-        case 13 => pt.red
-        case 14 => pt.green
-        case 15 => pt.blue
-        case 16 => ((pt.extFlags >> 4) & 0x03).toShort
-        case 17 => pt.nir
-        case 18 =>
-          if (ext) (pt.extFlags & 0x01) == 1
-          else ((pt.classification >> 5) & 0x01) == 1
-        case 19 =>
-          if (ext) ((pt.extFlags >> 1) & 0x01) == 1
-          else ((pt.classification >> 6) & 0x01) == 1
-        case 20 =>
-          if (ext) ((pt.extFlags >> 2) & 0x01) == 1
-          else ((pt.classification >> 7) & 0x01) == 1
-        case 21 => ext && ((pt.extFlags >> 3) & 0x01) == 1
-        case 22 => // degrees as f32
-          if (ext) pt.scanAngle * 0.006f
-          else pt.scanAngleRank.toByte.toFloat
-        case 23 => pt.extra // decoders hand out a fresh array per point
-      }
-      i += 1
-    }
-  }
-
-  private def createLazReader(p: LazInputPartition): PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
-      import graft.sources.las.laz.LazFormat
-      private val conf = confBc.value.value
-      private val bytes = {
-        val path = new Path(p.path)
-        val in = path.getFileSystem(conf).open(path)
-        try {
-          val totalL = p.chunkBytes.sum
-          require(totalL <= Int.MaxValue.toLong,
-            s"LAZ partition too large to buffer: $totalL bytes")
-          val buf = new Array[Byte](totalL.toInt)
-          in.readFully(p.firstChunkOffset, buf)
-          buf
-        } finally in.close()
-      }
-      private val out = new Array[Any](fieldCodes.length)
-      private var chunk = -1
-      private var chunkStart = 0
-      private var decoder: LazFormat.ChunkReader = null
-
-      override def next(): Boolean = {
-        while (decoder == null || !decoder.next()) {
-          chunk += 1
-          if (chunk >= p.chunkBytes.length) return false
-          if (chunk > 0) chunkStart += p.chunkBytes(chunk - 1).toInt
-          decoder =
-            if (LasFormat.isExtended(p.pointFormat))
-              // layered framing: only the projected layers decode
-              new LazFormat.ChunkDecoder14(bytes, chunkStart,
-                chunkStart + p.chunkBytes(chunk).toInt, p.pointFormat,
-                p.chunkPoints(chunk), fieldCodes, p.extraCount)
-            else
-              new LazFormat.ChunkDecoder(bytes, chunkStart,
-                chunkStart + p.chunkBytes(chunk).toInt, p.pointFormat,
-                p.chunkPoints(chunk), p.extraCount)
-        }
-        true
-      }
-
-      override def get(): InternalRow = {
-        projectLaz(decoder.point, p, out)
-        new GenericInternalRow(out.clone())
-      }
-
-      override def close(): Unit = ()
-    }
-
   /** Zero-column projections (`count()`) need no point bytes at all: the
     * row count is already exact from the header / chunk table, so emit
     * empty rows without opening the file — the extreme case of the
@@ -384,46 +281,60 @@ class LasReaderFactory(fieldCodes: Array[Int],
       override def close(): Unit = ()
     }
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = partition match {
-    case laz: LazInputPartition if fieldCodes.isEmpty =>
-      createCountingReader(laz.chunkPoints.sum)
-    case las: LasInputPartition if fieldCodes.isEmpty =>
-      createCountingReader(las.count)
-    case laz: LazInputPartition => createLazReader(laz)
-    case las: LasInputPartition => createLasReader(las)
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val p = partition.asInstanceOf[LasSpan]
+    if (fieldCodes.isEmpty) createCountingReader(p.chunkPoints.sum)
+    else createSpanReader(p)
   }
 
-  private def createLasReader(p: LasInputPartition): PartitionReader[InternalRow] = {
+  /** Read the span once, then walk its chunks: raw records for LAS, the
+    * pointwise or layered decoder for LAZ (the layered one decodes only
+    * the projected layers), each record projected by [[LasFormat.project]]. */
+  private def createSpanReader(p: LasSpan): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
-      private val conf = confBc.value.value
+      private val h = p.header
       private val bytes = {
         val path = new Path(p.path)
-        val in = path.getFileSystem(conf).open(path)
+        val in = path.getFileSystem(confBc.value.value).open(path)
         try {
-          val sizeL = p.count * p.recordLength.toLong
-          require(sizeL <= Int.MaxValue.toLong,
-            s"LAS chunk too large to buffer: $sizeL bytes " +
-              s"(count=${p.count}, recordLength=${p.recordLength})")
-          val buf = new Array[Byte](sizeL.toInt)
-          in.readFully(p.pointOffset + p.start * p.recordLength, buf)
+          val totalL = p.chunkBytes.sum
+          require(totalL <= Int.MaxValue.toLong,
+            s"LAS partition too large to buffer: $totalL bytes")
+          val buf = new Array[Byte](totalL.toInt)
+          in.readFully(p.start, buf)
           buf
         } finally in.close()
       }
-      private val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-      private val header = LasFormat.LasHeader(p.pointFormat, p.recordLength,
-        p.count, 0L, (p.sx, p.sy, p.sz), (p.ox, p.oy, p.oz),
-        (0, 0, 0), (0, 0, 0))
       private val out = new Array[Any](fieldCodes.length)
-      private var row = -1L
+      private var chunk = -1
+      private var chunkStart = 0
+      private var reader: LasFormat.ChunkReader = null
 
-      override def next(): Boolean = { row += 1; row < p.count }
+      override def next(): Boolean = {
+        while (reader == null || !reader.next()) {
+          chunk += 1
+          if (chunk >= p.chunkBytes.length) return false
+          if (chunk > 0) chunkStart += p.chunkBytes(chunk - 1).toInt
+          val end = chunkStart + p.chunkBytes(chunk).toInt
+          val n = p.chunkPoints(chunk)
+          reader =
+            if (h.laz.isEmpty)
+              new LasFormat.RawChunkReader(bytes, chunkStart, h.pointFormat, n, h.extraBytes)
+            else if (LasFormat.isExtended(h.pointFormat))
+              new LazFormat.ChunkDecoder14(bytes, chunkStart, end, h.pointFormat, n,
+                fieldCodes, h.extraBytes)
+            else
+              new LazFormat.ChunkDecoder(bytes, chunkStart, end, h.pointFormat, n,
+                h.extraBytes)
+        }
+        true
+      }
 
       override def get(): InternalRow = {
-        LasFormat.decode(bb, (row * p.recordLength).toInt, header, fieldCodes, out)
+        LasFormat.project(reader.point, h, fieldCodes, out)
         new GenericInternalRow(out.clone())
       }
 
       override def close(): Unit = ()
     }
-  }
 }

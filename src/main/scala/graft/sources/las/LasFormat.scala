@@ -1,6 +1,6 @@
 package graft.sources.las
 
-import java.io.{DataOutputStream, OutputStream}
+import java.io.OutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.hadoop.conf.Configuration
@@ -8,6 +8,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.types._
 
 import graft.pc.PcSchema
+import graft.sources.las.laz.LazPoint
 
 /** LAS 1.2/1.4 binary format: header codec, point-record codec, and a
   * small writer for fixtures/export (reference reads LAS/LAZ via an
@@ -211,9 +212,10 @@ object LasFormat {
     }
   }
 
-  /** Format-independent semantic field codes: decode switches on these
-    * (plus the record's own point format for byte offsets), so a reader
-    * can serve any projection of [[commonSchema]] from any file format. */
+  /** Format-independent semantic field codes: [[project]] switches on
+    * these (plus the record's own point format for the bit packing), so a
+    * reader can serve any projection of [[commonSchema]] from any file
+    * format. */
   val FieldNames: Seq[String] = Seq(
     "x", "y", "z", "intensity", "return_number", "number_of_returns",
     "scan_direction", "is_edge_of_flight_line", "classification",
@@ -228,72 +230,182 @@ object LasFormat {
     c
   }
 
-  /** Decode one point record into `out(i) = value of fieldCodes(i)`,
-    * where fieldCodes are [[fieldCode]] values; byte offsets of gps/rgb
-    * depend on the record's point format. */
-  def decode(bb: ByteBuffer, recordStart: Int, h: LasHeader,
-      fieldCodes: Array[Int], out: Array[Any]): Unit = {
+  // ---- the point-record codec -----------------------------------------
+  // A record lives in memory as a [[LazPoint]] holding the raw on-disk
+  // values. readRaw/writeRaw are the only code that touches a record's
+  // bytes, [[quantize]] the only way from a [[LasPoint]] to a record, and
+  // [[project]] the only way from a record to column values; the LAZ
+  // item codecs work on the same LazPoint.
+
+  /** Read one record at `bb`'s position (advancing it) into `p`. */
+  def readRaw(bb: ByteBuffer, p: LazPoint, fmt: Int, extraCount: Int): Unit = {
+    p.x = bb.getInt(); p.y = bb.getInt(); p.z = bb.getInt()
+    p.intensity = bb.getShort() & 0xFFFF
+    if (isExtended(fmt)) {
+      p.returns = bb.get() & 0xFF
+      p.extFlags = bb.get() & 0xFF
+      p.classification = bb.get() & 0xFF
+      p.userData = bb.get() & 0xFF
+      p.scanAngle = bb.getShort().toInt
+      p.pointSourceId = bb.getShort() & 0xFFFF
+      p.gpsTime = bb.getLong()
+    } else {
+      p.flags = bb.get() & 0xFF
+      p.classification = bb.get() & 0xFF
+      p.scanAngleRank = bb.get() & 0xFF
+      p.userData = bb.get() & 0xFF
+      p.pointSourceId = bb.getShort() & 0xFFFF
+      if (hasGps(fmt)) p.gpsTime = bb.getLong()
+    }
+    if (hasRgb(fmt)) {
+      p.red = bb.getShort() & 0xFFFF
+      p.green = bb.getShort() & 0xFFFF
+      p.blue = bb.getShort() & 0xFFFF
+    }
+    if (hasNir(fmt)) p.nir = bb.getShort() & 0xFFFF
+    if (extraCount > 0) {
+      val e = new Array[Byte](extraCount)
+      bb.get(e)
+      p.extra = e
+    } else p.extra = Array.emptyByteArray
+  }
+
+  /** Write `p` as one record at `bb`'s position (advancing it). */
+  def writeRaw(bb: ByteBuffer, p: LazPoint, fmt: Int): Unit = {
+    bb.putInt(p.x); bb.putInt(p.y); bb.putInt(p.z)
+    bb.putShort(p.intensity.toShort)
+    if (isExtended(fmt)) {
+      bb.put(p.returns.toByte)
+      bb.put(p.extFlags.toByte)
+      bb.put(p.classification.toByte)
+      bb.put(p.userData.toByte)
+      bb.putShort(p.scanAngle.toShort)
+      bb.putShort(p.pointSourceId.toShort)
+      bb.putLong(p.gpsTime)
+    } else {
+      bb.put(p.flags.toByte)
+      bb.put(p.classification.toByte)
+      bb.put(p.scanAngleRank.toByte)
+      bb.put(p.userData.toByte)
+      bb.putShort(p.pointSourceId.toShort)
+      if (hasGps(fmt)) bb.putLong(p.gpsTime)
+    }
+    if (hasRgb(fmt)) {
+      bb.putShort(p.red.toShort); bb.putShort(p.green.toShort); bb.putShort(p.blue.toShort)
+    }
+    if (hasNir(fmt)) bb.putShort(p.nir.toShort)
+    if (p.extra.nonEmpty) bb.put(p.extra)
+  }
+
+  /** The raw i32 coordinate of `v` on the (scale, offset) grid. */
+  private def quantized(v: Double, scale: Double, offset: Double): Int =
+    Math.round((v - offset) / scale).toInt
+
+  /** Fill `into` with `pt`'s record in point format `fmt` and return it.
+    * Both the legacy and the extended fields are set; the format decides
+    * which reach the bytes. The extra-bytes payload is shared, not copied
+    * (no codec mutates it). */
+  def quantize(pt: LasPoint, fmt: Int, scale: (Double, Double, Double),
+      offset: (Double, Double, Double), into: LazPoint): LazPoint = {
+    into.x = quantized(pt.x, scale._1, offset._1)
+    into.y = quantized(pt.y, scale._2, offset._2)
+    into.z = quantized(pt.z, scale._3, offset._3)
+    into.intensity = pt.intensity & 0xFFFF
+    into.flags = (pt.returnNumber & 0x07) | ((pt.numberOfReturns & 0x07) << 3) |
+      ((pt.scanDirection & 0x01) << 6) | ((if (pt.edge) 1 else 0) << 7)
+    // legacy packs the 3 flag bits into the classification byte;
+    // extended keeps the full u8 class and a separate flags nibble
+    into.classification =
+      if (isExtended(fmt)) pt.classification & 0xFF else pt.legacyClassByte
+    into.scanAngleRank = pt.scanAngleRank & 0xFF
+    into.userData = pt.userData & 0xFF
+    into.pointSourceId = pt.pointSourceId & 0xFFFF
+    into.gpsTime = java.lang.Double.doubleToRawLongBits(pt.gpsTime)
+    into.red = pt.red & 0xFFFF; into.green = pt.green & 0xFFFF; into.blue = pt.blue & 0xFFFF
+    into.returns = (pt.returnNumber & 0x0F) | ((pt.numberOfReturns & 0x0F) << 4)
+    into.extFlags = pt.flagsNibble | ((pt.scannerChannel & 0x03) << 4) |
+      ((pt.scanDirection & 0x01) << 6) | ((if (pt.edge) 1 else 0) << 7)
+    // extended: scanAngleRank doubles as the i16 0.006-degree scan angle
+    into.scanAngle = pt.scanAngleRank.toShort.toInt
+    into.nir = pt.nir & 0xFFFF
+    into.extra = pt.extra
+    into
+  }
+
+  /** Project one record into `out(i) = value of fieldCodes(i)`
+    * ([[fieldCode]] values), resolving coordinates as
+    * `raw * scale + offset` with `h`'s grid. Legacy records read the
+    * packed flag byte and 3 flag bits of the classification byte,
+    * extended ones (formats 6-8) the 4-bit returns, the flags byte and
+    * the i16 scan angle. */
+  def project(p: LazPoint, h: LasHeader, fieldCodes: Array[Int], out: Array[Any]): Unit = {
     val ext = isExtended(h.pointFormat)
-    val rgbBase = recordStart +
-      (if (ext) 30 else if (h.pointFormat == 3) 28 else 20)
     var i = 0
     while (i < fieldCodes.length) {
       out(i) = fieldCodes(i) match {
-        case 0 => bb.getInt(recordStart) * h.scale._1 + h.offset._1
-        case 1 => bb.getInt(recordStart + 4) * h.scale._2 + h.offset._2
-        case 2 => bb.getInt(recordStart + 8) * h.scale._3 + h.offset._3
-        case 3 => bb.getShort(recordStart + 12) & 0xffff
+        case 0 => p.x * h.scale._1 + h.offset._1
+        case 1 => p.y * h.scale._2 + h.offset._2
+        case 2 => p.z * h.scale._3 + h.offset._3
+        case 3 => p.intensity
         case 4 =>
-          if (ext) (bb.get(recordStart + 14) & 0x0f).toShort
-          else (bb.get(recordStart + 14) & 0x07).toShort
+          if (ext) (p.returns & 0x0f).toShort else (p.flags & 0x07).toShort
         case 5 =>
-          if (ext) ((bb.get(recordStart + 14) >> 4) & 0x0f).toShort
-          else ((bb.get(recordStart + 14) >> 3) & 0x07).toShort
+          if (ext) ((p.returns >> 4) & 0x0f).toShort
+          else ((p.flags >> 3) & 0x07).toShort
         case 6 =>
-          if (ext) ((bb.get(recordStart + 15) >> 6) & 0x01).toShort
-          else ((bb.get(recordStart + 14) >> 6) & 0x01).toShort
+          if (ext) ((p.extFlags >> 6) & 0x01).toShort
+          else ((p.flags >> 6) & 0x01).toShort
         case 7 =>
-          if (ext) ((bb.get(recordStart + 15) >> 7) & 0x01) == 1
-          else ((bb.get(recordStart + 14) >> 7) & 0x01) == 1
+          if (ext) ((p.extFlags >> 7) & 0x01) == 1
+          else ((p.flags >> 7) & 0x01) == 1
         case 8 => // legacy strips the flag bits like the reference's reader
-          if (ext) (bb.get(recordStart + 16) & 0xff).toShort
-          else (bb.get(recordStart + 15) & 0x1f).toShort
+          if (ext) p.classification.toShort else (p.classification & 0x1f).toShort
         case 9 => // i8 "rank" (legacy) vs i16 0.006-degree units (extended)
-          if (ext) bb.getShort(recordStart + 18)
-          else bb.get(recordStart + 16).toShort
-        case 10 => (bb.get(recordStart + 17) & 0xff).toShort
-        case 11 =>
-          if (ext) bb.getShort(recordStart + 20) & 0xffff
-          else bb.getShort(recordStart + 18) & 0xffff
-        case 12 =>
-          bb.getDouble(recordStart + (if (ext) 22 else 20))
-        case 13 => bb.getShort(rgbBase) & 0xffff
-        case 14 => bb.getShort(rgbBase + 2) & 0xffff
-        case 15 => bb.getShort(rgbBase + 4) & 0xffff
-        case 16 => ((bb.get(recordStart + 15) >> 4) & 0x03).toShort
-        case 17 => bb.getShort(rgbBase + 6) & 0xffff
+          if (ext) p.scanAngle.toShort else p.scanAngleRank.toByte.toShort
+        case 10 => p.userData.toShort
+        case 11 => p.pointSourceId
+        case 12 => java.lang.Double.longBitsToDouble(p.gpsTime)
+        case 13 => p.red
+        case 14 => p.green
+        case 15 => p.blue
+        case 16 => ((p.extFlags >> 4) & 0x03).toShort
+        case 17 => p.nir
         case 18 => // is_synthetic: flags nibble (ext) / classification bit 5
-          if (ext) (bb.get(recordStart + 15) & 0x01) == 1
-          else ((bb.get(recordStart + 15) >> 5) & 0x01) == 1
+          if (ext) (p.extFlags & 0x01) == 1
+          else ((p.classification >> 5) & 0x01) == 1
         case 19 => // is_key_point
-          if (ext) ((bb.get(recordStart + 15) >> 1) & 0x01) == 1
-          else ((bb.get(recordStart + 15) >> 6) & 0x01) == 1
+          if (ext) ((p.extFlags >> 1) & 0x01) == 1
+          else ((p.classification >> 6) & 0x01) == 1
         case 20 => // is_withheld
-          if (ext) ((bb.get(recordStart + 15) >> 2) & 0x01) == 1
-          else ((bb.get(recordStart + 15) >> 7) & 0x01) == 1
-        case 21 => // is_overlap: extended-only flag, false on legacy
-          if (ext) ((bb.get(recordStart + 15) >> 3) & 0x01) == 1
-          else false
+          if (ext) ((p.extFlags >> 2) & 0x01) == 1
+          else ((p.classification >> 7) & 0x01) == 1
+        case 21 => ext && ((p.extFlags >> 3) & 0x01) == 1 // extended-only flag
         case 22 => // degrees as f32: legacy rank = whole degrees, ext 0.006°
-          if (ext) bb.getShort(recordStart + 18) * 0.006f
-          else bb.get(recordStart + 16).toFloat
-        case 23 => // opaque extra-bytes tail of the record (bulk copy)
-          val tailStart = recordStart + h.recordLength - h.extraBytes
-          java.util.Arrays.copyOfRange(bb.array(),
-            bb.arrayOffset() + tailStart, bb.arrayOffset() + tailStart + h.extraBytes)
+          if (ext) p.scanAngle * 0.006f
+          else p.scanAngleRank.toByte.toFloat
+        case 23 => p.extra // readers hand out a fresh array per point
       }
       i += 1
     }
+  }
+
+  /** Streaming reader over one chunk of records: [[RawChunkReader]] for
+    * uncompressed LAS, the LAZ chunk decoders for compressed chunks. */
+  trait ChunkReader {
+    /** The record read by the last successful [[next]]. */
+    def point: LazPoint
+    /** Advance to the next record (into [[point]]); false when exhausted. */
+    def next(): Boolean
+  }
+
+  /** `count` uncompressed records starting at `buf(start)`. */
+  final class RawChunkReader(buf: Array[Byte], start: Int, fmt: Int, count: Long,
+      extraCount: Int) extends ChunkReader {
+    val point = new LazPoint
+    private val bb = ByteBuffer.wrap(buf, start, buf.length - start).order(ByteOrder.LITTLE_ENDIAN)
+    private var i = 0L
+    def next(): Boolean =
+      i < count && { readRaw(bb, point, fmt, extraCount); i += 1; true }
   }
 
   /** One LAS point for the fixture writer. `overlap` only exists in the
@@ -324,8 +436,50 @@ object LasFormat {
     case f => throw new IllegalArgumentException(s"unsupported point format $f")
   }
 
-  /** Write a LAS file: 1.2 for point formats 0-3, 1.4 for 6-8 (375-byte
-    * header, 64-bit point count, legacy count zeroed per spec). */
+  /** The public header block of a file holding `points`, followed by
+    * `vlr` (one whole variable-length record, or empty). LAS 1.2 for
+    * point formats 0-3, 1.4 for 6-8 (375-byte header, 64-bit point count,
+    * legacy count zeroed per spec); a VLR marks the records compressed
+    * (LAZ). Bounds are those of the quantized coordinates. */
+  def header(points: Seq[LasPoint], pointFormat: Int, extraBytes: Int,
+      scale: (Double, Double, Double), offset: (Double, Double, Double),
+      vlr: Array[Byte]): Array[Byte] = {
+    val ext = isExtended(pointFormat)
+    val hdrLen = if (ext) HeaderSize14 else HeaderSize
+    val header = ByteBuffer.allocate(hdrLen + vlr.length).order(ByteOrder.LITTLE_ENDIAN)
+    header.put(Signature.getBytes("US-ASCII"))
+    header.put(24, 1.toByte) // version major
+    header.put(25, (if (ext) 4 else 2).toByte) // version minor
+    header.putShort(94, hdrLen.toShort)
+    header.putInt(96, hdrLen + vlr.length) // point data offset
+    if (vlr.nonEmpty) header.putInt(100, 1) // one VLR: laszip
+    header.put(104, (pointFormat | (if (vlr.nonEmpty) 0x80 else 0)).toByte)
+    header.putShort(105, (recordLengthFor(pointFormat) + extraBytes).toShort)
+    if (ext) header.putLong(247, points.size.toLong) // legacy u32 stays 0
+    else header.putInt(107, points.size)
+    header.putDouble(131, scale._1); header.putDouble(139, scale._2)
+    header.putDouble(147, scale._3)
+    header.putDouble(155, offset._1); header.putDouble(163, offset._2)
+    header.putDouble(171, offset._3)
+    if (points.nonEmpty) {
+      def res(v: Double, s: Double, o: Double) = quantized(v, s, o) * s + o
+      var lx, ly, lz = Double.PositiveInfinity
+      var hx, hy, hz = Double.NegativeInfinity
+      points.foreach { p =>
+        val x = res(p.x, scale._1, offset._1); lx = math.min(lx, x); hx = math.max(hx, x)
+        val y = res(p.y, scale._2, offset._2); ly = math.min(ly, y); hy = math.max(hy, y)
+        val z = res(p.z, scale._3, offset._3); lz = math.min(lz, z); hz = math.max(hz, z)
+      }
+      header.putDouble(179, hx); header.putDouble(187, lx)
+      header.putDouble(195, hy); header.putDouble(203, ly)
+      header.putDouble(211, hz); header.putDouble(219, lz)
+    }
+    header.position(hdrLen)
+    header.put(vlr)
+    header.array()
+  }
+
+  /** Write a LAS file: [[header]], then one record per point. */
   def write(conf: Configuration, path: String, points: Seq[LasPoint],
       pointFormat: Int = 1,
       scale: (Double, Double, Double) = (0.001, 0.001, 0.001),
@@ -333,72 +487,18 @@ object LasFormat {
       extraBytes: Int = 0): Unit = {
     require(points.forall(_.extra.length == extraBytes),
       s"every point's extra payload must be exactly $extraBytes bytes")
-    val ext = isExtended(pointFormat)
     val recLen = recordLengthFor(pointFormat) + extraBytes
-    val hdrLen = if (ext) HeaderSize14 else HeaderSize
     val p = new Path(path)
     val out: OutputStream = p.getFileSystem(conf).create(p, true)
     try {
-      val header = ByteBuffer.allocate(hdrLen).order(ByteOrder.LITTLE_ENDIAN)
-      header.put(Signature.getBytes("US-ASCII"))
-      header.put(24, 1.toByte) // version major
-      header.put(25, (if (ext) 4 else 2).toByte) // version minor
-      header.putShort(94, hdrLen.toShort)
-      header.putInt(96, hdrLen) // point data offset (no VLRs)
-      header.put(104, pointFormat.toByte)
-      header.putShort(105, recLen.toShort)
-      if (ext) header.putLong(247, points.size.toLong) // legacy u32 stays 0
-      else header.putInt(107, points.size)
-      header.putDouble(131, scale._1); header.putDouble(139, scale._2)
-      header.putDouble(147, scale._3)
-      header.putDouble(155, offset._1); header.putDouble(163, offset._2)
-      header.putDouble(171, offset._3)
-      def res(v: Double, s: Double, o: Double) = Math.round((v - o) / s).toInt * s + o
-      val xs = points.map(p0 => res(p0.x, scale._1, offset._1))
-      val ys = points.map(p0 => res(p0.y, scale._2, offset._2))
-      val zs = points.map(p0 => res(p0.z, scale._3, offset._3))
-      header.putDouble(179, if (xs.isEmpty) 0 else xs.max)
-      header.putDouble(187, if (xs.isEmpty) 0 else xs.min)
-      header.putDouble(195, if (ys.isEmpty) 0 else ys.max)
-      header.putDouble(203, if (ys.isEmpty) 0 else ys.min)
-      header.putDouble(211, if (zs.isEmpty) 0 else zs.max)
-      header.putDouble(219, if (zs.isEmpty) 0 else zs.min)
-      out.write(header.array())
-      val rec = ByteBuffer.allocate(recLen).order(ByteOrder.LITTLE_ENDIAN)
+      out.write(header(points, pointFormat, extraBytes, scale, offset, Array.emptyByteArray))
+      val rec = new LazPoint
+      val buf = ByteBuffer.allocate(recLen * 4096).order(ByteOrder.LITTLE_ENDIAN)
       points.foreach { pt =>
-        rec.clear()
-        rec.putInt(Math.round((pt.x - offset._1) / scale._1).toInt)
-        rec.putInt(Math.round((pt.y - offset._2) / scale._2).toInt)
-        rec.putInt(Math.round((pt.z - offset._3) / scale._3).toInt)
-        rec.putShort((pt.intensity & 0xffff).toShort)
-        if (ext) {
-          rec.put(((pt.returnNumber & 0x0f) | ((pt.numberOfReturns & 0x0f) << 4)).toByte)
-          rec.put((pt.flagsNibble | ((pt.scannerChannel & 0x03) << 4) |
-            ((pt.scanDirection & 0x01) << 6) | ((if (pt.edge) 1 else 0) << 7)).toByte)
-          rec.put((pt.classification & 0xff).toByte)
-          rec.put((pt.userData & 0xff).toByte)
-          rec.putShort(pt.scanAngleRank.toShort) // i16 0.006-degree units
-          rec.putShort((pt.pointSourceId & 0xffff).toShort)
-          rec.putDouble(pt.gpsTime)
-        } else {
-          val flags = (pt.returnNumber & 0x07) | ((pt.numberOfReturns & 0x07) << 3) |
-            ((pt.scanDirection & 0x01) << 6) | ((if (pt.edge) 1 else 0) << 7)
-          rec.put(flags.toByte)
-          rec.put(pt.legacyClassByte.toByte)
-          rec.put(pt.scanAngleRank.toByte)
-          rec.put((pt.userData & 0xff).toByte)
-          rec.putShort((pt.pointSourceId & 0xffff).toShort)
-          if (hasGps(pointFormat)) rec.putDouble(pt.gpsTime)
-        }
-        if (hasRgb(pointFormat)) {
-          rec.putShort((pt.red & 0xffff).toShort)
-          rec.putShort((pt.green & 0xffff).toShort)
-          rec.putShort((pt.blue & 0xffff).toShort)
-        }
-        if (hasNir(pointFormat)) rec.putShort((pt.nir & 0xffff).toShort)
-        if (extraBytes > 0) rec.put(pt.extra)
-        out.write(rec.array(), 0, recLen)
+        writeRaw(buf, quantize(pt, pointFormat, scale, offset, rec), pointFormat)
+        if (!buf.hasRemaining) { out.write(buf.array()); buf.clear() }
       }
+      out.write(buf.array(), 0, buf.position())
     } finally out.close()
   }
 }

@@ -155,68 +155,6 @@ object LazFormat {
     LazVlr(compressor, chunkSize, items, extraBytes)
   }
 
-  // ---- raw (first-point) record codec --------------------------------
-
-  private def writeRaw(bb: ByteBuffer, p: LazPoint, fmt: Int): Unit = {
-    bb.putInt(p.x); bb.putInt(p.y); bb.putInt(p.z)
-    bb.putShort(p.intensity.toShort)
-    if (LasFormat.isExtended(fmt)) {
-      bb.put(p.returns.toByte)
-      bb.put(p.extFlags.toByte)
-      bb.put(p.classification.toByte)
-      bb.put(p.userData.toByte)
-      bb.putShort(p.scanAngle.toShort)
-      bb.putShort(p.pointSourceId.toShort)
-      bb.putLong(p.gpsTime)
-    } else {
-      bb.put(p.flags.toByte)
-      bb.put(p.classification.toByte)
-      bb.put(p.scanAngleRank.toByte)
-      bb.put(p.userData.toByte)
-      bb.putShort(p.pointSourceId.toShort)
-      if (LasFormat.hasGps(fmt)) bb.putLong(p.gpsTime)
-    }
-    if (LasFormat.hasRgb(fmt)) {
-      bb.putShort(p.red.toShort); bb.putShort(p.green.toShort); bb.putShort(p.blue.toShort)
-    }
-    if (LasFormat.hasNir(fmt)) bb.putShort(p.nir.toShort)
-    if (p.extra.nonEmpty) bb.put(p.extra)
-  }
-
-  private def readRaw(bb: ByteBuffer, p: LazPoint, fmt: Int, extraCount: Int): Unit = {
-    p.x = bb.getInt(); p.y = bb.getInt(); p.z = bb.getInt()
-    p.intensity = bb.getShort() & 0xFFFF
-    if (LasFormat.isExtended(fmt)) {
-      p.returns = bb.get() & 0xFF
-      p.extFlags = bb.get() & 0xFF
-      p.classification = bb.get() & 0xFF
-      p.userData = bb.get() & 0xFF
-      p.scanAngle = bb.getShort().toInt
-      p.pointSourceId = bb.getShort() & 0xFFFF
-      p.gpsTime = bb.getLong()
-    } else {
-      p.flags = bb.get() & 0xFF
-      p.classification = bb.get() & 0xFF
-      p.scanAngleRank = bb.get() & 0xFF
-      p.userData = bb.get() & 0xFF
-      p.pointSourceId = bb.getShort() & 0xFFFF
-      if (LasFormat.hasGps(fmt)) p.gpsTime = bb.getLong()
-    }
-    if (LasFormat.hasRgb(fmt)) {
-      p.red = bb.getShort() & 0xFFFF
-      p.green = bb.getShort() & 0xFFFF
-      p.blue = bb.getShort() & 0xFFFF
-    }
-    if (LasFormat.hasNir(fmt)) p.nir = bb.getShort() & 0xFFFF
-    if (extraCount > 0) {
-      val e = new Array[Byte](extraCount)
-      bb.get(e)
-      p.extra = e
-    } else p.extra = Array.emptyByteArray
-  }
-
-  def recordLength(fmt: Int): Int = LasFormat.recordLengthFor(fmt)
-
   // ---- chunk codec ---------------------------------------------------
 
   /** Encode one chunk: raw first point + arithmetic-coded rest (legacy
@@ -231,9 +169,9 @@ object LazFormat {
 
   private def encodeChunkPointwise(pts: IndexedSeq[LazPoint], fmt: Int): Array[Byte] = {
     val extraCount = pts.head.extra.length
-    val recLen = recordLength(fmt) + extraCount
+    val recLen = LasFormat.recordLengthFor(fmt) + extraCount
     val raw = ByteBuffer.allocate(recLen).order(ByteOrder.LITTLE_ENDIAN)
-    writeRaw(raw, pts.head, fmt)
+    LasFormat.writeRaw(raw, pts.head, fmt)
     if (pts.size == 1) raw.array()
     else {
       val enc = new ArithmeticEncoder
@@ -260,7 +198,7 @@ object LazFormat {
     * stream (see [[LazItems14]]). */
   private def encodeChunkLayered(pts: IndexedSeq[LazPoint], fmt: Int): Array[Byte] = {
     val extraCount = pts.head.extra.length
-    val recLen = recordLength(fmt) + extraCount
+    val recLen = LasFormat.recordLengthFor(fmt) + extraCount
     val extraBase = LazLayers.numLayers(fmt)
     val nLayers = extraBase + extraCount // one layer per extra byte
     val blobs: Array[Array[Byte]] =
@@ -291,19 +229,11 @@ object LazFormat {
       }
     val total = recLen + 4 + 4 * nLayers + blobs.map(_.length).sum
     val bb = ByteBuffer.allocate(total).order(ByteOrder.LITTLE_ENDIAN)
-    writeRaw(bb, pts.head, fmt)
+    LasFormat.writeRaw(bb, pts.head, fmt)
     bb.putInt(pts.size)
     blobs.foreach(b => bb.putInt(b.length))
     blobs.foreach(bb.put)
     bb.array()
-  }
-
-  /** Common streaming-decode contract of the two chunk framings. */
-  sealed trait ChunkReader {
-    /** The record decoded by the last successful [[next]]. */
-    def point: LazPoint
-    /** Advance to the next point (into [[point]]); false when exhausted. */
-    def next(): Boolean
   }
 
   /** Streaming decoder over one layered (v3) chunk's byte slice.
@@ -313,7 +243,7 @@ object LazFormat {
     * Fields outside the wanted set hold garbage in [[point]]. */
   final class ChunkDecoder14(buf: Array[Byte], start: Int, end: Int, fmt: Int,
       count: Long, wantedFieldCodes: Array[Int], extraCount: Int = 0)
-      extends ChunkReader {
+      extends LasFormat.ChunkReader {
     import LazLayers._
     val point = new LazPoint
     private var i = 0L
@@ -351,10 +281,10 @@ object LazFormat {
       if (i >= count) false
       else {
         if (i == 0) {
-          val recLen = recordLength(fmt) + extraCount
+          val recLen = LasFormat.recordLengthFor(fmt) + extraCount
           val nLayers = extraBase + extraCount
           val bb = ByteBuffer.wrap(buf, start, end - start).order(ByteOrder.LITTLE_ENDIAN)
-          readRaw(bb, point, fmt, extraCount)
+          LasFormat.readRaw(bb, point, fmt, extraCount)
           val stored = bb.getInt().toLong & 0xFFFFFFFFL
           require(stored == count,
             s"LAZ layered chunk declares $stored points, chunk table says $count")
@@ -405,23 +335,22 @@ object LazFormat {
 
   /** Streaming decoder over one pointwise (v2) chunk's byte slice. */
   final class ChunkDecoder(buf: Array[Byte], start: Int, end: Int, fmt: Int, count: Long,
-      extraCount: Int = 0) extends ChunkReader {
+      extraCount: Int = 0) extends LasFormat.ChunkReader {
     val point = new LazPoint
     private var i = 0L
-    private val recLen = recordLength(fmt) + extraCount
+    private val recLen = LasFormat.recordLengthFor(fmt) + extraCount
     private var p10: Point10V2 = null
     private var gps: GpsTime11V2 = null
     private var rgb: Rgb12V2 = null
     private var ext: Byte2V2 = null
     private var dec: ArithmeticDecoder = null
 
-    /** Advance to the next point (into [[point]]); false when exhausted. */
     def next(): Boolean = {
       if (i >= count) false
       else {
         if (i == 0) {
           val bb = ByteBuffer.wrap(buf, start, end - start).order(ByteOrder.LITTLE_ENDIAN)
-          readRaw(bb, point, fmt, extraCount)
+          LasFormat.readRaw(bb, point, fmt, extraCount)
           if (count > 1) {
             dec = new ArithmeticDecoder(buf, start + recLen, end)
             dec.init()
@@ -577,9 +506,10 @@ object LazFormat {
   // ---- whole-file writer (fixtures / export) -------------------------
 
   /** Write a LAZ file (legacy point formats 0-3 as LAS 1.2, extended
-    * formats 6-8 as LAS 1.4 with layered compression), mirroring
-    * [[LasFormat.write]]'s header/quantization so a LAS and a LAZ of the
-    * same points resolve identically. */
+    * formats 6-8 as LAS 1.4 with layered compression): [[LasFormat.header]]
+    * with the laszip VLR, the chunk table pointer, the chunks, the chunk
+    * table. Records come from [[LasFormat.quantize]], so a LAS and a LAZ
+    * of the same points resolve identically. */
   def write(conf: Configuration, path: String, points: Seq[LasPoint],
       pointFormat: Int = 1,
       scale: (Double, Double, Double) = (0.001, 0.001, 0.001),
@@ -595,79 +525,19 @@ object LazFormat {
       require(cs.forall(_ > 0) && cs.sum == points.size,
         s"variable chunk counts must be positive and sum to ${points.size}")
     }
-    val ext = LasFormat.isExtended(pointFormat)
-    val hdrLen = if (ext) LasFormat.HeaderSize14 else LasFormat.HeaderSize
     val payload = vlrPayload(pointFormat,
       if (variableChunks.isDefined) VariableChunkSize else chunkSize, extraBytes)
-    val pointOffset = hdrLen + 54 + payload.length
+    val vlr = ByteBuffer.allocate(54 + payload.length).order(ByteOrder.LITTLE_ENDIAN)
+    vlr.position(2); vlr.put(LaszipUserId.getBytes("US-ASCII")) // after 2 reserved bytes
+    vlr.putShort(18, LaszipRecordId.toShort)
+    vlr.putShort(20, payload.length.toShort)
+    vlr.position(54); vlr.put(payload)
 
-    val header = ByteBuffer.allocate(hdrLen).order(ByteOrder.LITTLE_ENDIAN)
-    header.put(LasFormat.Signature.getBytes("US-ASCII"))
-    header.put(24, 1.toByte) // version major
-    header.put(25, (if (ext) 4 else 2).toByte) // version minor
-    header.putShort(94, hdrLen.toShort)
-    header.putInt(96, pointOffset)
-    header.putInt(100, 1) // one VLR: laszip
-    header.put(104, (pointFormat | 0x80).toByte)
-    header.putShort(105, (recordLength(pointFormat) + extraBytes).toShort)
-    if (ext) header.putLong(247, points.size.toLong) // legacy u32 stays 0
-    else header.putInt(107, points.size)
-    header.putDouble(131, scale._1); header.putDouble(139, scale._2)
-    header.putDouble(147, scale._3)
-    header.putDouble(155, offset._1); header.putDouble(163, offset._2)
-    header.putDouble(171, offset._3)
-    def res(v: Double, s: Double, o: Double) = Math.round((v - o) / s).toInt * s + o
-    val xs = points.map(p0 => res(p0.x, scale._1, offset._1))
-    val ys = points.map(p0 => res(p0.y, scale._2, offset._2))
-    val zs = points.map(p0 => res(p0.z, scale._3, offset._3))
-    header.putDouble(179, if (xs.isEmpty) 0 else xs.max)
-    header.putDouble(187, if (xs.isEmpty) 0 else xs.min)
-    header.putDouble(195, if (ys.isEmpty) 0 else ys.max)
-    header.putDouble(203, if (ys.isEmpty) 0 else ys.min)
-    header.putDouble(211, if (zs.isEmpty) 0 else zs.max)
-    header.putDouble(219, if (zs.isEmpty) 0 else zs.min)
-
-    val vlrHead = ByteBuffer.allocate(54).order(ByteOrder.LITTLE_ENDIAN)
-    vlrHead.putShort(0, 0) // reserved
-    val uid = LaszipUserId.getBytes("US-ASCII")
-    vlrHead.position(2); vlrHead.put(uid); vlrHead.position(0)
-    vlrHead.putShort(18, LaszipRecordId.toShort)
-    vlrHead.putShort(20, payload.length.toShort)
-
-    // quantize to raw records
-    val lazPts = points.map { pt =>
-      val lp = new LazPoint
-      lp.x = Math.round((pt.x - offset._1) / scale._1).toInt
-      lp.y = Math.round((pt.y - offset._2) / scale._2).toInt
-      lp.z = Math.round((pt.z - offset._3) / scale._3).toInt
-      lp.intensity = pt.intensity & 0xFFFF
-      lp.flags = (pt.returnNumber & 0x07) | ((pt.numberOfReturns & 0x07) << 3) |
-        ((pt.scanDirection & 0x01) << 6) | ((if (pt.edge) 1 else 0) << 7)
-      // legacy packs the 3 flag bits into the classification byte;
-      // extended keeps the full u8 class and a separate flags nibble
-      lp.classification =
-        if (LasFormat.isExtended(pointFormat)) pt.classification & 0xFF
-        else pt.legacyClassByte
-      lp.scanAngleRank = pt.scanAngleRank & 0xFF
-      lp.userData = pt.userData & 0xFF
-      lp.pointSourceId = pt.pointSourceId & 0xFFFF
-      lp.gpsTime = java.lang.Double.doubleToRawLongBits(pt.gpsTime)
-      lp.red = pt.red & 0xFFFF; lp.green = pt.green & 0xFFFF; lp.blue = pt.blue & 0xFFFF
-      // extended (1.4) fields: scanAngleRank doubles as the i16 extended
-      // scan angle, exactly like LasFormat.write's format 6-8 path
-      lp.returns = (pt.returnNumber & 0x0F) | ((pt.numberOfReturns & 0x0F) << 4)
-      lp.extFlags = pt.flagsNibble | ((pt.scannerChannel & 0x03) << 4) |
-        ((pt.scanDirection & 0x01) << 6) | ((if (pt.edge) 1 else 0) << 7)
-      lp.scanAngle = pt.scanAngleRank.toShort.toInt
-      lp.nir = pt.nir & 0xFFFF
-      lp.extra = if (pt.extra.isEmpty) Array.emptyByteArray else pt.extra.clone()
-      lp
-    }.toIndexedSeq
+    val lazPts = points.map(pt =>
+      LasFormat.quantize(pt, pointFormat, scale, offset, new LazPoint)).toIndexedSeq
 
     val body = new ByteArrayOutputStream()
-    body.write(header.array())
-    body.write(vlrHead.array())
-    body.write(payload)
+    body.write(LasFormat.header(points, pointFormat, extraBytes, scale, offset, vlr.array()))
     val ptrPos = body.size()
     body.write(new Array[Byte](8)) // chunk table pointer, patched below
     val groups: Iterator[IndexedSeq[LazPoint]] = variableChunks match {

@@ -17,7 +17,7 @@ import graft.text.TextOps
 class ArtifactCacheSpec extends SparkSpec {
 
   test("readArtifact returns the cached resolved frame per (session, path)") {
-    val dir = Files.createTempDirectory("artifact_cache").toString
+    val dir = tempDir("artifact_cache")
     val s: SparkSession = spark
     import s.implicits._
     Seq((1L, "a"), (2L, "b")).toDF("id", "v")
@@ -41,7 +41,7 @@ class ArtifactCacheSpec extends SparkSpec {
   private def threeFiles(name: String): String = {
     val s: SparkSession = spark
     import s.implicits._
-    val path = Files.createTempDirectory(name).toString + "/t.parquet"
+    val path = tempDir(name) + "/t.parquet"
     Seq(0L, 100L, 200L).foreach { lo =>
       (lo until lo + 10L).toDF("id").coalesce(1).write.mode("append").parquet(path)
     }
@@ -71,7 +71,7 @@ class ArtifactCacheSpec extends SparkSpec {
   }
 
   test("posting-index build tolerates an empty corpus (NULL token sum)") {
-    val dir = Files.createTempDirectory("posting_empty").toString
+    val dir = tempDir("posting_empty")
     val s: SparkSession = spark
     import s.implicits._
     // a zero-ROW (not zero-file) corpus: the filter keeps the write task
@@ -93,8 +93,7 @@ class ArtifactCacheSpec extends SparkSpec {
 
   /** A fresh dataset dir whose one input table `t.parquet` holds `ids`. */
   private def dataset(ids: Seq[Long]): String = {
-    val dir = Files.createTempDirectory("registry").toString
-    DatasetCache.registerTempDir(dir)
+    val dir = tempDir("registry")
     writeIds(dir, ids)
     dir
   }

@@ -11,8 +11,7 @@ import graft.lake.{BloomIndex, LakeTable}
 class BloomIndexSpec extends SparkSpec {
 
   private def freshTable(): String = {
-    val d = Files.createTempDirectory("graft_bloom").toString
-    DatasetCache.registerTempDir(d)
+    val d = tempDir("graft_bloom")
     d
   }
 

@@ -48,7 +48,7 @@ class BroadcastDegradeSpec extends SparkSpec {
   }
 
   test("the unhinted aggregate join degrades to sort-merge when the aggregate side is large") {
-    val dir = java.nio.file.Files.createTempDirectory("bcast-degrade").toString
+    val dir = tempDir("bcast-degrade")
     // synthetic orders/customer: 200k distinct non-urgent customers → the
     // per-customer aggregate is ~the fact size, far above the (lowered)
     // broadcast threshold — the local-scale stand-in for a 10^9-customer

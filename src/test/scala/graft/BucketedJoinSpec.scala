@@ -1,8 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
-
 import org.apache.spark.sql.functions._
 
 /** Bucketing: the co-located join pattern for 100 TB scale. Writing both
@@ -102,8 +99,7 @@ class BucketedJoinSpec extends SparkSpec {
     // with one row dropped, build again: the snapshot key must change the
     // served tables (stale-cache guard, same contract as the other
     // derived layouts)
-    val dir = Files.createTempDirectory("graft_bucket_snap").toString
-    graft.DatasetCache.registerTempDir(dir)
+    val dir = tempDir("graft_bucket_snap")
     val ord = spark.read.parquet(s"$sf0001/orders.parquet")
     val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
     ord.write.mode("overwrite").parquet(s"$dir/orders.parquet")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -14,7 +12,7 @@ import graft.plans.GraftExtensions
 class CirclePrefilterRuleSpec extends SparkSpec {
 
   private lazy val layoutDir: String = {
-    val dir = Files.createTempDirectory("circle_rule").toString
+    val dir = tempDir("circle_rule")
     val pts = Points.withImportance(
       Points.fromLineitem(spark, sf001).select("x", "y", "pid"), seed = 3L)
     Layout.writeGrid(pts, dir, sigma = 1, batchSize = 2048L)

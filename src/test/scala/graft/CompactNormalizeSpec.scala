@@ -11,7 +11,7 @@ class CompactNormalizeSpec extends SparkSpec {
   private lazy val points = Points.fromLineitem(spark, sf0001)
 
   test("compact: many small files -> row-group-sized files, same rows, still clustered") {
-    val tmp = Files.createTempDirectory("compact").toString
+    val tmp = tempDir("compact")
     // fragment the layout: tiny batchSize => many files
     Layout.writeGrid(points, s"$tmp/frag", sigma = 4, batchSize = 256L)
     val n = points.count()

@@ -14,7 +14,7 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("empty media blob contributes zero chunks/frames (no descending sequence)") {
     // synthesize a documents table with an empty text row
-    val dir = Files.createTempDirectory("mm_empty").toString
+    val dir = tempDir("mm_empty")
     spark.range(3).selectExpr(
         "id AS doc_id",
         "CASE WHEN id = 1 THEN '' ELSE 'some words here repeated words' END AS text",
@@ -28,7 +28,7 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("NULL-text doc surfaces in docRepetition with NULL stats, not dropped") {
-    val dir = Files.createTempDirectory("null_text").toString
+    val dir = tempDir("null_text")
     spark.range(3).selectExpr(
         "id AS doc_id",
         "CASE WHEN id = 1 THEN NULL ELSE 'w w v' END AS text")
@@ -42,7 +42,7 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("derived-artifact caches re-derive when the dataset is rewritten in place") {
-    val dir = Files.createTempDirectory("cache_rewrite").toString
+    val dir = tempDir("cache_rewrite")
     def write(n: Int): Unit =
       spark.range(n).selectExpr("id AS doc_id", "'a b c d e f' AS text")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -56,7 +56,7 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("zero-point LAS file: header reads, scan yields 0 rows, stats say 0") {
     val conf = new Configuration()
-    val dir = Files.createTempDirectory("las_empty").toString
+    val dir = tempDir("las_empty")
     L.LasFormat.write(conf, s"$dir/empty.las", Seq.empty)
     val df = spark.read.format("las").load(s"$dir/empty.las")
     assert(df.count() == 0)
@@ -65,7 +65,7 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("zero-point LAZ file: empty chunk table, scan yields 0 rows") {
     val conf = new Configuration()
-    val dir = Files.createTempDirectory("laz_empty").toString
+    val dir = tempDir("laz_empty")
     graft.sources.las.laz.LazFormat.write(conf, s"$dir/empty.laz", Seq.empty)
     val h = L.LasFormat.readHeader(conf, s"$dir/empty.laz")
     assert(h.pointCount == 0 && h.laz.isDefined)
@@ -74,7 +74,7 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("zero-count PLY element skips cleanly; empty vertex element reads as 0 rows") {
-    val dir = Files.createTempDirectory("ply_empty").toString
+    val dir = tempDir("ply_empty")
     val path = s"$dir/empty.ply"
     val text =
       """ply
@@ -100,7 +100,7 @@ class EdgeCaseSpec extends SparkSpec {
     val one = spark.range(1).selectExpr(
       "CAST(5.0 AS DOUBLE) AS x", "CAST(7.0 AS DOUBLE) AS y", "id AS pid")
     val onePts = Points.withImportance(one, seed = 1L)
-    val d1 = Files.createTempDirectory("degen1").toString
+    val d1 = tempDir("degen1")
     Layout.writeGrid(onePts, s"$d1/grid", sigma = 4, batchSize = 16L)
     assert(spark.read.parquet(s"$d1/grid").count() == 1)
     val (_, depth) = Aabb.quadtreeDerivation(Aabb.xy(5.0, 7.0, 5.0, 7.0), 1L, 16L)
@@ -111,7 +111,7 @@ class EdgeCaseSpec extends SparkSpec {
     val line = spark.range(2000).selectExpr(
       "CAST(id AS DOUBLE) AS x", "CAST(1.0 AS DOUBLE) AS y", "id AS pid")
     val linePts = Points.withImportance(line, seed = 2L)
-    val d2 = Files.createTempDirectory("degen2").toString
+    val d2 = tempDir("degen2")
     Layout.writeQuadtree(linePts, s"$d2/quad", batchSize = 256L)
     assert(spark.read.parquet(s"$d2/quad").count() == 2000)
     // empty input fails fast with a clear message, not an NPE
@@ -133,7 +133,7 @@ class EdgeCaseSpec extends SparkSpec {
       }.sum
     graft.plans.GraftExtensions.install(spark)
     try {
-      val dir = Files.createTempDirectory("circle_zero").toString
+      val dir = tempDir("circle_zero")
       spark.range(10).selectExpr("CAST(id AS DOUBLE) AS x", "CAST(id AS DOUBLE) AS y")
         .write.mode("overwrite").parquet(dir)
       def circle(r2: Double) = {
@@ -162,7 +162,7 @@ class EdgeCaseSpec extends SparkSpec {
     // tau above every pair: zero edges — CC's vacuous fixpoint, empty result
     assert(MultimodalOps.mmDupClusters(1000001L)(spark, sf0001).count() == 0)
     // a log with no touch events: every purchase is 'direct'
-    val dir = Files.createTempDirectory("attr_direct").toString
+    val dir = tempDir("attr_direct")
     spark.range(3).selectExpr("id AS event_id", "id * 1000 AS ts",
         "id AS user_id", "'purchase' AS event_type",
         "CAST(id AS DOUBLE) AS value", "'{}' AS props")
@@ -180,13 +180,13 @@ class EdgeCaseSpec extends SparkSpec {
     // LAST — so a null value in the rank population would diverge
     // silently. The definition excludes nulls; a planted-null fixture
     // must equal the same fixture with those rows dropped.
-    val dir = Files.createTempDirectory("null_value_events").toString
+    val dir = tempDir("null_value_events")
     spark.range(20).selectExpr("id AS event_id", "id * 1000000 AS ts",
         "id % 4 AS user_id", "'click' AS event_type",
         "CASE WHEN id % 7 = 0 THEN NULL ELSE CAST(id * 3 AS DOUBLE) END AS value",
         "'{}' AS props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val clean = Files.createTempDirectory("null_value_events_clean").toString
+    val clean = tempDir("null_value_events_clean")
     spark.read.parquet(s"$dir/events.parquet")
       .filter(org.apache.spark.sql.functions.col("value").isNotNull)
       .write.mode("overwrite").parquet(s"$clean/events.parquet")
@@ -203,7 +203,7 @@ class EdgeCaseSpec extends SparkSpec {
     import graft.rel.RelQueries
     import spark.implicits._
     // a log with no purchases yields zero training rows, no crash
-    val dir = Files.createTempDirectory("pit_nopurch").toString
+    val dir = tempDir("pit_nopurch")
     spark.range(10).selectExpr("id AS event_id", "id * 1000000 AS ts",
         "id % 3 AS user_id", "'view' AS event_type",
         "CAST(id AS DOUBLE) AS value", "'{}' AS props")
@@ -212,7 +212,7 @@ class EdgeCaseSpec extends SparkSpec {
     // a pattern no user can match is empty, not an error
     assert(EventOps.seqPattern("zzz")(spark, dir).count() == 0)
     // single-event users produce exactly one OPEN interval at version 1
-    val one = Files.createTempDirectory("scd2_one").toString
+    val one = tempDir("scd2_one")
     Seq((1L, 5000L, 42L, "view", 1.0, """{"k": 3}"""))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$one/events.parquet")
@@ -220,7 +220,7 @@ class EdgeCaseSpec extends SparkSpec {
     assert(iv.length == 1 && iv.head.getLong(2) == 1L &&
       iv.head.getLong(4) == Long.MaxValue)
     // all-singleton baskets: no pair ever forms, support filter or not
-    val li = Files.createTempDirectory("copurch_single").toString
+    val li = tempDir("copurch_single")
     spark.range(20).selectExpr("id AS l_orderkey", "id + 100 AS l_partkey")
       .write.parquet(s"$li/lineitem.parquet")
     assert(RelQueries.copurchase(10)(spark, li).count() == 0)

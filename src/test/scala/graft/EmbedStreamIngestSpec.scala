@@ -19,7 +19,7 @@ class EmbedStreamIngestSpec extends SparkSpec {
   private def arriveFile(df: org.apache.spark.sql.DataFrame, dst: Path,
       name: String): Unit = {
     import scala.jdk.CollectionConverters._
-    val tmp = Files.createTempDirectory("ingest_src_stage")
+    val tmp = Paths.get(tempDir("ingest_src_stage"))
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = Files.list(tmp).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
@@ -27,7 +27,7 @@ class EmbedStreamIngestSpec extends SparkSpec {
   }
 
   test("a delta dir with no committed batch reads as an EMPTY segment; a missing dir errors") {
-    val fresh = Files.createTempDirectory("ingest_fresh_delta")
+    val fresh = Paths.get(tempDir("ingest_fresh_delta"))
     val seg = EmbedStream.deltaSegment(spark, fresh.toString)
     assert(seg.count() == 0)
     assert(seg.columns.toSeq ==
@@ -44,9 +44,9 @@ class EmbedStreamIngestSpec extends SparkSpec {
     val newHalf = SimOps.embeddings(spark, sf0001)
       .filter(col("vec_id") >= split).select("vec_id", "embedding")
 
-    val src = Files.createTempDirectory("ingest_src")
-    val delta = Files.createTempDirectory("ingest_delta").toString
-    val ckpt = Files.createTempDirectory("ingest_ckpt").toString
+    val src = Paths.get(tempDir("ingest_src"))
+    val delta = tempDir("ingest_delta")
+    val ckpt = tempDir("ingest_ckpt")
     // wave 1 + wave 2 arrive before the restart, wave 3 after
     val bounds = Seq(split, split + 7, split + 8, Long.MaxValue)
     def wave(i: Int) = newHalf
@@ -93,7 +93,7 @@ class EmbedStreamIngestSpec extends SparkSpec {
 
     // search equivalence: brute-force top-k over base ∪ stream-delta ==
     // over base ∪ batch-delta (same reader, same pruning columns)
-    val base = Files.createTempDirectory("ingest_base").toString
+    val base = tempDir("ingest_base")
     Ivf2.assignFrozenFull(
       SimOps.embeddings(spark, sf0001).filter(col("vec_id") < split),
       coarse, cents)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sim.{Ivf2, SimOps}
@@ -34,7 +32,7 @@ class EmbedStreamSpec extends SparkSpec {
     val mem = MemoryStream[(Long, Seq[Float])]
     val df = mem.toDF().toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>"))
-    val ckpt = Files.createTempDirectory("emb_ingest_ckpt").toString
+    val ckpt = tempDir("emb_ingest_ckpt")
     val q = EmbedStream.streamingIndexIngest(df, coarse, cents).writeStream
       .format("memory").queryName("emb_ingest_sink").outputMode("append")
       .option("checkpointLocation", ckpt).start()
@@ -59,7 +57,7 @@ class EmbedStreamSpec extends SparkSpec {
     val mem = MemoryStream[(Long, Seq[Float])]
     val df = mem.toDF().toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>"))
-    val ckpt = Files.createTempDirectory("emb_ingest_ckpt2").toString
+    val ckpt = tempDir("emb_ingest_ckpt2")
     val q = EmbedStream.streamingIndexIngest(df, coarse, cents).writeStream
       .format("memory").queryName("emb_ingest_sink2").outputMode("append")
       .option("checkpointLocation", ckpt).start()

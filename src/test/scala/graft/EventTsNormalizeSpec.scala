@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import java.time.LocalDateTime
 import org.apache.spark.sql.functions._
@@ -30,7 +29,7 @@ class EventTsNormalizeSpec extends SparkSpec {
   }
 
   test("events(): TIMESTAMP(MICROS) parquet (current testdata) reads as int64 ns") {
-    val dir = Files.createTempDirectory("evts_micros").toString
+    val dir = tempDir("evts_micros")
     usValues.toDF("us")
       .select(timestamp_micros(col("us")).cast(TimestampNTZType).as("ts"),
         lit("click").as("event_type"))
@@ -42,7 +41,7 @@ class EventTsNormalizeSpec extends SparkSpec {
   }
 
   test("events(): int64 ts parquet (nanosAsLong generation) passes through") {
-    val dir = Files.createTempDirectory("evts_nanos").toString
+    val dir = tempDir("evts_nanos")
     usValues.map(_ * 1000L).toDF("ts")
       .withColumn("event_type", lit("view"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")

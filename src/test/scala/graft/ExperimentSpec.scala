@@ -1,12 +1,10 @@
 package graft
 
-import java.nio.file.Files
-
 /** End-to-end partition-pipeline experiment (partition.rs twin). */
 class ExperimentSpec extends SparkSpec {
 
   test("all stages run; query counts are invariant across the four layouts") {
-    val out = Files.createTempDirectory("exp").toString
+    val out = tempDir("exp")
     val r = Experiment.run(spark, sf0001, out, runs = 1, batchSize = 4096L)
     assert(r.stageSec.keySet ==
       Set("convert", "grid(1)", "grid(8)", "quadtree"))

@@ -616,7 +616,7 @@ class ExtensionOpsSpec extends SparkSpec {
     // {0, 3, 6}; the duplicated 500 spans ranks [1, 2] = bins 0..3, so
     // bins 1 and 2 are exactly the phantom class.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("evts_bins").toString
+    val dir = tempDir("evts_bins")
     Seq((1L, 1000L, "buy", 5.0), (2L, 2000L, "buy", 5.0),
       (3L, 3000L, "buy", 7.0))
       .toDF("event_id", "ts", "event_type", "value")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.events.EventOps
 import graft.rel.RelQueries
 
@@ -12,7 +10,7 @@ class FeatureStoreSpec extends SparkSpec {
 
   test("pitFeatures: features see strictly-earlier events only (no leakage)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("pit").toString
+    val dir = tempDir("pit")
     // user 7: view@10, click@20(value 2.50), purchase@30, view@40, purchase@50
     // purchase@30 must see 2 events / 1 view / 250 cents;
     // purchase@50 must see 4 events / 2 views / 250 cents (purchase value
@@ -33,7 +31,7 @@ class FeatureStoreSpec extends SparkSpec {
 
   test("pitFeatures: a first-event purchase gets the empty-history feature row") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("pit_first").toString
+    val dir = tempDir("pit_first")
     Seq((1L, 10000L, 3L, "purchase", 5.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$dir/events.parquet")
@@ -46,7 +44,7 @@ class FeatureStoreSpec extends SparkSpec {
 
   test("scd2 collapses runs into half-open intervals with version numbers") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("scd2").toString
+    val dir = tempDir("scd2")
     // user 1 tier sequence over k%4: 1 1 2 2 1  → intervals 1@[10,30) 2@[30,50) 1@[50,MAX)
     val ks = Seq(1L, 5L, 2L, 6L, 9L) // %4 → 1 1 2 2 1
     val rows = ks.zipWithIndex.map { case (k, i) =>
@@ -83,7 +81,7 @@ class FeatureStoreSpec extends SparkSpec {
 
   test("asOfJoinTol: stale matches null out; infinite tolerance equals asOfJoin") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("asof_tol").toString
+    val dir = tempDir("asof_tol")
     // u1: click@10, purchase@15 (gap 5 ≤ tol) and purchase@100 (gap 90 > tol)
     Seq((1L, 10L, 1L, "click"), (2L, 15L, 1L, "purchase"),
         (3L, 100L, 1L, "purchase"))

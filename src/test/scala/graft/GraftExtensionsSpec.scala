@@ -69,7 +69,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       import s.implicits._
       // parquet-backed (a Seq-backed LocalRelation would be fully
       // constant-folded away, leaving no Filter to inspect)
-      val dir = java.nio.file.Files.createTempDirectory("extcircle").toString
+      val dir = SparkSpec.tempDir("extcircle")
       Seq((1.0, 2.0), (50.0, 50.0), (3.0, 4.0)).toDF("x", "y")
         .write.mode("overwrite").parquet(dir)
       s.read.parquet(dir).createOrReplaceTempView("pts")

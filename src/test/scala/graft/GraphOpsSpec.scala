@@ -29,7 +29,7 @@ class GraphOpsSpec extends SparkSpec {
     // µs, so a raw-ns order would silently flip this pair); the real
     // fixtures happen to have no same-µs pair, which is exactly why
     // this needs planting
-    val tmp = java.nio.file.Files.createTempDirectory("trns").toString
+    val tmp = tempDir("trns")
     Seq(
       (2L, 1000000900L, 1L, "a", 0.0, "{}"),
       (5L, 1000000100L, 1L, "b", 0.0, "{}"),

@@ -86,14 +86,14 @@ class Ivf2DeleteSpec extends SparkSpec {
 
   test("compaction rewrites ONLY the affected cell, consumes the DV, and preserves live rows") {
     val layoutSrc = Paths.get(Ivf2.layout2Path(spark, sf001))
-    val layout = Files.createTempDirectory("ivf2_compact_layout")
+    val layout = Paths.get(tempDir("ivf2_compact_layout"))
     copyTree(layoutSrc, layout)
     // a DV that kills only inside ONE coarse cell — the other cells'
     // files must come through compaction bit-untouched
     val firstCell = Ivf2.deleteStats(spark, sf001)
       .filter(col("n_killed") > 0).orderBy("c1").limit(1)
       .collect()(0).getLong(0)
-    val dv = Files.createTempDirectory("ivf2_compact_dv").toString
+    val dv = tempDir("ivf2_compact_dv")
     SemDedup.semDedup2(SemDedup.Tau)(spark, sf001)
       .filter(!col("keep")).filter(col("c1") === firstCell)
       .select(col("vec_id"), col("scid"), col("c1"))
@@ -129,7 +129,7 @@ class Ivf2DeleteSpec extends SparkSpec {
     // live rows; compactDeletes must remove such cells explicitly or
     // the old files survive the DV's consumption (the r10 self-review
     // must-fix)
-    val layout = Files.createTempDirectory("ivf2_deadcell_layout")
+    val layout = Paths.get(tempDir("ivf2_deadcell_layout"))
     copyTree(Paths.get(Ivf2.layout2Path(spark, sf001)), layout)
     val all = spark.read.parquet(layout.toString)
       .withColumn("c1", col("c1").cast("long"))
@@ -137,7 +137,7 @@ class Ivf2DeleteSpec extends SparkSpec {
       .collect()(0).getLong(0)
     val cellRows = all.filter(col("c1") === deadCell).count()
     val total = all.count()
-    val dv = Files.createTempDirectory("ivf2_deadcell_dv").toString
+    val dv = tempDir("ivf2_deadcell_dv")
     all.filter(col("c1") === deadCell) // kill EVERY row of the cell
       .select(col("vec_id"), col("scid"), col("c1"))
       .write.mode("overwrite").partitionBy("c1").parquet(dv)
@@ -170,8 +170,8 @@ class Ivf2DeleteSpec extends SparkSpec {
     val split = n / 2
     // frozen codebooks from the old half, as the append path trains
     val (coarse, cents) = Ivf2.appendCodebooks(spark, sf001)
-    val base = Files.createTempDirectory("lc_base").toString
-    val delta = Files.createTempDirectory("lc_delta").toString
+    val base = tempDir("lc_base")
+    val delta = tempDir("lc_delta")
     Ivf2.assignFrozenFull(SimOps.embeddings(spark, sf001)
       .filter(col("vec_id") < split), coarse, cents)
       .write.mode("overwrite").partitionBy("c1").parquet(base)
@@ -183,7 +183,7 @@ class Ivf2DeleteSpec extends SparkSpec {
       .select("vec_id", "embedding", "scid", "dist", "c1")
     // kill every 5th vector: ids from BOTH halves
     val union = seg(base).unionByName(seg(delta))
-    val dvDir = Files.createTempDirectory("lc_dv").toString
+    val dvDir = tempDir("lc_dv")
     union.filter(col("vec_id") % 5 === 2)
       .select(col("vec_id"), col("scid"), col("c1"))
       .write.mode("overwrite").partitionBy("c1").parquet(dvDir)
@@ -221,8 +221,8 @@ class Ivf2DeleteSpec extends SparkSpec {
   }
 
   test("an empty kill-list is the identity: compaction over a fresh dir is a no-op") {
-    val emptyDv = Files.createTempDirectory("ivf2_empty_dv").toString
-    val layout = Files.createTempDirectory("ivf2_noop_layout")
+    val emptyDv = tempDir("ivf2_empty_dv")
+    val layout = Paths.get(tempDir("ivf2_noop_layout"))
     copyTree(Paths.get(Ivf2.layout2Path(spark, sf001)), layout)
     val before = listFiles(layout)
     assert(Ivf2.compactDeletes(spark, layout.toString, emptyDv).isEmpty)

@@ -1,7 +1,6 @@
 package graft
 
 import java.io.{ByteArrayOutputStream, PrintStream}
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -28,7 +27,7 @@ class LabelCapSpec extends SparkSpec {
   test("an over-cap label is reported, warned about, and truncated to the vec_id-order prefix") {
     // 1005 identical unit vectors under ONE label: 5 past the cap
     val n = SimOps.LabelPairCap + 5
-    val dir = Files.createTempDirectory("labelcap").toString
+    val dir = tempDir("labelcap")
     spark.range(n).select(
       col("id").as("vec_id"),
       expr(s"transform(sequence(1, ${SimOps.Dim}), " +

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.lake.LakeTable
@@ -12,8 +10,7 @@ import graft.lake.LakeTable
 class LakeConstraintSpec extends SparkSpec {
 
   private def freshTable(): String = {
-    val d = Files.createTempDirectory("graft_lake_ck").toString
-    DatasetCache.registerTempDir(d)
+    val d = tempDir("graft_lake_ck")
     d
   }
 
@@ -80,8 +77,7 @@ class LakeConstraintSpec extends SparkSpec {
   }
 
   test("SQL INSERT INTO a constrained table is enforced (the rewrite hits the same append)") {
-    val r = Files.createTempDirectory("lake_ck_sql").toString
-    DatasetCache.registerTempDir(r)
+    val r = tempDir("lake_ck_sql")
     LakeTable.append(spark, s"$r/ns/t", df(0 until 10))
     LakeTable.addConstraint(spark, s"$r/ns/t", "id_cap", "id < 100")
     spark.conf.set("spark.sql.catalog.cklake", classOf[graft.lake.LakeCatalog].getName)
@@ -201,11 +197,9 @@ class LakeConstraintSpec extends SparkSpec {
     val t = freshTable()
     LakeTable.append(spark, t, df(0 until 10))
     LakeTable.addConstraint(spark, t, "id_cap", "id < 1000")
-    val src = Files.createTempDirectory("lake_ck_src").toString
-    DatasetCache.registerTempDir(src)
+    val src = tempDir("lake_ck_src")
     df(995 until 1005).coalesce(1).write.mode("overwrite").parquet(src)
-    val ckpt = Files.createTempDirectory("lake_ck_ckpt").toString
-    DatasetCache.registerTempDir(ckpt)
+    val ckpt = tempDir("lake_ck_ckpt")
     val q = graft.lake.LakeSink.start(
       spark.readStream.schema(df(0 until 1).schema).parquet(src),
       t, "ck_ingest", ckpt)

@@ -13,8 +13,7 @@ import graft.lake.LakeTable
 class LakeSchemaEvolutionSpec extends SparkSpec {
 
   private def freshTable(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toString
-    DatasetCache.registerTempDir(d)
+    val d = tempDir(prefix)
     s"$d/t"
   }
 
@@ -156,8 +155,7 @@ class LakeSchemaEvolutionSpec extends SparkSpec {
   }
 
   test("SQL: ALTER TABLE ADD/DROP COLUMN through the lake catalog") {
-    val root = java.nio.file.Files.createTempDirectory("lake_alter_cat").toString
-    DatasetCache.registerTempDir(root)
+    val root = tempDir("lake_alter_cat")
     val t = s"$root/ns/ev"
     LakeTable.append(spark, t,
       spark.range(0, 4).select(col("id"), (col("id") * 2).as("v")))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
 
@@ -17,10 +15,8 @@ class LakeStreamSpec extends SparkSpec {
   private var n = 0
   private def fresh(): (String, String, String) = {
     n += 1
-    val t = Files.createTempDirectory("lake-stream").toString
-    val ck = Files.createTempDirectory("lake-stream-ck").toString
-    DatasetCache.registerTempDir(t)
-    DatasetCache.registerTempDir(ck)
+    val t = tempDir("lake-stream")
+    val ck = tempDir("lake-stream-ck")
     (t, ck, s"lake_stream_sink_$n")
   }
 
@@ -86,7 +82,7 @@ class LakeStreamSpec extends SparkSpec {
         .option("startingTimestamp", iso).load(t)
         .writeStream.format("memory").queryName(s"${sink}_both")
         .option("checkpointLocation",
-          Files.createTempDirectory("ck-both").toString)
+          tempDir("ck-both"))
         .start().processAllAvailable()
     }
     def chain(x: Throwable): Seq[Throwable] =

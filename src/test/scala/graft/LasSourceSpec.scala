@@ -15,7 +15,7 @@ import graft.sources.las.{LasConvert, LasFormat}
 class LasSourceSpec extends SparkSpec {
 
   private val conf = new Configuration()
-  private lazy val dir = Files.createTempDirectory("las").toString
+  private lazy val dir = tempDir("las")
 
   /** Two tiles with disjoint x ranges: [0,100) and [1000,1100). */
   private lazy val paths: Seq[String] = {
@@ -85,7 +85,7 @@ class LasSourceSpec extends SparkSpec {
   }
 
   test("compressed bit without a laszip VLR is rejected with a clear error") {
-    val d = Files.createTempDirectory("laz").toString
+    val d = tempDir("laz")
     val path = s"$d/c.laz"
     LasFormat.write(conf, s"$d/c.las", Seq(LasFormat.LasPoint(1, 2, 3)))
     // flip the compressed bit (0x80) without adding the laszip VLR — a
@@ -100,26 +100,63 @@ class LasSourceSpec extends SparkSpec {
   }
 
   test("LAZ reads through the same DSv2 source: equal rows, same schema") {
-    val d = Files.createTempDirectory("laz_read").toString
-    val pts = (0 until 7000).map { k =>
-      LasFormat.LasPoint(
-        x = (k % 100) * 1.5, y = (k % 37) * 2.0, z = (k % 11) * 1.5,
-        intensity = (k * 7) % 65536, returnNumber = 1 + (k % 3),
-        numberOfReturns = 3, classification = k % 32,
-        scanAngleRank = (k % 21) - 10, pointSourceId = k % 100,
-        gpsTime = 1000.0 + k * 0.25)
+    // every point format, with and without an extra-bytes tail: the LAZ
+    // read must equal its LAS twin as a table, in every single-column
+    // projection (each takes its own decode path through the layers) and
+    // in count()
+    val d = tempDir("laz_read")
+    val n = 2500
+    for (fmt <- Seq(0, 1, 2, 3, 6, 7, 8); extra <- Seq(0, 3)) {
+      val pts = (0 until n).map { k =>
+        LasFormat.LasPoint(
+          x = (k % 100) * 1.5, y = (k % 37) * 2.0, z = (k % 11) * 1.5,
+          intensity = (k * 7) % 65536, returnNumber = 1 + (k % 5),
+          numberOfReturns = 5, scanDirection = k % 2, edge = k % 9 == 0,
+          classification = (k * 3) % 256, scanAngleRank = (k % 201) - 100,
+          userData = k % 256, pointSourceId = k % 100, gpsTime = 1000.0 + k * 0.25,
+          red = (k * 11) % 65536, green = (k * 13) % 65536, blue = (k * 17) % 65536,
+          scannerChannel = k % 4, nir = (k * 19) % 65536,
+          synthetic = k % 2 == 0, keyPoint = k % 3 == 0, withheld = k % 5 == 0,
+          overlap = k % 7 == 0,
+          extra = Array.tabulate(extra)(j => ((k * 5 + j) % 256).toByte))
+      }
+      val tag = s"f$fmt-e$extra"
+      LasFormat.write(conf, s"$d/$tag/pts.las", pts, pointFormat = fmt, extraBytes = extra)
+      graft.sources.las.laz.LazFormat.write(conf, s"$d/$tag/pts.laz", pts,
+        pointFormat = fmt, chunkSize = 1000, extraBytes = extra)
+      val las = spark.read.format("las").load(s"$d/$tag/pts.las")
+      val laz = spark.read.format("las").load(s"$d/$tag/pts.laz")
+      assert(laz.schema == las.schema, tag)
+      assert(las.columns.contains("extra_bytes") == (extra > 0), tag)
+      assert(laz.count() == n && las.count() == n, tag)
+      assert(laz.exceptAll(las).isEmpty && las.exceptAll(laz).isEmpty, tag)
+      las.columns.foreach { c =>
+        assert(laz.select(c).collect().toSeq == las.select(c).collect().toSeq, s"$tag $c")
+      }
     }
-    LasFormat.write(conf, s"$d/pts.las", pts)
-    graft.sources.las.laz.LazFormat.write(conf, s"$d/pts.laz", pts, chunkSize = 1000)
-    val las = spark.read.format("las").load(s"$d/pts.las")
-    val laz = spark.read.format("las").load(s"$d/pts.laz")
-    assert(laz.schema == las.schema)
-    assert(laz.count() == 7000)
-    assert(laz.exceptAll(las).isEmpty && las.exceptAll(laz).isEmpty)
+  }
+
+  test("a NaN literal prunes no file: < <= > >= = equal a checkpointed copy") {
+    // Spark orders NaN above every double, so `x < NaN` and `x <= NaN`
+    // hold on every row; header bounds must not prune on a NaN bound
+    val d = tempDir("las_nan")
+    val pts = (0 until 10).map(k => LasFormat.LasPoint(k * 1.5, k * 0.5, 1.0, gpsTime = k))
+    LasFormat.write(conf, s"$d/f.las", pts)
+    val df = spark.read.format("las").load(d)
+    val copy = df.localCheckpoint()
+    val nan = lit(Double.NaN)
+    val preds = Seq("<" -> (col("x") < nan), "<=" -> (col("x") <= nan),
+      ">" -> (col("x") > nan), ">=" -> (col("x") >= nan), "=" -> (col("x") === nan))
+    for ((name, p) <- preds) {
+      val got = df.filter(p).orderBy("gps_time").collect().toSeq
+      assert(got == copy.filter(p).orderBy("gps_time").collect().toSeq, name)
+    }
+    assert(df.filter(col("x") < nan).count() == 10)
+    assert(df.filter(col("x") <= nan).count() == 10)
   }
 
   test("LAZ chunk table drives partitioning; header pruning still applies") {
-    val d = Files.createTempDirectory("laz_parts").toString
+    val d = tempDir("laz_parts")
     def tile(path: String, x0: Double, n: Int): Unit =
       graft.sources.las.laz.LazFormat.write(conf, path,
         (0 until n).map(k => LasFormat.LasPoint(x0 + (k % 100), k % 50, k % 7)),
@@ -136,7 +173,7 @@ class LasSourceSpec extends SparkSpec {
   }
 
   test("variable-chunked LAZ reads through DSv2 identically to LAS") {
-    val d = Files.createTempDirectory("laz_var_read").toString
+    val d = tempDir("laz_var_read")
     val pts = (0 until 4000).map { k =>
       LasFormat.LasPoint(
         x = (k % 83) * 1.25, y = (k % 29) * 3.0, z = (k % 13) * 0.5,
@@ -152,7 +189,7 @@ class LasSourceSpec extends SparkSpec {
   }
 
   test("mixed directory of .las and .laz serves one consistent table") {
-    val d = Files.createTempDirectory("laz_mixed").toString
+    val d = tempDir("laz_mixed")
     val pts = (0 until 1500).map(k =>
       LasFormat.LasPoint(k * 0.5, k * 0.25, 1.0, intensity = k, gpsTime = k))
     LasFormat.write(conf, s"$d/a.las", pts)
@@ -165,7 +202,7 @@ class LasSourceSpec extends SparkSpec {
   }
 
   test("LAS 1.4 formats 6/7/8: extended records round-trip through DSv2") {
-    val d = Files.createTempDirectory("las14").toString
+    val d = tempDir("las14")
     val pts = (0 until 800).map { k =>
       LasFormat.LasPoint(
         x = k * 0.5, y = k * 0.25, z = (k % 9) * 1.0,
@@ -210,7 +247,7 @@ class LasSourceSpec extends SparkSpec {
   test("format 8 record bytes match the ASPRS layout (golden offsets)") {
     // round-trip tests can't catch a matching writer+reader offset error;
     // this pins the on-disk layout to the published spec by hand
-    val d = Files.createTempDirectory("las14_golden").toString
+    val d = tempDir("las14_golden")
     val pt = LasFormat.LasPoint(
       x = 12.345, y = -6.789, z = 3.21, intensity = 0xBEEF,
       returnNumber = 5, numberOfReturns = 12, scanDirection = 1, edge = true,
@@ -242,7 +279,7 @@ class LasSourceSpec extends SparkSpec {
   }
 
   test("mixed 1.2 + 1.4 directory serves the shared-feature schema") {
-    val d = Files.createTempDirectory("las_mixed14").toString
+    val d = tempDir("las_mixed14")
     val pts = (0 until 300).map(k =>
       LasFormat.LasPoint(k * 0.5, k * 0.25, 1.0, gpsTime = k))
     LasFormat.write(conf, s"$d/a.las", pts, pointFormat = 1)
@@ -255,7 +292,7 @@ class LasSourceSpec extends SparkSpec {
   }
 
   test("LAZ 1.4 formats 6/7/8: layered decode matches the LAS twin through DSv2") {
-    val d = Files.createTempDirectory("laz14").toString
+    val d = tempDir("laz14")
     val pts = (0 until 800).map { k =>
       LasFormat.LasPoint(
         x = k * 0.5, y = k * 0.25, z = (k % 9) * 1.0,
@@ -300,7 +337,7 @@ class LasSourceSpec extends SparkSpec {
     // is_overlap and a f32 scan_angle in degrees (pc-io/src/las/
     // schema.rs:61-71); legacy packs 3 flags into the classification
     // byte (no overlap), extended carries a flags nibble + 0.006° units
-    val d = Files.createTempDirectory("las_flags").toString
+    val d = tempDir("las_flags")
     val pts = (0 until 400).map { k =>
       LasFormat.LasPoint(k * 0.5, k * 0.25, 1.0, gpsTime = k,
         classification = k % 32, scanAngleRank = (k % 61) - 30,
@@ -337,7 +374,7 @@ class LasSourceSpec extends SparkSpec {
   }
 
   test("extra-bytes records serve an opaque binary column through DSv2") {
-    val d = Files.createTempDirectory("las_extra").toString
+    val d = tempDir("las_extra")
     val pts = (0 until 600).map { k =>
       LasFormat.LasPoint(k * 0.5, k * 0.25, 1.0, gpsTime = k, scannerChannel = k % 3,
         extra = Array.tabulate(6)(j => ((k * 13 + j * 31) % 256).toByte))
@@ -381,7 +418,7 @@ class LasSourceSpec extends SparkSpec {
   }
 
   test("count() reads no point bytes: exact count survives a corrupt chunk body") {
-    val d = Files.createTempDirectory("laz_count").toString
+    val d = tempDir("laz_count")
     val pts = (0 until 1000).map(k =>
       LasFormat.LasPoint(k * 0.5, k * 0.25, 1.0, gpsTime = k, scannerChannel = k % 2))
     graft.sources.las.laz.LazFormat.write(conf, s"$d/f.laz", pts,
@@ -401,7 +438,7 @@ class LasSourceSpec extends SparkSpec {
   }
 
   test("point formats 2/3: RGB round-trips; gps offset shifts with format") {
-    val d2 = Files.createTempDirectory("las_rgb").toString
+    val d2 = tempDir("las_rgb")
     val pts = (0 until 500).map { k =>
       LasFormat.LasPoint(x = k * 0.5, y = k * 0.25, z = 1.0,
         intensity = k, gpsTime = 2000.0 + k,
@@ -426,7 +463,7 @@ class LasSourceSpec extends SparkSpec {
   }
 
   test("mixed-format directory serves the widest common schema") {
-    val dm = Files.createTempDirectory("las_mixed").toString
+    val dm = tempDir("las_mixed")
     val pts = (0 until 100).map(k => LasFormat.LasPoint(x = k, y = k, z = 0.0,
       intensity = k, gpsTime = k, red = k, green = k, blue = k))
     LasFormat.write(conf, s"$dm/a.las", pts, pointFormat = 2) // rgb, no gps

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -12,7 +11,7 @@ import graft.pc.{Aabb, Layout, PcQueries, Points}
   * evidence from Parquet footer statistics. */
 class LayoutSpec extends SparkSpec {
 
-  private lazy val tmp = Files.createTempDirectory("graft-layout").toString
+  private lazy val tmp = tempDir("graft-layout")
   private lazy val points = Points.fromLineitem(spark, sf001)
 
   // sf0.01 has ~60k points; batchSize 2048 => ~29 cells/row groups, enough

@@ -378,7 +378,7 @@ class LazCodecSpec extends AnyFunSuite {
 
   test("layered whole file: VLR (compressor 3, v3 items), chunks, variable mode") {
     val conf = new Configuration()
-    val dir = java.nio.file.Files.createTempDirectory("lazext").toString
+    val dir = SparkSpec.tempDir("lazext")
     val pts = (0 until 2500).map(k =>
       LasPoint(k * 0.5, k * 0.25, (k % 9) * 1.0, intensity = k % 65536,
         gpsTime = k * 0.1, scannerChannel = k % 3, scanAngleRank = (k % 400) - 200,
@@ -435,7 +435,7 @@ class LazCodecSpec extends AnyFunSuite {
 
   test("extra-bytes whole file: VLR declares the byte item, DSv2-visible") {
     val conf = new Configuration()
-    val dir = java.nio.file.Files.createTempDirectory("lazextra").toString
+    val dir = SparkSpec.tempDir("lazextra")
     val pts = (0 until 700).map { k =>
       LasPoint(k * 0.5, k * 0.25, 1.0, gpsTime = k,
         extra = Array.tabulate(4)(j => ((k * 7 + j) % 256).toByte))
@@ -476,7 +476,7 @@ class LazCodecSpec extends AnyFunSuite {
 
   test("VLR items disagreeing with the point format fail loudly") {
     val conf = new Configuration()
-    val dir = java.nio.file.Files.createTempDirectory("lazbaditems").toString
+    val dir = SparkSpec.tempDir("lazbaditems")
     val pts = (0 until 100).map(k => LasPoint(k * 0.5, k * 0.25, 1.0, gpsTime = k))
     LazFormat.write(conf, s"$dir/f.laz", pts, pointFormat = 7)
     // patch the second VLR item's type u16: RGB14 (11) → RGBNIR14 (12);
@@ -500,7 +500,7 @@ class LazCodecSpec extends AnyFunSuite {
     // round-trip tests can't catch a matching writer+reader framing
     // error; pin the container layout by hand for a 2-point format-8 file
     val conf = new Configuration()
-    val dir = java.nio.file.Files.createTempDirectory("lazgolden").toString
+    val dir = SparkSpec.tempDir("lazgolden")
     val pts = Seq(
       LasPoint(1.0, 2.0, 3.0, gpsTime = 100.0, nir = 7, scannerChannel = 1),
       LasPoint(1.5, 2.5, 3.5, gpsTime = 100.5, nir = 9, scannerChannel = 1))
@@ -537,7 +537,7 @@ class LazCodecSpec extends AnyFunSuite {
   test("layered compression: coherent extended cloud beats raw record size") {
     val pts = coherentCloud14(20000, 99)
     val bytes = LazFormat.encodeChunk(pts, 6)
-    val raw = 20000L * LazFormat.recordLength(6)
+    val raw = 20000L * LasFormat.recordLengthFor(6)
     assert(bytes.length < raw / 2,
       s"layered LAZ chunk ${bytes.length} B vs raw $raw B — compression ineffective")
   }
@@ -578,7 +578,7 @@ class LazCodecSpec extends AnyFunSuite {
 
   test("variable-chunked whole file: table-driven counts, DSv2-visible layout") {
     val conf = new Configuration()
-    val dir = java.nio.file.Files.createTempDirectory("lazvar").toString
+    val dir = SparkSpec.tempDir("lazvar")
     val pts = (0 until 2500).map(k =>
       LasPoint(k * 0.5, k * 0.25, (k % 9) * 1.0, intensity = k % 65536, gpsTime = k * 0.1))
     val counts = Seq(900, 77, 1111, 412)
@@ -613,7 +613,7 @@ class LazCodecSpec extends AnyFunSuite {
 
   test("whole file: header/VLR parse back, chunk layout covers all points") {
     val conf = new Configuration()
-    val dir = java.nio.file.Files.createTempDirectory("lazfile").toString
+    val dir = SparkSpec.tempDir("lazfile")
     val pts = (0 until 2500).map(k =>
       LasPoint(k * 0.5, k * 0.25, (k % 9) * 1.0, intensity = k % 65536, gpsTime = k * 0.1))
     LazFormat.write(conf, s"$dir/f.laz", pts, pointFormat = 3, chunkSize = 600)
@@ -638,7 +638,7 @@ class LazCodecSpec extends AnyFunSuite {
 
   test("corrupt header point count fails loudly against the chunk table") {
     val conf = new Configuration()
-    val dir = java.nio.file.Files.createTempDirectory("lazcorrupt").toString
+    val dir = SparkSpec.tempDir("lazcorrupt")
     val pts = (0 until 2500).map(k => LasPoint(k * 0.5, k * 0.25, 1.0))
     LazFormat.write(conf, s"$dir/f.laz", pts, pointFormat = 0, chunkSize = 600)
     // binary-patch the header's point count (u32 at offset 107): the
@@ -660,8 +660,97 @@ class LazCodecSpec extends AnyFunSuite {
   test("compression: coherent cloud compresses well below raw record size") {
     val pts = coherentCloud(20000, 99, 1)
     val bytes = LazFormat.encodeChunk(pts, 1)
-    val raw = 20000L * LazFormat.recordLength(1)
+    val raw = 20000L * LasFormat.recordLengthFor(1)
     assert(bytes.length < raw / 2,
       s"LAZ chunk ${bytes.length} B vs raw $raw B — compression ineffective")
+  }
+  /** SHA-256 of every file the LAS and LAZ writers produce for one seeded
+    * point set: point formats 0-3 and 6-8, without and with a 5-byte
+    * extra tail, LAZ with fixed (`z`) and variable (`v`) chunks. The
+    * literals were captured from the writers before their record codec
+    * was shared, so the shared codec must reproduce them byte for byte. */
+  test("writers reproduce pinned bytes for formats 0-3 and 6-8 (LAS, LAZ, extras, chunking)") {
+    val conf = new Configuration()
+    val dir = SparkSpec.tempDir("las_digest")
+    def pts(extra: Int) = {
+      val r = new scala.util.Random(20250)
+      (0 until 700).map { _ =>
+        LasPoint(x = r.nextDouble() * 5000 - 1000, y = r.nextDouble() * 3000,
+          z = r.nextGaussian() * 40, intensity = r.nextInt(65536),
+          returnNumber = 1 + r.nextInt(15), numberOfReturns = 1 + r.nextInt(15),
+          scanDirection = r.nextInt(2), edge = r.nextBoolean(),
+          classification = r.nextInt(256), scanAngleRank = r.nextInt(60001) - 30000,
+          userData = r.nextInt(256), pointSourceId = r.nextInt(65536),
+          gpsTime = 1e8 + r.nextDouble() * 1e4, red = r.nextInt(65536),
+          green = r.nextInt(65536), blue = r.nextInt(65536),
+          scannerChannel = r.nextInt(4), nir = r.nextInt(65536),
+          synthetic = r.nextBoolean(), keyPoint = r.nextBoolean(),
+          withheld = r.nextBoolean(), overlap = r.nextBoolean(),
+          extra = Array.fill(extra)(r.nextInt(256).toByte))
+      }
+    }
+    val scale = (0.001, 0.002, 0.0005)
+    val offset = (-1000.0, 10.0, 0.5)
+    def sha(name: String): String = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir, name)))
+      .map(b => f"${b & 0xff}%02x").mkString
+    val got = for (fmt <- Seq(0, 1, 2, 3, 6, 7, 8); extra <- Seq(0, 5);
+        kind <- Seq("las", "laz", "lazv")) yield {
+      val name = s"$kind$fmt${if (extra > 0) "e" else ""}"
+      val p = pts(extra)
+      kind match {
+        case "las" => LasFormat.write(conf, s"$dir/$name", p, fmt, scale, offset, extra)
+        case "laz" => LazFormat.write(conf, s"$dir/$name", p, fmt, scale, offset,
+          chunkSize = 256, extraBytes = extra)
+        case "lazv" => LazFormat.write(conf, s"$dir/$name", p, fmt, scale, offset,
+          variableChunks = Some(Seq(300, 1, 399)), extraBytes = extra)
+      }
+      name -> sha(name)
+    }
+    val pinned = Map(
+      "las0" -> "aeae35343c45ec43052075a7f6d7cdd1699aa94f57cc7691ef4cc89c34ec564e",
+      "laz0" -> "55cd7e5f4e26bb69776e7d64d1bb3fbad4810ab511a20053d164783768617f25",
+      "lazv0" -> "a3984f1eac64b9f9b29f8e6908c5a6de71b4d5be672dd985b9d6adffd6f45e3d",
+      "las0e" -> "68dd856aa282ba3c59bf5c436b7fa3cfb6826bf1324db8ae9f58edb8cd40ad31",
+      "laz0e" -> "0180a76b73e647a83bd7c8bc6c125f54d4ab6780ecde9e7456e7f612c3e796b7",
+      "lazv0e" -> "d50a4a7f296b523792787b2b4f4273f453c8cdaf3aae30235dce17789761fe88",
+      "las1" -> "94efa679e9f6be019b21f7a8a1e723507080599252504ff3440b674c5d793308",
+      "laz1" -> "1df9e632fc4fc52e7ad5682965995ba78ec97182da9610ccedcdcb7c478df596",
+      "lazv1" -> "6f5ee1e1f8cdc7cf2a8b7d1fc5f5dba726f11ab5dd64d8d27be9402af67e0b4c",
+      "las1e" -> "fb50c22b2e221c7649def5c250be5dfb038490f4f2c72ab1da29e8e5d20c0e63",
+      "laz1e" -> "b240200eefe5fce27430bc404d5d9a0fe87ec9c38770ec74c0d16a7d313ff239",
+      "lazv1e" -> "c18c89f98e323bdd7b24090e8aa27f061571fd9ad4c88db94f54c771043daa40",
+      "las2" -> "acdd8f758e509854447b9a66f753008a958fe3ba47f8c308c614a8fe465777dd",
+      "laz2" -> "f9f814c7d59c37ca85bdb8a7617b7c977b43935869838ba06e6d3f241ad7c21d",
+      "lazv2" -> "4574a5ae91f299dc93f825a8bb71c7cdc0ca1d182bcc68b8c6e2d37c7d8c0382",
+      "las2e" -> "9bd41f38459d7f4abf0c9d34971fca5a2ec539647f46324994defbca934cc4b6",
+      "laz2e" -> "246120d14f01b873ff70f255a1e58f1a33679f283b4d5132482f2fe3fe9a5443",
+      "lazv2e" -> "c920e5288cb0fa6f7ef4c438fa22f86cb3be499d1b693d4215f3911e87a98dc5",
+      "las3" -> "85ff9a051f2832d9807afb76fdf05d7d43cbcdd54ba88137e4695a2cf89f509a",
+      "laz3" -> "de686a86e3b1c05acf4131d27c2762f1c9f32a14ddce58963986e9d1a69bd6f8",
+      "lazv3" -> "0f2fff2cea6bf59a9d0fd2258d293d360392346f823768c405ccad9fffce85f2",
+      "las3e" -> "014a1a24a44ae05a09e29f53a06753a1a490be1e1e9a0748aade49c7b7d47c74",
+      "laz3e" -> "402b494475a9c0aa76397cbc8aa8e36e3daf78bb6934ce37761f02967aa005cf",
+      "lazv3e" -> "bbc2fecc966222fbdff25e6b189d54df4cba7500c97c331936e74414887dde3d",
+      "las6" -> "ef692a32472f3d07001e5833b24fcd7082df7f8215fe9c65ca01e0c6a22c9e64",
+      "laz6" -> "d300dcd9133fe82f2f82b9e765febcd37638399aa3f6437f828ae72c3e2d36d3",
+      "lazv6" -> "b39f1e8272a951ee1620dea7957eee70e526297183a86169e46cf165b7d0999b",
+      "las6e" -> "2b70850cf452e5698ea11c2672b0ff9548fc1db177e49118c8ab4437a6fbfa64",
+      "laz6e" -> "6538b45b4578e2d06742653bbb6ea89223b6a67d3209d2559900346d8dbb06b5",
+      "lazv6e" -> "fbbe0ab7dedc7621e5fbf62162e0ed276ab01c4450547d3e0a8d6af7ab9cdb38",
+      "las7" -> "d4ad4205d631cf062935ba3222d3ede5d054520673b7246639aad95f3972115b",
+      "laz7" -> "961258407c99d471bacf1d02cac50c0b9f04b569e12c78b138c5157e719bcf23",
+      "lazv7" -> "41b1c0406690024b9379a6d563fb5328fac585ef09c80fc59a96fe8aac385402",
+      "las7e" -> "a65cb23752587a698b6ac5b1605c21e52868ff7f02ce1e99f1fdcc5a36d45e7b",
+      "laz7e" -> "8b7926eb5019e29f7e2881157ddc9e7ec748144797daf37d664fcced1ab4ccd6",
+      "lazv7e" -> "265ac5916a8689ca71794d54f5c4d38b2670fb148353f2643fc15c3cdcd13cd3",
+      "las8" -> "1c444d7ba0807612c9d2ec88ebdfc109f19cd47af0b2c09a3aa386d626c72abc",
+      "laz8" -> "7500bff9409555232a6ad16057b95a9aafb378cb53c47bf50dc38e957185722a",
+      "lazv8" -> "bd1dfb05e46782068c9faa140020b646fa0b98ae715fa15c1faab4f4b33f9111",
+      "las8e" -> "aa14f0814cf10a481d74b8e36547e6391c7f31b45283d89e0179c1b799f222b8",
+      "laz8e" -> "bc9e26b1e449a2931d257710dcc0c0b4cbbdc659f0d52e10c75e6cee5c63e8cd",
+      "lazv8e" -> "573d904d73534e376140d064387071f7992c63e30702a925cfac6d8e4cae600a")
+    got.foreach { case (name, digest) => assert(digest == pinned(name), name) }
+    assert(got.map(_._1).toSet == pinned.keySet)
   }
 }

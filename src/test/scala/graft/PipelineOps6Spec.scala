@@ -96,7 +96,7 @@ class PipelineOps6Spec extends SparkSpec {
   test("bpe applies merges greedily left-to-right and iterates on merged symbols") {
     val s: org.apache.spark.sql.SparkSession = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bpe_fix").toString
+    val dir = tempDir("bpe_fix")
     // 'aaaa' x3 docs: 3 (a,a) pairs per word x freq 3 = 9. Greedy
     // application yields 'aa aa' (not 'aa a a'), so step 3 must see
     // (aa,aa) x3 and NOT (aa,a). 'bc' x5 contributes (b,c) x5.
@@ -140,7 +140,7 @@ class PipelineOps6Spec extends SparkSpec {
   test("bpe stops early on a pair-free corpus; tokenize is then the identity") {
     val s: org.apache.spark.sql.SparkSession = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bpe_edge").toString
+    val dir = tempDir("bpe_edge")
     // single-char words only: no adjacent pairs exist, 0 merges happen
     Seq((0L, "a b c"), (1L, "b c a")).toDF("doc_id", "text")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
@@ -156,7 +156,7 @@ class PipelineOps6Spec extends SparkSpec {
   test("events_anomaly flags a planted hour spike and only spikes (one-sided)") {
     val s: org.apache.spark.sql.SparkSession = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("anom_fix").toString
+    val dir = tempDir("anom_fix")
     val nsH = graft.events.EventOps.NsPerHour
     // type 'a': hour 3 of each of 12 days has 5 events — except day 7,
     // where it has 50 (the spike); hour 5 is constant (never flagged).
@@ -218,7 +218,7 @@ class PipelineOps6Spec extends SparkSpec {
   test("ccnet tie-collapse: a language whose docs all score identically lands in ONE bucket") {
     val s: org.apache.spark.sql.SparkSession = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ccnet_tie").toString
+    val dir = tempDir("ccnet_tie")
     // same text -> same bigram profile -> identical lm_ppm for all six
     val rows = (0L until 6L).map(i => (i, "the fast cat ran", "xx", "s", 16L))
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -232,7 +232,7 @@ class PipelineOps6Spec extends SparkSpec {
   test("sq8 handles constant dimensions (rng floored at 1) on a planted fixture") {
     val s: org.apache.spark.sql.SparkSession = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("sq8_const").toString
+    val dir = tempDir("sq8_const")
     // dim 0 constant across vectors; remaining dims vary; unit-ish floats
     val vecs = (0L until 30L).map { i =>
       (i, Array.tabulate(64)(d =>

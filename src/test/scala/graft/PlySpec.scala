@@ -23,7 +23,7 @@ class PlySpec extends SparkSpec {
   }
 
   private def roundTrip(format: String): Unit = {
-    val dir = Files.createTempDirectory("ply").toString
+    val dir = tempDir("ply")
     val path = s"$dir/cloud.ply"
     val df = cloud()
     Ply.write(df, path, format)
@@ -43,7 +43,7 @@ class PlySpec extends SparkSpec {
   test("PLY ascii round-trip")(roundTrip("ascii"))
 
   test("PLY list properties: faces round-trip as array columns, both encodings") {
-    val dir = Files.createTempDirectory("ply_list").toString
+    val dir = tempDir("ply_list")
     val path = s"$dir/mesh.ply"
     val text =
       """ply
@@ -82,7 +82,7 @@ class PlySpec extends SparkSpec {
   }
 
   test("PLY reader skips non-vertex elements (scalar + list) before vertex") {
-    val dir = Files.createTempDirectory("ply").toString
+    val dir = tempDir("ply")
     val path = s"$dir/mixed.ply"
     val text =
       """ply
@@ -109,7 +109,7 @@ class PlySpec extends SparkSpec {
   }
 
   test("PLY reader stops at the target element: absent trailing data is fine") {
-    val dir = Files.createTempDirectory("ply").toString
+    val dir = tempDir("ply")
     val path = s"$dir/truncated.ply"
     // a face element is DECLARED after vertex but its data is missing —
     // a reader that parse-and-discards trailing elements throws EOF here;

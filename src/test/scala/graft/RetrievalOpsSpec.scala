@@ -25,7 +25,7 @@ class RetrievalOpsSpec extends SparkSpec {
 
   test("docBm25 equals an independent BigInt re-derivation on a hand corpus") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("bm25").toString
+    val tmp = tempDir("bm25")
     // doc 4 has no query term and must be absent from the result
     val corpus = Seq(
       (1L, "x y vector hash vector", "en", "s", 22L),
@@ -62,7 +62,7 @@ class RetrievalOpsSpec extends SparkSpec {
         val text = Seq.fill(1 + rnd.nextInt(30))(vocab(rnd.nextInt(vocab.size))).mkString(" ")
         (id, text, "en", "s", text.length.toLong)
       }
-      val tmp = java.nio.file.Files.createTempDirectory(s"bm25p$seed").toString
+      val tmp = tempDir(s"bm25p$seed")
       corpus.toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.parquet(s"$tmp/documents.parquet")
       val terms = Seq("vector", "stream", "hash")
@@ -89,7 +89,7 @@ class RetrievalOpsSpec extends SparkSpec {
 
   test("docBm25 ranks an on-topic doc above a diluted one (saturation + length norm)") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("bm25rank").toString
+    val tmp = tempDir("bm25rank")
     // same tf of 'vector' (2), but doc 2 buries it in a 4x longer text:
     // the dl/avgdl length normalization must rank doc 1 first
     Seq(

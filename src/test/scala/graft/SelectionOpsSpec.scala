@@ -59,7 +59,7 @@ class SelectionOpsSpec extends SparkSpec {
       (1L, "alpha beta gamma delta", "en", "s", 22L), // exact dup of 0
       (2L, "zeta eta theta iota", "en", "s", 19L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_nov").toString
+    val dir = tempDir("graft_nov")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val n = SelectionOps.docNovelty(spark, dir).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -77,7 +77,7 @@ class SelectionOpsSpec extends SparkSpec {
       val text = if (i > 20) s"$base zonly zonly zonly" else base
       (i, text, "en", "s", text.length.toLong)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift").toString
+    val dir = tempDir("graft_drift")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val top = SelectionOps.docDrift(5)(spark, dir).collect()
     assert(top.head.getString(0) == "zonly", s"expected zonly first, got ${top.head}")
@@ -115,7 +115,7 @@ class SelectionOpsSpec extends SparkSpec {
       (6L, 9L * us, "C", "signup", 0.0, "{}"),
       (7L, 9L * us, "C", "purchase", 3.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val dir = java.nio.file.Files.createTempDirectory("graft_attr").toString
+    val dir = tempDir("graft_attr")
     rows.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val got = EventOps.attribution(spark, dir).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.events.EventOps
 import graft.sim.SimOps
 
@@ -53,7 +51,7 @@ class SeqMmrSpec extends SparkSpec {
       val vecs = (0L until n.toLong).map { id =>
         id -> Array.fill(8)((rnd.nextInt(2001) - 1000) / 1000.0f)
       }.toMap
-      val dir = Files.createTempDirectory(s"mmr$seed").toString
+      val dir = tempDir(s"mmr$seed")
       import spark.implicits._
       vecs.toSeq.map { case (id, v) => (id, v, (id % 3).toInt) }
         .toDF("vec_id", "embedding", "label")
@@ -82,7 +80,7 @@ class SeqMmrSpec extends SparkSpec {
 
   test("seqPattern matches users by regex over the ordered type string") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("seqpat").toString
+    val dir = tempDir("seqpat")
     // user 1: v c p  (matches vc.*p)   user 2: v s c p (v NOT followed by c)
     // user 3: v c s  (no purchase)     user 4: c v c p (matches: vc at pos 2)
     val rows = Seq(
@@ -107,7 +105,7 @@ class SeqMmrSpec extends SparkSpec {
         (eid, (rnd.nextInt(1000) * 1000L + rnd.nextInt(3)) * 1000L, // µs ties on purpose
           rnd.nextInt(20).toLong, types(rnd.nextInt(types.size)))
       }
-      val dir = Files.createTempDirectory(s"seqprop$seed").toString
+      val dir = tempDir(s"seqprop$seed")
       rows.map { case (e, ns, u, ty) => (e, ns, u, ty, 1.0, "{}") }
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .write.parquet(s"$dir/events.parquet")
@@ -125,7 +123,7 @@ class SeqMmrSpec extends SparkSpec {
 
   test("seqPattern orders the string by (us, event_id), not arrival order") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("seqpat_order").toString
+    val dir = tempDir("seqpat_order")
     // same µs for all three events: event_id must break the tie, giving
     // v(1) c(2) p(3) regardless of the shuffled input order below
     Seq((3L, 7000L, 9L, "purchase", 1.0, "{}"),

@@ -17,7 +17,7 @@ class SidecarRobustnessSpec extends SparkSpec {
 
   /** A layout-shaped dir (one c1 partition, layout columns). */
   private def tinyLayout(): String = {
-    val p = Files.createTempDirectory("robust_layout").toString
+    val p = tempDir("robust_layout")
     spark.range(4).select(col("id").as("vec_id"),
         expr("CAST(array(1.0, 2.0) AS array<float>)").as("embedding"),
         col("id").as("scid"), col("id").as("dist"),
@@ -27,7 +27,7 @@ class SidecarRobustnessSpec extends SparkSpec {
   }
 
   test("a wrong-schema DV sidecar fails loudly instead of reading as 'nothing deleted'") {
-    val dv = Files.createTempDirectory("robust_bad_dv").toString
+    val dv = tempDir("robust_bad_dv")
     // data files exist, but the vec_id/c1 columns do not
     spark.range(3).select(col("id").as("wrong_column"))
       .write.mode("overwrite").parquet(dv)
@@ -37,7 +37,7 @@ class SidecarRobustnessSpec extends SparkSpec {
   }
 
   test("a zero-committed-file DV dir is structurally empty: compaction is a no-op") {
-    val dv = Files.createTempDirectory("robust_empty_dv").toString
+    val dv = tempDir("robust_empty_dv")
     // only metadata under the dir: a partitioned zero-row write's shape
     Files.writeString(Paths.get(dv, "_SUCCESS"), "")
     assert(Ivf2.compactDeletes(spark, tinyLayout(), dv).isEmpty)
@@ -46,7 +46,7 @@ class SidecarRobustnessSpec extends SparkSpec {
   test("compactDeletes refuses a streaming delta segment (commit-log bypass)") {
     val seg = tinyLayout()
     Files.createDirectory(Paths.get(seg, "_spark_metadata"))
-    val dv = Files.createTempDirectory("robust_dv").toString
+    val dv = tempDir("robust_dv")
     val e = intercept[IllegalArgumentException] {
       Ivf2.compactDeletes(spark, seg, dv)
     }
@@ -54,7 +54,7 @@ class SidecarRobustnessSpec extends SparkSpec {
   }
 
   test("a wrong-schema delta segment fails loudly instead of reading as empty") {
-    val seg = Files.createTempDirectory("robust_bad_seg").toString
+    val seg = tempDir("robust_bad_seg")
     spark.range(3).select(col("id").as("wrong_column"))
       .write.mode("overwrite").parquet(seg)
     intercept[AnalysisException] {
@@ -63,7 +63,7 @@ class SidecarRobustnessSpec extends SparkSpec {
   }
 
   test("a delta segment with an EMPTY commit log hides in-flight data files") {
-    val seg = Files.createTempDirectory("robust_inflight_seg")
+    val seg = Paths.get(tempDir("robust_inflight_seg"))
     // an in-flight (uncommitted) data file plus a batchless metadata log
     spark.range(2).select(col("id").as("vec_id"),
         expr("CAST(array(1.0, 2.0) AS array<float>)").as("embedding"),
@@ -78,7 +78,7 @@ class SidecarRobustnessSpec extends SparkSpec {
     // batch filtered out): the log has a batch, the committed file SET
     // is empty, and the next batch's part file is in flight on disk —
     // the segment must read as EMPTY, not crash schema inference
-    val seg = Files.createTempDirectory("robust_zerofile_seg")
+    val seg = Paths.get(tempDir("robust_zerofile_seg"))
     spark.range(2).select(col("id").as("vec_id"),
         expr("CAST(array(1.0, 2.0) AS array<float>)").as("embedding"),
         col("id").as("scid"), col("id").as("dist"), col("id").as("c1"))
@@ -94,8 +94,8 @@ class SidecarRobustnessSpec extends SparkSpec {
     // deletion) — reading that as an empty delta would silently drop the
     // whole segment from a composed search (r11 advice item 1)
     import scala.jdk.CollectionConverters._
-    val stage = Files.createTempDirectory("robust_gone_stage")
-    val src = Files.createTempDirectory("robust_gone_src")
+    val stage = Paths.get(tempDir("robust_gone_stage"))
+    val src = Paths.get(tempDir("robust_gone_src"))
     val rows = spark.range(2).select(col("id").as("vec_id"),
       expr("CAST(array(1.0, 2.0) AS array<float>)").as("embedding"),
       col("id").as("scid"), col("id").as("dist"), col("id").as("c1"))
@@ -103,8 +103,8 @@ class SidecarRobustnessSpec extends SparkSpec {
     val part = Files.list(stage).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
     Files.move(part, src.resolve("wave0.parquet"))
-    val seg = Files.createTempDirectory("robust_gone_seg")
-    val ckpt = Files.createTempDirectory("robust_gone_ckpt")
+    val seg = Paths.get(tempDir("robust_gone_seg"))
+    val ckpt = Paths.get(tempDir("robust_gone_ckpt"))
     val q = spark.readStream.schema(rows.schema).parquet(src.toString)
       .writeStream.format("parquet").option("path", seg.toString)
       .option("checkpointLocation", ckpt.toString)
@@ -127,7 +127,7 @@ class SidecarRobustnessSpec extends SparkSpec {
   }
 
   test("foldDelta refuses base == delta under path aliasing") {
-    val base = Files.createTempDirectory("robust_selffold_base")
+    val base = Paths.get(tempDir("robust_selffold_base"))
     spark.range(2).select(col("id").as("vec_id"),
         expr("CAST(array(1.0, 2.0) AS array<float>)").as("embedding"),
         col("id").as("scid"), col("id").as("dist"), col("id").as("c1"))

@@ -29,6 +29,13 @@ object SparkSpec {
     // opt out again.
     .withExtensions(new graft.plans.GraftExtensions())
     .getOrCreate()
+
+  /** A fresh directory under the system temp dir, deleted at JVM exit
+    * ([[DatasetCache.registerTempDir]]), so suite runs leave no data
+    * behind. The one way every spec makes a scratch directory; suites
+    * without Spark call it here (it does not start the session). */
+  def tempDir(prefix: String): String =
+    DatasetCache.registerTempDir(java.nio.file.Files.createTempDirectory(prefix).toString)
 }
 
 trait SparkSpec extends AnyFunSuite {
@@ -36,11 +43,8 @@ trait SparkSpec extends AnyFunSuite {
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 
-  /** A fresh directory under the system temp dir, deleted at JVM exit
-    * ([[DatasetCache.registerTempDir]]), so suite runs leave no data
-    * behind. */
-  def tempDir(prefix: String): String =
-    DatasetCache.registerTempDir(java.nio.file.Files.createTempDirectory(prefix).toString)
+  /** See [[SparkSpec.tempDir]]. */
+  def tempDir(prefix: String): String = SparkSpec.tempDir(prefix)
 
   /** A session on the shared context WITHOUT the graft extensions (the
     * shared session has them on by default — `spark.sql.extensions`

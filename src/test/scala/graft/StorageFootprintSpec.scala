@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
@@ -13,7 +11,7 @@ class StorageFootprintSpec extends SparkSpec {
   private lazy val points = Points.fromLineitem(spark, sf001).select("x", "y", "z", "pid")
 
   test("all six configs write; compression and raw-grid shrink the footprint") {
-    val dir = Files.createTempDirectory("footprint").toString
+    val dir = tempDir("footprint")
     val sizes = StorageFootprint
       .run(spark, points, dir, inputBytes = 1000000L, rowGroupRows = 4096L)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -33,7 +31,7 @@ class StorageFootprintSpec extends SparkSpec {
     // the reference reports converted size / LAZ size (README.md:48-67);
     // with the LAZ codec the CLI path measures exactly that: write a LAZ
     // twin of the cloud, use its byte size as the denominator
-    val dir = Files.createTempDirectory("footprint_laz").toString
+    val dir = tempDir("footprint_laz")
     val pts = points.limit(2000).collect().map { r =>
       graft.sources.las.LasFormat.LasPoint(
         r.getDouble(r.fieldIndex("x")), r.getDouble(r.fieldIndex("y")),
@@ -57,7 +55,7 @@ class StorageFootprintSpec extends SparkSpec {
   }
 
   test("raw grid coordinates resolve back within half a grid step") {
-    val dir = Files.createTempDirectory("rawgrid").toString
+    val dir = tempDir("rawgrid")
     val scale = 0.001
     StorageFootprint.toRawGrid(points, scale)
       .write.mode("overwrite").parquet(s"$dir/raw")

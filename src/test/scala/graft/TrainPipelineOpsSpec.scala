@@ -70,7 +70,7 @@ class TrainPipelineOpsSpec extends SparkSpec {
 
   test("docBigramTop counts adjacent pairs exactly (tiny hand-checked corpus)") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("bigram").toString
+    val tmp = tempDir("bigram")
     Seq(
       (1L, "a b a b c", "en", "s", 9L),
       (2L, "a b", "en", "s", 3L),

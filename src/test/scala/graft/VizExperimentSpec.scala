@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.pc.{Layout, Points, VizExperiment}
 
 /** 16-probe-per-level viz workload over a quadtree LoD layout. */
@@ -19,7 +17,7 @@ class VizExperimentSpec extends SparkSpec {
   }
 
   test("scan arm and index arm agree; the index is selective at leaf levels") {
-    val dir = Files.createTempDirectory("viz").toString
+    val dir = tempDir("viz")
     val pts = Points.withImportance(
       Points.fromLineitem(spark, sf001).select("x", "y", "pid"), seed = 7L)
     val geo = Layout.writeQuadtree(pts, dir, batchSize = 2048L)
@@ -45,7 +43,7 @@ class VizExperimentSpec extends SparkSpec {
   }
 
   test("R-tree index returns exactly the linear scan's row groups") {
-    val dir = Files.createTempDirectory("viz_idx").toString
+    val dir = tempDir("viz_idx")
     val pts = Points.withImportance(
       Points.fromLineitem(spark, sf001).select("x", "y", "pid"), seed = 7L)
     val geo = Layout.writeQuadtree(pts, dir, batchSize = 2048L)

@@ -1,7 +1,5 @@
 package graft.lake
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.{DatasetCache, SparkSpec}
@@ -14,8 +12,7 @@ import graft.{DatasetCache, SparkSpec}
 class LakeRobustnessSpec extends SparkSpec {
 
   private def freshTable(): String = {
-    val d = Files.createTempDirectory("graft_lake_rb").toString
-    DatasetCache.registerTempDir(d)
+    val d = tempDir("graft_lake_rb")
     d
   }
 
@@ -102,8 +99,7 @@ class LakeRobustnessSpec extends SparkSpec {
   test("a vacuumed change feed fails covers() and the MV falls back to full recompute") {
     import spark.implicits._
     val src = freshTable()
-    val view = Files.createTempDirectory("graft_lake_rb_mv").toString
-    DatasetCache.registerTempDir(view)
+    val view = tempDir("graft_lake_rb_mv")
     LakeTable.append(spark, src, df(0 until 20))
     MaterializedView.create(spark, view, src, Seq("id"), Seq("v"))
     // DML traffic the view hasn't folded yet, then vacuum reclaims the
