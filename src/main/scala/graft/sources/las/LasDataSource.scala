@@ -9,10 +9,11 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.expressions.{Expression => V2Expression, NamedReference, Transform}
+import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -70,7 +71,17 @@ final class SerializableHadoopConf(@transient var value: Configuration)
   *    pushdown, exactly the reference's contract
   *    (pc-io/src/las/provider.rs:91-118);
   *  - `SupportsReportStatistics`: exact row count + byte size from the
-  *    headers (I5).
+  *    headers (I5);
+  *  - `SupportsPushDownAggregates`: with no filter and no GROUP BY,
+  *    `COUNT(*)`, `COUNT(col)` and `MIN`/`MAX` of x, y, z are answered
+  *    from the headers as one local row (the reference reports the same
+  *    header statistics as exact — pc-io/src/las/provider.rs:120-182).
+  *    This relies on the header contract: the point count is exact, and
+  *    the LAS spec defines the header extents as the extents of the
+  *    records' resolved coordinates (file pruning above relies on them
+  *    too). [[LasFormat.header]] writes them with the `raw * scale +
+  *    offset` arithmetic [[LasFormat.project]] decodes with, so the
+  *    answers equal a decoding scan's. Any other aggregate decodes.
   *
   * Usage: `spark.read.format("las").load(path)` (a file, or a directory
   * of .las/.laz files).
@@ -78,8 +89,22 @@ final class SerializableHadoopConf(@transient var value: Configuration)
 class LasDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "las"
 
-  private def filesFor(options: CaseInsensitiveStringMap): Seq[String] = {
-    val conf = LasHadoopConf.sessionConf()
+  /** The last load's path options and headers. Spark calls `inferSchema`
+    * and then `getTable` on one provider instance per load, so each
+    * header is read once per load, not twice. */
+  private var loaded: Option[(Seq[String], Seq[(String, LasFormat.LasHeader)])] = None
+
+  private def headersFor(options: CaseInsensitiveStringMap): Seq[(String, LasFormat.LasHeader)] = {
+    val key = Seq(options.get("path"), options.get("paths"))
+    loaded.collect { case (k, hs) if k == key => hs }.getOrElse {
+      val conf = LasHadoopConf.sessionConf()
+      val hs = filesFor(conf, options).map(f => f -> LasFormat.readHeader(conf, f))
+      loaded = Some(key -> hs)
+      hs
+    }
+  }
+
+  private def filesFor(conf: Configuration, options: CaseInsensitiveStringMap): Seq[String] = {
     // Spark DSv2 passes multiple load() paths as a JSON array string
     // (DataSourceV2Utils.getOptionsWithPaths), NOT comma-separated
     def parsePaths(v: String): Seq[String] =
@@ -102,23 +127,16 @@ class LasDataSource extends TableProvider with DataSourceRegister {
   }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val files = filesFor(options)
-    require(files.nonEmpty, "las source: no input files")
-    val conf = LasHadoopConf.sessionConf()
-    val headers = files.map(f => LasFormat.readHeader(conf, f))
+    val headers = headersFor(options).map(_._2)
+    require(headers.nonEmpty, "las source: no input files")
     // widest schema every input format can serve (gps/rgb/extra_bytes
     // only when all files carry them)
-    LasFormat.commonSchema(
-      headers.map(_.pointFormat),
-      headers.map(_.extraBytes))
+    LasFormat.commonSchema(headers.map(_.pointFormat), headers.map(_.extraBytes))
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table = {
-    val files = filesFor(new CaseInsensitiveStringMap(properties))
-    val conf = LasHadoopConf.sessionConf()
-    new LasTable(schema, files.map(f => f -> LasFormat.readHeader(conf, f)))
-  }
+      properties: java.util.Map[String, String]): Table =
+    new LasTable(schema, headersFor(new CaseInsensitiveStringMap(properties)))
 
   override def supportsExternalMetadata(): Boolean = false
 }
@@ -136,10 +154,12 @@ class LasTable(schema: StructType, headers: Seq[(String, LasFormat.LasHeader)])
 class LasScanBuilder(fullSchema: StructType,
     headers: Seq[(String, LasFormat.LasHeader)])
     extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns {
+    with SupportsPushDownRequiredColumns with SupportsPushDownAggregates {
 
   private var required: StructType = fullSchema
   private var pushed: Array[Filter] = Array.empty
+  private var filtered = false
+  private var answered: Option[LasHeaderAggregate] = None
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     // preserve our field order/metadata; keep only requested names
@@ -149,18 +169,70 @@ class LasScanBuilder(fullSchema: StructType,
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     // accept x/y/z range predicates for header-bounds pruning; everything
     // stays residual (Inexact pushdown — Spark re-applies all filters)
+    filtered = filters.nonEmpty
     pushed = filters.filter(LasPruning.prunable)
     filters
   }
 
   override def pushedFilters(): Array[Filter] = pushed
 
-  override def build(): Scan = new LasScan(fullSchema, required, headers, pushed)
+  override def supportCompletePushDown(agg: Aggregation): Boolean =
+    headerAnswer(agg).isDefined
+
+  override def pushAggregation(agg: Aggregation): Boolean = {
+    answered = headerAnswer(agg)
+    answered.isDefined
+  }
+
+  override def build(): Scan =
+    answered.getOrElse(new LasScan(fullSchema, required, headers, pushed))
+
+  /** `agg` answered from the headers alone: with no filter and no
+    * grouping, `COUNT(*)` and non-distinct `COUNT` of a non-nullable
+    * column are the summed point counts, `MIN`/`MAX` of x, y or z the
+    * extremes of the non-empty files' header bounds (null when there is
+    * no point). None when any function needs the points. */
+  private def headerAnswer(agg: Aggregation): Option[LasHeaderAggregate] =
+    if (filtered || agg.groupByExpressions.nonEmpty) None
+    else {
+      val count = headers.map(_._2.pointCount).sum
+      val bounds = headers.collect { case (_, h) if h.pointCount > 0 => h.bounds }
+      def field(e: V2Expression): Option[StructField] = e match {
+        case r: NamedReference if r.fieldNames.length == 1 =>
+          fullSchema.find(_.name == r.fieldNames.head)
+        case _ => None
+      }
+      def bound(e: V2Expression, pick: Seq[(Double, Double)] => Double) =
+        field(e).map(_.name).filter(LasPruning.dims).map(d =>
+          DoubleType -> (if (bounds.isEmpty) null else pick(bounds.map(_(d)))))
+      val values: Seq[Option[(DataType, Any)]] = agg.aggregateExpressions.toSeq.map {
+        case _: CountStar => Some(LongType -> count)
+        case c: Count if !c.isDistinct && field(c.column).exists(!_.nullable) =>
+          Some(LongType -> count)
+        case m: Min => bound(m.column, _.map(_._1).min)
+        case m: Max => bound(m.column, _.map(_._2).max)
+        case _ => None
+      }
+      if (values.contains(None)) None
+      else {
+        val (types, row) = values.flatten.unzip
+        Some(new LasHeaderAggregate(
+          StructType(types.zipWithIndex.map { case (t, i) => StructField(s"agg$i", t) }),
+          new GenericInternalRow(row.toArray)))
+      }
+    }
+}
+
+/** An aggregate answered from the headers: one row, which Spark plans as
+  * a `LocalTableScanExec` (no read task, no decode). */
+final class LasHeaderAggregate(schema: StructType, row: InternalRow) extends LocalScan {
+  override def readSchema(): StructType = schema
+  override def rows(): Array[InternalRow] = Array(row)
 }
 
 /** Filter-vs-header-bounds interval logic (I1). */
 object LasPruning {
-  private val dims = Set("x", "y", "z")
+  val dims: Set[String] = Set("x", "y", "z")
 
   def prunable(f: Filter): Boolean = f match {
     case GreaterThan(a, v: Number) => dims(a)

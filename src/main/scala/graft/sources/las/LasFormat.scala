@@ -53,7 +53,11 @@ object LasFormat {
     def extraBytes: Int = recordLength - recordLengthFor(pointFormat)
   }
 
+  /** Headers parsed by [[readHeader]] since JVM start. */
+  private[graft] val headerReads = new java.util.concurrent.atomic.AtomicLong()
+
   def readHeader(conf: Configuration, path: String): LasHeader = {
+    headerReads.incrementAndGet()
     val p = new Path(path)
     val in = p.getFileSystem(conf).open(p)
     try {

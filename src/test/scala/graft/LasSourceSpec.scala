@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
@@ -11,7 +13,8 @@ import graft.pc.PcSchema
 import graft.sources.las.{LasConvert, LasFormat}
 
 /** DSv2 LAS source: read-back fidelity, projection + filter pushdown,
-  * file-level header pruning (I1), statistics (I5), convert (D8). */
+  * file-level header pruning (I1), statistics (I5), header-answered
+  * aggregates, convert (D8). */
 class LasSourceSpec extends SparkSpec {
 
   private val conf = new Configuration()
@@ -435,6 +438,13 @@ class LasSourceSpec extends SparkSpec {
     java.nio.file.Files.write(f, bytes)
     java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(d, ".f.laz.crc"))
     assert(spark.read.format("las").load(s"$d/f.laz").count() == 1000L)
+    // a filter stops the headers from answering the count; the scan it
+    // needs projects no column, so it still reads no point bytes (a
+    // filter on rand() against a constant would be folded away)
+    val kept = spark.read.format("las").load(s"$d/f.laz")
+      .filter(monotonically_increasing_id() >= 0L)
+    assert(kept.count() == 1000L)
+    assert(batchScans(kept.groupBy().count()).nonEmpty)
   }
 
   test("point formats 2/3: RGB round-trips; gps offset shifts with format") {
@@ -489,6 +499,96 @@ class LasSourceSpec extends SparkSpec {
       assert(spark.sql("SELECT count(*) AS n FROM las_sql WHERE x >= 1000").head().getLong(0)
         == las.filter(col("x") >= 1000).count())
     } finally spark.sql("DROP TABLE IF EXISTS las_sql")
+  }
+
+  /** Batch scans in `df`'s executed plan, AQE stages included. */
+  private def batchScans(df: DataFrame): Seq[SparkPlan] = {
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case b: BatchScanExec => Seq(b)
+      case o => o.children.flatMap(walk)
+    }
+    df.collect()
+    walk(df.queryExecution.executedPlan)
+  }
+
+  private def headerAggs(df: DataFrame): DataFrame = df.agg(
+    min("x"), max("x"), min("y"), max("y"), min("z"), max("z"),
+    count(lit(1)), count("classification"))
+
+  test("count and min/max of x/y/z come from the headers: equal a decoded copy, no scan") {
+    val d = tempDir("las_agg")
+    def pts(n: Int, x0: Double) = (0 until n).map { k =>
+      LasFormat.LasPoint(x0 + k * 0.731, -50.0 + (k % 37) * 1.3, (k % 11) * -0.7,
+        classification = k % 7, gpsTime = k)
+    }
+    val laz = graft.sources.las.laz.LazFormat
+    val formats = for (fmt <- Seq(0, 1, 2, 3, 6, 7, 8); ext <- Seq("las", "laz")) yield {
+      val f = s"$d/f$fmt.$ext"
+      if (ext == "las") LasFormat.write(conf, f, pts(700, 10.0), pointFormat = fmt)
+      else laz.write(conf, f, pts(700, 10.0), pointFormat = fmt, chunkSize = 300)
+      s"format $fmt $ext" -> f
+    }
+    // two files on a negative offset and a 0.01 grid: bounds that are not
+    // on the default 0.001 grid, combined across files
+    val scaled = s"$d/scaled"
+    LasFormat.write(conf, s"$scaled/a.las", pts(500, -900.0),
+      scale = (0.01, 0.01, 0.01), offset = (-1000.0, -2000.0, -10.0))
+    laz.write(conf, s"$scaled/b.laz", pts(300, -700.0),
+      scale = (0.01, 0.01, 0.01), offset = (-1000.0, -2000.0, -10.0))
+    // an empty file alone, and beside a file whose bounds exclude its zero
+    // header bounds
+    LasFormat.write(conf, s"$d/empty/e.las", Seq.empty)
+    LasFormat.write(conf, s"$d/mixed/e.las", Seq.empty)
+    LasFormat.write(conf, s"$d/mixed/p.las", pts(200, 5000.0))
+    val cases = formats ++ Seq("two files, offset -1000, scale 0.01" -> scaled,
+      "zero points" -> s"$d/empty", "zero-point file beside a tile" -> s"$d/mixed")
+    for ((tag, path) <- cases) {
+      val df = spark.read.format("las").load(path)
+      val copy = df.localCheckpoint()
+      assert(df.count() == copy.count(), tag)
+      assert(headerAggs(df).collect().toSeq == headerAggs(copy).collect().toSeq, tag)
+      assert(batchScans(headerAggs(df)).isEmpty, tag)
+      assert(batchScans(df.groupBy().count()).isEmpty, tag)
+    }
+    // the layout writers' bounds pass: the unused importance column is
+    // pruned before the pushdown, and an empty cloud still fails loudly
+    val withI = graft.pc.Points.withImportance(spark.read.format("las").load(scaled))
+    assert(batchScans(withI.agg(min("x"), max("y"), count(lit(1)))).isEmpty)
+    assert(graft.pc.Layout.boundsAndCount(withI)._2 == 800L)
+    val empty = intercept[IllegalArgumentException](graft.pc.Layout.boundsAndCount(
+      graft.pc.Points.withImportance(spark.read.format("las").load(s"$d/empty"))))
+    assert(empty.getMessage.contains("empty point cloud"))
+  }
+
+  test("aggregates the headers cannot answer decode, and stay correct") {
+    paths
+    val df = las
+    val copy = df.localCheckpoint()
+    val queries: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "filter" -> (_.filter(col("x") >= 1000.0).agg(count(lit(1)), min("x"))),
+      "non-prunable filter" -> (_.filter(col("intensity") > 10).agg(count(lit(1)), max("z"))),
+      "group by" -> (_.groupBy("classification").agg(count(lit(1)), min("x")).orderBy("classification")),
+      "min(intensity)" -> (_.agg(min("intensity"), count(lit(1)))),
+      "count(distinct x)" -> (_.agg(countDistinct("x"))),
+      "sum(x)" -> (_.agg(sum("x"), max("x"))))
+    for ((tag, q) <- queries) {
+      assert(q(df).collect().toSeq == q(copy).collect().toSeq, tag)
+      assert(batchScans(q(df)).nonEmpty, tag)
+    }
+  }
+
+  test("a load reads each file's header once") {
+    val d = tempDir("las_headers")
+    (0 until 3).foreach(t => LasFormat.write(conf, s"$d/t$t.las",
+      Seq(LasFormat.LasPoint(t, t, t), LasFormat.LasPoint(t + 1, t, t))))
+    val before = LasFormat.headerReads.get
+    val df = spark.read.format("las").load(d)
+    assert(LasFormat.headerReads.get - before == 3L, "schema inference and table share one read")
+    assert(df.count() == 6L)
+    assert(df.filter(col("x") > 1.5).collect().length == 3)
+    assert(LasFormat.headerReads.get - before == 3L, "headers re-read by a query")
   }
 
   test("convert (D8): LAS → importance-augmented clustered parquet") {

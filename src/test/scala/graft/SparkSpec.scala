@@ -10,16 +10,13 @@ object SparkSpec {
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+    // the mains' settings (timezone, UI, nanos flag, local FileSystem), so
+    // no query builder has to mutate shared-session conf at call time
+    .config(LocalSession.Settings)
     // plan-string assertions need untruncated output; set ONCE for every
     // suite so no test mutates shared-session state
     .config("spark.sql.debug.maxToStringFields", "200")
     .config("spark.sql.maxMetadataStringLength", "2000")
-    // events.parquet carries TIMESTAMP(NANOS); read as int64 nanoseconds.
-    // Set here (like LocalSession does for the mains) so no query builder
-    // has to mutate shared-session conf at call time.
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     // full library SQL surface, incl. the DML resolution rewrites
     // (which install() cannot retrofit — resolution rules have no
     // post-construction injection path). withExtensions, NOT the
