@@ -7,15 +7,20 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.ScanBuilder
+import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
+import org.apache.spark.sql.connector.expressions.filter.Predicate
+import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownRequiredColumns, SupportsPushDownVariantExtractions, VariantExtraction}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.execution.datasources.{InMemoryFileIndex, PartitionDirectory, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.FileTable
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
+import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{DataType, FloatType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
+import graft.sources.MetadataAggregate
 
 /** The ACID lake as a first-class Spark DSv2 table:
   * `spark.read.format("lake").load(tableDir)`, with time travel via
@@ -24,7 +29,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * pc-cli/src/benchmark.rs:73-80) rather than a library-only API.
   *
   * Architecture: the table extends Spark's own `FileTable` and delegates
-  * scan building to `ParquetScanBuilder`, so column pruning, parquet
+  * scan building to `ParquetScanBuilder` (wrapped by
+  * [[LakeScanBuilder]]), so column pruning, parquet
   * filter pushdown (row-group skipping), and the vectorized reader all
   * come from the engine. The lake-specific part is [[LakeFileIndex]]: a
   * file index seeded from the TRANSACTION LOG's snapshot (not a
@@ -34,7 +40,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * scan's `planInputPartitions` consults with the pushed data filters.
   * A plain `WHERE price BETWEEN ...` therefore skips every file whose
   * log min/max excludes the range — no footer reads, no file opens —
-  * the data-skipping read path a Delta reader gets from its log. */
+  * the data-skipping read path a Delta reader gets from its log.
+  *
+  *  - `SupportsPushDownAggregates` ([[LakeScanBuilder]]): with no filter
+  *    and no GROUP BY, `COUNT(*)` and `MIN`/`MAX` of an integral column
+  *    are answered from the pinned snapshot's log stats as one local row,
+  *    no file opened — in every session, with or without
+  *    [[graft.plans.GraftExtensions]]. Any other aggregate scans; a
+  *    deletion-vector snapshot refuses before any answer. */
 class LakeDataSource extends org.apache.spark.sql.connector.catalog.TableProvider
     with DataSourceRegister
     with org.apache.spark.sql.sources.StreamSourceProvider
@@ -205,46 +218,39 @@ class LakeV2Table(spark: SparkSession, options: CaseInsensitiveStringMap,
         "LakeTable.snapshot(...) or compact with LakeTable.optimize(...)")
 
   /** EXACT snapshot row count from LOG STATS alone — None when any
-    * entry predates recorded counts or carries a deletion vector (the
-    * masked-row count is not in the log). Feeds the metadata-only
-    * `count(*)` rewrite ([[graft.plans.LakeCountStarRule]]). */
-  def logRowCount: Option[Long] = {
-    val counts = entries.map { case (rel, stats) =>
-      if (LakeTable.parseEntry(rel).dv.nonEmpty) None
-      else LakeTable.rowCountFromStats(stats)
-    }
+    * entry predates recorded counts. Read only by [[LakeScanBuilder]],
+    * which exists only for a snapshot without deletion vectors
+    * ([[requireNoDvEntries]]): a masked-row count is not in the log. */
+  private[lake] def logRowCount: Option[Long] = {
+    val counts = entries.map(e => LakeTable.rowCountFromStats(e._2))
     if (counts.forall(_.isDefined)) Some(counts.flatMap(x => x).sum) else None
   }
 
   /** EXACT snapshot (min, max) of an INTEGRAL column from log stats
-    * alone — the `min(x)`/`max(x)` twin of [[logRowCount]]. None unless
-    * every live entry is DV-free (a deletion vector could mask exactly
-    * the extreme row) and carries a stats range for the column
-    * (all-null files and pre-upgrade files have none; parquet stats
-    * cover non-null values only, which matches SQL min/max's
-    * null-ignoring semantics). Restricted to integral column types on
-    * purpose: parquet float/double footer stats silently EXCLUDE NaN,
-    * but Spark's max() orders NaN above +Infinity — a folded float max
-    * could differ from the scan's. */
-  def logColumnRange(column: String): Option[(Long, Long)] = {
+    * alone, typed as the column (Byte/Short/Int/Long) — the
+    * `min(x)`/`max(x)` twin of [[logRowCount]], under the same
+    * no-deletion-vector precondition (a deletion vector could mask
+    * exactly the extreme row). None unless every entry carries a stats
+    * range for the column (all-null files and pre-upgrade files have
+    * none; parquet stats cover non-null values only, which matches SQL
+    * min/max's null-ignoring semantics). Restricted to integral column
+    * types on purpose: parquet float/double footer stats silently
+    * EXCLUDE NaN, but Spark's max() orders NaN above +Infinity — a logged
+    * float max could differ from the scan's. */
+  private[lake] def logColumnRange(column: String): Option[(Any, Any)] = {
     import org.apache.spark.sql.types._
-    val integral = tableSchema.fields.find(_.name == column)
-      .exists(_.dataType match {
-        case ByteType | ShortType | IntegerType | LongType => true
-        case _ => false
-      })
-    if (!integral || entries.isEmpty) None
-    else {
-      val rs = entries.map { case (rel, stats) =>
-        if (LakeTable.parseEntry(rel).dv.nonEmpty) None
-        else LakeTable.statsRange(stats, column)
+    val exact: Option[BigDecimal => Any] =
+      tableSchema.fields.find(_.name == column).map(_.dataType).collect {
+        case ByteType => _.toByteExact
+        case ShortType => _.toShortExact
+        case IntegerType => _.toIntExact
+        case LongType => _.toLongExact
       }
-      if (!rs.forall(_.isDefined)) None
-      else {
-        val v = rs.flatMap(x => x)
-        try Some((v.map(_._1).min.toLongExact, v.map(_._2).max.toLongExact))
-        catch { case _: ArithmeticException => None } // non-integral stats
-      }
+    val rs = entries.map(e => LakeTable.statsRange(e._2, column))
+    exact.filter(_ => rs.nonEmpty && rs.forall(_.isDefined)).flatMap { f =>
+      val v = rs.flatMap(x => x)
+      try Some((f(v.map(_._1).min), f(v.map(_._2).max)))
+      catch { case _: ArithmeticException => None } // non-integral stats
     }
   }
 
@@ -265,7 +271,8 @@ class LakeV2Table(spark: SparkSession, options: CaseInsensitiveStringMap,
     if (!exists)
       throw new IllegalArgumentException(s"no such lake table: $root")
     requireNoDvEntries()
-    ParquetScanBuilder(spark, fileIndex, schema, dataSchema, mergedOptions(o))
+    new LakeScanBuilder(this,
+      ParquetScanBuilder(spark, fileIndex, schema, dataSchema, mergedOptions(o)))
   }
 
   /** Writes go through the transactional API ([[LakeTable.append]] /
@@ -324,6 +331,46 @@ class LakeV2Table(spark: SparkSession, options: CaseInsensitiveStringMap,
     LakeTable.truncate(root)
     true
   }
+}
+
+/** Spark's `ParquetScanBuilder`, plus bare `COUNT`/`MIN`/`MAX` answered
+  * from the pinned snapshot's log ([[graft.sources.MetadataAggregate]]).
+  * A wrapper, not a subclass: the parquet builder's `build()` is typed
+  * `ParquetScan`. Spark's pushdown matches the interfaces forwarded here,
+  * not `FileScanBuilder`. */
+class LakeScanBuilder(table: LakeV2Table, inner: ParquetScanBuilder)
+    extends SupportsPushDownRequiredColumns with SupportsPushDownCatalystFilters
+    with SupportsPushDownVariantExtractions with SupportsPushDownAggregates {
+
+  private var filtered = false
+  private var answered: Option[LocalScan] = None
+
+  override def pruneColumns(requiredSchema: StructType): Unit =
+    inner.pruneColumns(requiredSchema)
+
+  override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
+    filtered = filters.nonEmpty
+    inner.pushFilters(filters)
+  }
+
+  override def pushedFilters: Array[Predicate] = inner.pushedFilters
+
+  override def pushVariantExtractions(e: Array[VariantExtraction]): Array[Boolean] =
+    inner.pushVariantExtractions(e)
+
+  override def supportCompletePushDown(agg: Aggregation): Boolean =
+    logAnswer(agg).isDefined || inner.supportCompletePushDown(agg)
+
+  override def pushAggregation(agg: Aggregation): Boolean = {
+    answered = logAnswer(agg)
+    answered.isDefined || inner.pushAggregation(agg)
+  }
+
+  override def build(): Scan = answered.getOrElse(inner.build())
+
+  private def logAnswer(agg: Aggregation): Option[LocalScan] =
+    MetadataAggregate.answer(agg, filtered, table.schema, table.logRowCount,
+      table.logColumnRange)
 }
 
 /** Translation of SQL DELETE predicates into the lake's transactional

@@ -693,7 +693,7 @@ object LakeTable {
     * row groups by [[graft.pc.Layout.fileBounds]]; this is only the log
     * encoding, in `schema` order:
     *  - `#rows=n`, the file's exact row count, first — it serves
-    *    metadata-only `count(*)` ([[LakeV2Table.logRowCount]]); left out
+    *    metadata-only `count(*)` ([[LakeScanBuilder]]); left out
     *    when a real column's range takes the reserved key;
     *  - `name=min:max` for numbers (timestamps as micros, dates as days);
     *  - `str$name=min:max` for strings, percent-escaped

@@ -116,12 +116,14 @@ object CirclePrefilterRule extends Rule[LogicalPlan] {
 /** `SparkSessionExtensions` entry point — the whole library surface a
   * SQL-only user needs, wired through the public extension API:
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions` gives every
-  * session the circle-prefilter optimizer rule AND the `fvec_dot`
-  * codegen'd vector primitive as a SQL function, with no library calls. */
+  * session the circle-prefilter optimizer rule, the lake's SQL
+  * INSERT/UPDATE/MERGE rewrites and the `fvec_dot`, `hll_sketch` and
+  * `mg_sketch` SQL functions, with no library calls. Bare lake
+  * `COUNT`/`MIN`/`MAX` need no extension: the lake source answers them
+  * from its log ([[graft.lake.LakeScanBuilder]]). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => CirclePrefilterRule)
-    e.injectOptimizerRule(_ => LakeCountStarRule)
     // UPDATE must rewrite during RESOLUTION: Spark eagerly plans Command
     // nodes straight from the analyzed plan, so an optimizer-batch rule
     // never sees UpdateTable
@@ -162,14 +164,12 @@ object GraftExtensions {
     new ExpressionInfo(classOf[graft.functions.MgSketchAgg].getName, "mg_sketch"),
     (exprs: Seq[Expression]) => graft.functions.MgSketchAgg.build(exprs))
 
-  /** Attach the rule + functions to an already-built session
+  /** Attach the optimizer rule + functions to an already-built session
     * (tests / notebooks without the conf). */
   def install(spark: SparkSession): Unit = {
-    Seq(CirclePrefilterRule, LakeCountStarRule).foreach { r =>
-      if (!spark.experimental.extraOptimizations.contains(r))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ r
-    }
+    if (!spark.experimental.extraOptimizations.contains(CirclePrefilterRule))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ CirclePrefilterRule
     graft.sim.FloatVecDot.register(spark)
     graft.functions.HllSketchAgg.register(spark)
   }

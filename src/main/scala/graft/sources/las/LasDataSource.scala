@@ -9,15 +9,16 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{Expression => V2Expression, NamedReference, Transform}
-import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min}
+import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.pc.Layout
+import graft.sources.MetadataAggregate
 import graft.sources.las.laz.LazFormat
 
 /** Hadoop-conf plumbing: the source must honor `spark.hadoop.*` settings
@@ -81,7 +82,15 @@ final class SerializableHadoopConf(@transient var value: Configuration)
   *    records' resolved coordinates (file pruning above relies on them
   *    too). [[LasFormat.header]] writes them with the `raw * scale +
   *    offset` arithmetic [[LasFormat.project]] decodes with, so the
-  *    answers equal a decoding scan's. Any other aggregate decodes.
+  *    answers equal a decoding scan's. Any other aggregate decodes. The
+  *    matcher is the lake's too ([[graft.sources.MetadataAggregate]]).
+  *
+  * Header counts and bounds are trusted as they are: a file whose header
+  * disagrees with its records answers and prunes from the header. The one
+  * check is the length of an uncompressed file: shorter than its header's
+  * records, it fails at load with "truncated LAS file" (the listing's
+  * length, no extra filesystem call). A truncated LAZ file is not
+  * detected until a decode reaches the missing chunk.
   *
   * Usage: `spark.read.format("las").load(path)` (a file, or a directory
   * of .las/.laz files).
@@ -98,13 +107,29 @@ class LasDataSource extends TableProvider with DataSourceRegister {
     val key = Seq(options.get("path"), options.get("paths"))
     loaded.collect { case (k, hs) if k == key => hs }.getOrElse {
       val conf = LasHadoopConf.sessionConf()
-      val hs = filesFor(conf, options).map(f => f -> LasFormat.readHeader(conf, f))
+      val hs = filesFor(conf, options).map { case (f, length) =>
+        f -> requireComplete(f, length, LasFormat.readHeader(conf, f))
+      }
       loaded = Some(key -> hs)
       hs
     }
   }
 
-  private def filesFor(conf: Configuration, options: CaseInsensitiveStringMap): Seq[String] = {
+  /** An uncompressed file shorter than the records its header declares
+    * was cut: fail by name at load, before the header answers a count or
+    * a bound that the records no longer hold. */
+  private def requireComplete(f: String, length: Long,
+      h: LasFormat.LasHeader): LasFormat.LasHeader = {
+    val need = BigInt(h.pointOffset) + BigInt(h.pointCount) * h.recordLength
+    if (h.laz.isEmpty && need > length)
+      throw new IllegalArgumentException(s"truncated LAS file $f: its header declares " +
+        s"${h.pointCount} records of ${h.recordLength} bytes from offset " +
+        s"${h.pointOffset} ($need bytes), but the file has $length bytes")
+    h
+  }
+
+  /** The input files with their lengths, from the one listing. */
+  private def filesFor(conf: Configuration, options: CaseInsensitiveStringMap): Seq[(String, Long)] = {
     // Spark DSv2 passes multiple load() paths as a JSON array string
     // (DataSourceV2Utils.getOptionsWithPaths), NOT comma-separated
     def parsePaths(v: String): Seq[String] =
@@ -120,10 +145,10 @@ class LasDataSource extends TableProvider with DataSourceRegister {
       val st = fs.getFileStatus(p)
       if (st.isDirectory)
         fs.listStatus(p).toSeq.filter(_.isFile)
-          .map(_.getPath.toString)
-          .filter(f => f.toLowerCase.endsWith(".las") || f.toLowerCase.endsWith(".laz"))
-      else Seq(s)
-    }.sorted
+          .map(f => f.getPath.toString -> f.getLen)
+          .filter(f => f._1.toLowerCase.endsWith(".las") || f._1.toLowerCase.endsWith(".laz"))
+      else Seq(s -> st.getLen)
+    }.sortBy(_._1)
   }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
@@ -159,7 +184,7 @@ class LasScanBuilder(fullSchema: StructType,
   private var required: StructType = fullSchema
   private var pushed: Array[Filter] = Array.empty
   private var filtered = false
-  private var answered: Option[LasHeaderAggregate] = None
+  private var answered: Option[LocalScan] = None
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     // preserve our field order/metadata; keep only requested names
@@ -187,47 +212,17 @@ class LasScanBuilder(fullSchema: StructType,
   override def build(): Scan =
     answered.getOrElse(new LasScan(fullSchema, required, headers, pushed))
 
-  /** `agg` answered from the headers alone: with no filter and no
-    * grouping, `COUNT(*)` and non-distinct `COUNT` of a non-nullable
-    * column are the summed point counts, `MIN`/`MAX` of x, y or z the
+  /** `agg` answered from the headers alone ([[graft.sources.MetadataAggregate]]):
+    * the count is the summed point counts, `MIN`/`MAX` of x, y or z the
     * extremes of the non-empty files' header bounds (null when there is
-    * no point). None when any function needs the points. */
-  private def headerAnswer(agg: Aggregation): Option[LasHeaderAggregate] =
-    if (filtered || agg.groupByExpressions.nonEmpty) None
-    else {
-      val count = headers.map(_._2.pointCount).sum
-      val bounds = headers.collect { case (_, h) if h.pointCount > 0 => h.bounds }
-      def field(e: V2Expression): Option[StructField] = e match {
-        case r: NamedReference if r.fieldNames.length == 1 =>
-          fullSchema.find(_.name == r.fieldNames.head)
-        case _ => None
-      }
-      def bound(e: V2Expression, pick: Seq[(Double, Double)] => Double) =
-        field(e).map(_.name).filter(LasPruning.dims).map(d =>
-          DoubleType -> (if (bounds.isEmpty) null else pick(bounds.map(_(d)))))
-      val values: Seq[Option[(DataType, Any)]] = agg.aggregateExpressions.toSeq.map {
-        case _: CountStar => Some(LongType -> count)
-        case c: Count if !c.isDistinct && field(c.column).exists(!_.nullable) =>
-          Some(LongType -> count)
-        case m: Min => bound(m.column, _.map(_._1).min)
-        case m: Max => bound(m.column, _.map(_._2).max)
-        case _ => None
-      }
-      if (values.contains(None)) None
-      else {
-        val (types, row) = values.flatten.unzip
-        Some(new LasHeaderAggregate(
-          StructType(types.zipWithIndex.map { case (t, i) => StructField(s"agg$i", t) }),
-          new GenericInternalRow(row.toArray)))
-      }
-    }
-}
-
-/** An aggregate answered from the headers: one row, which Spark plans as
-  * a `LocalTableScanExec` (no read task, no decode). */
-final class LasHeaderAggregate(schema: StructType, row: InternalRow) extends LocalScan {
-  override def readSchema(): StructType = schema
-  override def rows(): Array[InternalRow] = Array(row)
+    * no point). */
+  private def headerAnswer(agg: Aggregation): Option[LocalScan] = {
+    val bounds = headers.collect { case (_, h) if h.pointCount > 0 => h.bounds }
+    MetadataAggregate.answer(agg, filtered, fullSchema, Some(headers.map(_._2.pointCount).sum),
+      d => if (!LasPruning.dims(d)) None
+        else if (bounds.isEmpty) Some((null, null))
+        else Some((bounds.map(_(d)._1).min, bounds.map(_(d)._2).max)))
+  }
 }
 
 /** Filter-vs-header-bounds interval logic (I1). */

@@ -1623,6 +1623,11 @@ object TextOps {
       // not NPE (the pre-r13 write path handled empty fine)
       val statsRow = spark.read.parquet(s"$path/stats").head
       val totTokens = if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1)
+      // totTokens is a loose upper bound on the posting rows (one row per
+      // distinct (term, doc), fewer than the tokens whenever a term
+      // repeats in a doc). Accepted: it moves only the file count and
+      // size, never an answer, and an exact row count would cost one
+      // more pass over the aggregated postings.
       graft.sim.Ivf2.layoutWrite(post, "tb", totTokens,
         s"$path/postings", subCols = Seq("term"))
     }

@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType}
 
 import graft.lake.LakeTable
 
@@ -223,88 +228,103 @@ class LakeCatalogSpec extends SparkSpec {
       .head().getLong(0) == 7)
   }
 
+  /** The executed plan's leaves, AQE wrappers and stages unwrapped. */
+  private def leaves(df: DataFrame): Seq[SparkPlan] = {
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case l if l.children.isEmpty => Seq(l)
+      case o => o.children.flatMap(walk)
+    }
+    df.collect()
+    walk(df.queryExecution.executedPlan)
+  }
+
+  /** Answered from the log: a local row, and no file scan. */
+  private def fromLog(df: DataFrame): Boolean = {
+    val ls = leaves(df)
+    ls.exists(_.isInstanceOf[LocalTableScanExec]) && !ls.exists(_.isInstanceOf[BatchScanExec])
+  }
+
+  private def scans(df: DataFrame): Boolean = leaves(df).exists(_.isInstanceOf[BatchScanExec])
+
   test("count(*) folds to log metadata: no scan, exact under time travel and DML") {
     val t = dmlTable("countstar")
-    graft.plans.GraftExtensions.install(spark)
     def planOf(sql: String) = {
       val df = spark.sql(sql)
-      (df.head().getLong(0), df.queryExecution.optimizedPlan.toString)
+      (df.head().getLong(0), df)
     }
-    val (n, plan) = planOf("SELECT count(*) AS n FROM graftlake.dml.countstar")
+    val (n, df) = planOf("SELECT count(*) AS n FROM graftlake.dml.countstar")
     assert(n == 250)
-    assert(plan.contains("LocalRelation") && !plan.contains("RelationV2"),
-      s"count(*) must fold to metadata, got:\n$plan")
+    assert(fromLog(df), s"count(*) must fold to metadata, got:\n${df.queryExecution.executedPlan}")
     // time travel folds against the pinned snapshot
-    val (n1, plan1) = planOf(
+    val (n1, df1) = planOf(
       "SELECT count(*) AS n FROM graftlake.dml.countstar VERSION AS OF 1")
-    assert(n1 == 100 && plan1.contains("LocalRelation"))
+    assert(n1 == 100 && fromLog(df1))
     // a copy-on-write DELETE updates the folded count (new files, new stats)
     spark.sql("DELETE FROM graftlake.dml.countstar WHERE id < 30")
-    val (n2, plan2) = planOf("SELECT count(*) AS n FROM graftlake.dml.countstar")
-    assert(n2 == 220 && plan2.contains("LocalRelation"))
+    val (n2, df2) = planOf("SELECT count(*) AS n FROM graftlake.dml.countstar")
+    assert(n2 == 220 && fromLog(df2))
     // grouped/filtered counts must NOT fold — they need the scan
     val grouped = spark.sql(
       "SELECT count(*) AS n FROM graftlake.dml.countstar WHERE id >= 100")
     assert(grouped.head().getLong(0) == 150)
-    assert(grouped.queryExecution.optimizedPlan.toString.contains("RelationV2"),
-      "a filtered count must keep the scan")
+    assert(scans(grouped), "a filtered count must keep the scan")
   }
 
   test("min/max fold to log metadata for integral columns only") {
     val t = dmlTable("minmax")
-    graft.plans.GraftExtensions.install(spark)
     // add a double column table-mate via schema evolution-free route:
     // the base table has (id: long, v: long); query both aggregates
     def run(sql: String) = {
       val df = spark.sql(sql)
-      (df.head(), df.queryExecution.optimizedPlan.toString)
+      (df.head(), df)
     }
-    val (r, plan) = run(
+    val (r, df) = run(
       "SELECT count(*) AS n, min(id) AS mn, max(v) AS mx FROM graftlake.dml.minmax")
     assert(r.getLong(0) == 250 && r.getLong(1) == 0 && r.getLong(2) == 498)
-    assert(plan.contains("LocalRelation") && !plan.contains("RelationV2"),
-      s"count/min/max must fold to metadata, got:\n$plan")
+    assert(fromLog(df),
+      s"count/min/max must fold to metadata, got:\n${df.queryExecution.executedPlan}")
     // time travel folds against the pinned snapshot (version 1 = 0..99)
-    val (r1, plan1) = run(
+    val (r1, df1) = run(
       "SELECT min(id) AS mn, max(id) AS mx FROM graftlake.dml.minmax VERSION AS OF 1")
-    assert(r1.getLong(0) == 0 && r1.getLong(1) == 99 && plan1.contains("LocalRelation"))
+    assert(r1.getLong(0) == 0 && r1.getLong(1) == 99 && fromLog(df1))
     // a copy-on-write DELETE narrows the folded range (new files, new stats)
     spark.sql("DELETE FROM graftlake.dml.minmax WHERE id < 30")
-    val (r2, plan2) = run(
+    val (r2, df2) = run(
       "SELECT min(id) AS mn FROM graftlake.dml.minmax")
-    assert(r2.getLong(0) == 30 && plan2.contains("LocalRelation"))
+    assert(r2.getLong(0) == 30 && fromLog(df2))
     // filtered / grouped / expression aggregates must keep the scan
     val filtered = spark.sql(
       "SELECT min(id) AS mn FROM graftlake.dml.minmax WHERE id >= 100")
     assert(filtered.head().getLong(0) == 100)
-    assert(filtered.queryExecution.optimizedPlan.toString.contains("RelationV2"),
-      "a filtered min must keep the scan")
+    assert(scans(filtered), "a filtered min must keep the scan")
     val computed = spark.sql(
       "SELECT min(id + 1) AS mn FROM graftlake.dml.minmax")
     assert(computed.head().getLong(0) == 31)
-    assert(computed.queryExecution.optimizedPlan.toString.contains("RelationV2"),
-      "min over an expression must keep the scan")
+    assert(scans(computed), "min over an expression must keep the scan")
+    val grouped = spark.sql(
+      "SELECT v % 2 AS k, min(id) AS mn FROM graftlake.dml.minmax GROUP BY v % 2")
+    assert(grouped.collect().map(_.getLong(1)).toSeq == Seq(30L))
+    assert(scans(grouped), "a grouped min must keep the scan")
   }
 
   test("min/max fold refuses double columns and deletion-vector snapshots") {
     val t = s"$root/dml/minmaxguards"
     LakeTable.append(spark, t, spark.range(0, 100)
       .select(col("id"), (col("id").cast("double") / 4.0).as("score")))
-    graft.plans.GraftExtensions.install(spark)
     // double column: stats exist for pruning, but the fold must refuse
     // (parquet stats exclude NaN; Spark's max orders NaN above +Inf)
     val d = spark.sql("SELECT max(score) AS mx FROM graftlake.dml.minmaxguards")
     assert(math.abs(d.head().getDouble(0) - 24.75) < 1e-9)
-    assert(d.queryExecution.optimizedPlan.toString.contains("RelationV2"),
-      "float max must keep the scan")
+    assert(scans(d), "float max must keep the scan")
     // integral column on the same table folds
     val i = spark.sql("SELECT max(id) AS mx FROM graftlake.dml.minmaxguards")
     assert(i.head().getLong(0) == 99)
-    assert(i.queryExecution.optimizedPlan.toString.contains("LocalRelation"))
+    assert(fromLog(i))
     // a DV delete poisons the metadata path (the masked row could be the
-    // max, and its count is not in the log): logRowCount/logColumnRange
-    // return None, so the rule leaves the plan alone — and the DSv2
-    // scan-builder then refuses the DV snapshot AT PLAN TIME, loudly,
+    // max, and its count is not in the log): the DSv2 scan builder
+    // refuses the DV snapshot AT PLAN TIME, before any answer, loudly,
     // instead of resurrecting deleted rows. A wrong fold would have
     // returned 100 silently; the throw proves the fold did not happen.
     LakeTable.deleteWhereDV(spark, t, "id", 99.0, 100.0)
@@ -312,6 +332,38 @@ class LakeCatalogSpec extends SparkSpec {
       spark.sql("SELECT count(*) AS n FROM graftlake.dml.minmaxguards").head()
     }
     assert(e.getMessage.contains("deletion vectors"), e.getMessage)
+  }
+
+  test("log answers through the DataFrame reader: versionAsOf, no extensions, column types") {
+    val t = dmlTable("readerfold")
+    LakeTable.append(spark, t, spark.range(250, 260)
+      .select(col("id"), (col("id") * 2).as("v")))
+    def aggs(df: DataFrame) = df.agg(count(lit(1)), min("id"), max("v"))
+    // option("versionAsOf") pins the snapshot the answer comes from
+    val v2 = aggs(spark.read.format("lake").option("versionAsOf", 2L).load(t))
+    assert(v2.head() == Row(250L, 0L, 498L) && fromLog(v2))
+    val latest = aggs(spark.read.format("lake").load(t))
+    assert(latest.head() == Row(260L, 0L, 518L) && fromLog(latest))
+    // the answer is the source's own: a session without the graft
+    // extensions gets it too
+    withPlainSession { plain =>
+      val df = aggs(plain.read.format("lake").option("versionAsOf", 1L).load(t))
+      assert(df.head() == Row(100L, 0L, 198L) && fromLog(df))
+    }
+    // each answer carries its column's type, and a nullable column's
+    // count(col) is left to the scan (the log counts rows, not values)
+    val typed = s"$root/dml/typedfold"
+    LakeTable.append(spark, typed, spark.range(-5, 40).select(
+      col("id").cast("byte").as("b"), (col("id") * 300).cast("short").as("s"),
+      (col("id") * 70000).cast("int").as("i")))
+    val mm = spark.read.format("lake").load(typed)
+      .agg(min("b"), max("b"), min("s"), max("s"), min("i"), max("i"))
+    assert(mm.schema.map(_.dataType) == Seq(ByteType, ByteType, ShortType, ShortType,
+      IntegerType, IntegerType))
+    assert(mm.head() == Row(-5.toByte, 39.toByte, -1500.toShort, 11700.toShort,
+      -350000, 2730000) && fromLog(mm))
+    val counted = spark.read.format("lake").load(typed).agg(count("i"))
+    assert(counted.head().getLong(0) == 45L && scans(counted))
   }
 
   test("SQL UPDATE executes as a lake transaction with lossless guards") {

@@ -591,6 +591,31 @@ class LasSourceSpec extends SparkSpec {
     assert(LasFormat.headerReads.get - before == 3L, "headers re-read by a query")
   }
 
+  test("a truncated LAS file fails by name instead of answering from its header") {
+    val d = tempDir("las_cut")
+    val f = s"$d/f.las"
+    LasFormat.write(conf, f, (0 until 1000).map(k => LasFormat.LasPoint(k, k * 0.5, 1.0)),
+      pointFormat = 0)
+    val h = LasFormat.readHeader(conf, f)
+    // cut after 500 records: the header still declares 1000 points and a
+    // max x of 999, the last record present holds x = 499
+    val file = java.nio.file.Paths.get(f)
+    Files.write(file, java.util.Arrays.copyOf(Files.readAllBytes(file),
+      (h.pointOffset + 500L * h.recordLength).toInt))
+    Files.deleteIfExists(java.nio.file.Paths.get(d, ".f.las.crc"))
+    for (path <- Seq(f, d)) {
+      def cut = spark.read.format("las").load(path)
+      val queries = Seq[(String, () => Any)](
+        "count" -> (() => cut.count()),
+        "max(x)" -> (() => cut.agg(max("x")).collect()),
+        "filtered count" -> (() => cut.filter(monotonically_increasing_id() >= 0L).count()))
+      for ((tag, q) <- queries) {
+        val e = intercept[IllegalArgumentException](q())
+        assert(e.getMessage.contains("truncated LAS file"), s"$path $tag: ${e.getMessage}")
+      }
+    }
+  }
+
   test("convert (D8): LAS → importance-augmented clustered parquet") {
     val out = s"$dir/converted"
     LasConvert.toGridLayout(spark, dir, out, sigma = 4, batchSize = 1024L)
